@@ -317,46 +317,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "180").toDouble
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-node local shuffles: compression costs more than the local
-      // disk I/O it saves. A cluster-profile bench (network-bound shuffles)
-      // should run with SPARK_GRAFT_SHUFFLE_COMPRESS=true rather than
-      // silently inheriting the local-mode posture.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      // Bound the driver-side status stores: a multi-hundred-query
-      // marathon otherwise RETAINS up to 1000 SQL executions (each with
-      // its full SparkPlanGraph/metrics — iterative graph queries here
-      // carry multi-MB plan trees) plus 1000 jobs/stages of task data,
-      // gigabytes of live heap by the late marathon. The growing live set
-      // made every later query's GC pauses longer — measured as a
-      // progressive per-pass slowdown (q_modularity 6.0 s pass-2 →
-      // 9.5 s pass-4 on a 20-query slice; 11.9 → 33.8 s on the full
-      // 218-query run) with flat host calibration. Retention is a
-      // driver-observability knob, not part of any query's work, and the
-      // same bound is what a production long-running driver would set.
-      .config("spark.sql.ui.retainedExecutions",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED", "8"))
-      .config("spark.ui.retainedJobs",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED", "8"))
-      .config("spark.ui.retainedStages",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED", "8"))
-      .config("spark.ui.retainedTasks", 1000)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.muteBoundedWindowWarn() // after setLogLevel (root reset)
-    graft.util.Logs.muteUnpersistCheckpointWarn() // between-query block frees
-    graft.sql.functions.registerAll(spark)
+    val spark = Session.local("graft-bench")
 
     // ------- incremental emission state -------
     val nGates = gateQueries(spark, sfDir).size
@@ -468,9 +429,10 @@ object Bench {
       val r = graft.pipeline.Similarity.ivfDeliveredRecall(embs, centroids, q, 10, nProbe = 6)
       // machine-checked floor for the one no-SQL-oracle gate: on an
       // isotropic corpus the expected recall of probing nProbe of nCells
-      // cells is ~nProbe/nCells (the ProbeIvf sweep's ceiling); a run
-      // below floor − ε means the index, not the data, broke. nProbe=6/8
-      // measured: recall 0.80 at sf0.1, 1.00 at sf0.01 → floor 0.70
+      // cells is ~nProbe/nCells (the measured sweep's ceiling, ROUND_NOTES
+      // round 6, item 2); a run below floor − ε means the index, not the
+      // data, broke. nProbe=6/8 measured: recall 0.80 at sf0.1, 1.00 at
+      // sf0.01 → floor 0.70
       val floor = 6.0 / 8 - 0.05
       require(r >= floor,
         f"ivf delivered recall $r%.3f below machine-checked floor $floor%.3f (nProbe/nCells - 0.05)")

@@ -1351,8 +1351,9 @@ object SparkEntry {
     // measured recall met the machine-checked floor. The oracle pins the
     // constants, so a recall regression turns this CORRECTNESS row red by
     // itself (no side-file needed). nProbe=6/8 is a measured point on the
-    // ProbeIvf curve: recall 1.00 at sf0.01 / 0.80 at sf0.1 (the
-    // isotropic synthetic corpus's ceiling is ~nProbe/nCells) while still
+    // nprobe recall curve (ROUND_NOTES round 6, item 2): recall 1.00 at
+    // sf0.01 / 0.80 at sf0.1 (the isotropic synthetic corpus's ceiling is
+    // ~nProbe/nCells) while still
     // pruning 2 of 8 cells; floor = nProbe/nCells − 0.05 = 0.70. The
     // exactly-SQL-replayed ids twin is q_embed_topk_ivf_det below.
     "q_embed_topk_ivf" -> ((s, d) => {

@@ -1,48 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded status stores: a 218-query dump otherwise retains up to
-      // 1000 SQL executions' plan graphs on the driver heap (the Bench
-      // marathon lesson — GC pauses grow with the live set)
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "8")
-      .config("spark.ui.retainedStages", "8")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.muteBoundedWindowWarn() // after setLogLevel (root reset)
-    graft.util.Logs.muteUnpersistCheckpointWarn() // between-query block frees
+    val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump (and the oracle
     // json) for focused pre-commit iteration on new gates; the driver
     // never sets it, so the contract run always covers everything
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      .flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          // no stale output from an earlier run may stand in for this gate
+          org.apache.commons.io.FileUtils.deleteQuietly(
+            new java.io.File(s"$outDir/$name"))
+          Some(name)
+        }
       // free each query's localCheckpoint/cache blocks immediately: in a
       // 170-query run, waiting for the ContextCleaner's weak-ref GC let
       // block-manager residue accumulate (the Bench marathon lesson)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
+      failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -61,5 +52,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

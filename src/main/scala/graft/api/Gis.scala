@@ -40,8 +40,8 @@ object Gis {
       .csv(path)
     val named = raw.toDF(WifiColumns.take(raw.columns.length): _*)
     val keyed = named
-      .withColumn("lon", col("lon").cast("double"))
-      .withColumn("lat", col("lat").cast("double"))
+      .withColumn("lon", col("lon").try_cast("double"))
+      .withColumn("lat", col("lat").try_cast("double"))
       .withColumn("geohash", geohash_encode(col("lat"), col("lon"), precision))
     if (dedup) keyed.dropDuplicates("geohash") else keyed
   }
@@ -257,9 +257,12 @@ object Gis {
           strict: Boolean = false, precision: Int = 7,
           lonCol: String = "lon", latCol: String = "lat",
           geohashCol: String = "geohash"): DataFrame = {
+    // a null coordinate has no distance and is never a neighbour (an
+    // ascending sort would otherwise put its null distance first)
     def topK(base: DataFrame): DataFrame = base
       .withColumn("distance",
         st_distance_euclidean(col(lonCol), col(latCol), lit(lon), lit(lat)))
+      .filter(col("distance").isNotNull)
       .orderBy(col("distance").asc)
       .limit(k)
     if (points.columns.contains(geohashCol)) {

@@ -16,27 +16,13 @@ import org.apache.spark.sql.SparkSession
  *   runMain graft.cli.Main bulk   <n> <lonMin> <lonMax> <latMin> <latMax> [seed]
  */
 object Main {
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.sql.functions.registerAll(s)
-    s
-  }
-
   private def loadPoints(spark: SparkSession, path: String) =
     if (path.endsWith(".parquet")) spark.read.parquet(path)
     else Gis.ingestTsv(spark, path)
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ingest|within|knn|topx|bulk ...")
-    val spark = session()
+    val spark = graft.Session.local("graft-cli")
     val t0 = System.currentTimeMillis()
     args(0) match {
       case "ingest" =>

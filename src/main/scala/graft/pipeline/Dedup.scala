@@ -734,8 +734,8 @@ object Dedup {
    * because only RARE grams enter prefixes, but the full-side index still
    * needs the cap on degenerate corpora).
    *
-   * Worst-case attribution (ProbeContainment, measured on the sf1 bench
-   * corpus): a VOCABULARY-DEGENERATE corpus defeats prefix filtering —
+   * Worst-case attribution (measured on the sf1 bench corpus; ROUND_NOTES
+   * round 8, item 24): a VOCABULARY-DEGENERATE corpus defeats prefix filtering —
    * 50k docs sharing only 2,936 distinct shingles means "rarest grams"
    * still hit thousand-doc buckets, so candidates approach all-pairs
    * (878M deduped candidates for 252k true pairs; the early-abandon

@@ -120,8 +120,8 @@ object MarketBasket {
    *
    * The pair stream is derived twice (frequent-pair aggregate +
    * candidate generation) from the CHECKPOINTED basket arrays rather
-   * than materialized: measured 1.09× warm at sf0.1
-   * ([[graft.tools.ProbeTriples]]) — inside noise — while materializing
+   * than materialized: measured 1.09× warm at sf0.1 (ROUND_NOTES round 7,
+   * item 18) — inside noise — while materializing
    * Σ size² rows is a real storage cost at 100 TB. Recompute wins.
    */
   def tripleRules(df: DataFrame, basketCol: String, itemCol: String,

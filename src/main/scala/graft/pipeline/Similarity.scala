@@ -118,9 +118,9 @@ object Similarity {
    * codebook to capture. The synthetic gate corpus is isotropic (pairwise
    * cosines are a unimodal bell at 0 — measured), so true neighbors
    * spread uniformly over cells and delivered recall sits at its
-   * information-theoretic ceiling ≈ nProbe/nCells ([[graft.tools.ProbeIvf]]
-   * sweeps the curve at sf0.1: 0.4 at 3/8, 0.8 at 6/8 — the gate config —
-   * 1.0 at 8/8). That is a property of the
+   * information-theoretic ceiling ≈ nProbe/nCells (the curve measured at
+   * sf0.1: 0.4 at 3/8, 0.8 at 6/8 — the gate config — 1.0 at 8/8;
+   * ROUND_NOTES round 6, item 2). That is a property of the
    * data, not the operator — on real embedding corpora (which cluster
    * heavily) IVF recall at small nProbe is the standard workhorse, and on
    * isotropic data NO coarse quantizer can do better. The delivered

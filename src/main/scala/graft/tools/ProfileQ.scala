@@ -1,12 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /**
- * Optimization-round profiler: run named SparkEntry queries with
- * bench-identical session settings, print a per-JOB wall-time breakdown
+ * Optimization-round profiler: run named SparkEntry queries in the
+ * bench's session ([[graft.Session]]), print a per-JOB wall-time breakdown
  * (job description → seconds) for the warm run, and optionally dump
  * `.explain("formatted")` to a file.
  *
@@ -23,24 +22,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQ <sfDir> <query> [query ...]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "8")
-      .config("spark.ui.retainedStages", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.muteBoundedWindowWarn()
-    graft.util.Logs.muteUnpersistCheckpointWarn()
-    graft.sql.functions.registerAll(spark)
+    val spark = graft.Session.local("graft-profile")
 
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")

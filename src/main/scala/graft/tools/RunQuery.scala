@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dev harness: run one or more named SparkEntry queries against an sf dir
- * with bench-identical session settings and print per-query wall time.
+ * in the bench's session ([[graft.Session]]) and print per-query wall time.
  *
  *   sbt "runMain graft.tools.RunQuery <sfDir> <query> [query ...]"
  */
@@ -12,19 +10,7 @@ object RunQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunQuery <sfDir> <query> [query ...]")
     val sfDir = args(0)
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-runquery")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.muteBoundedWindowWarn() // after setLogLevel (root reset)
-    graft.sql.functions.registerAll(spark)
+    val spark = graft.Session.local("graft-runquery")
     // SPARK_GRAFT_DUMP=<dir>: also write each query's result parquet there
     // (the Verify layout), for targeted single-query oracle checks
     val dump = sys.env.get("SPARK_GRAFT_DUMP")

@@ -4,16 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session across all suites (sbt forks a single test JVM). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.sql.functions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = Session.local("graft-tests")
 }

@@ -59,7 +59,7 @@ class LayoutSpec extends AnyFunSuite {
       val q = spark.read.parquet(path)
         .filter(col("x").between(1000, 1063) && col("y").between(2000, 2063))
       // execute THIS QueryExecution (count() builds a fresh one and its
-      // metrics read zero — the ProbeFuzzy lesson)
+      // metrics read zero)
       val n = q.queryExecution.toRdd.count()
       val plan = q.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

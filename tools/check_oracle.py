@@ -7,9 +7,12 @@ Runs graft.Verify (Spark) to dump each SparkEntry query to parquet +
 oracle_sql.json, then replays every oracle SQL in DuckDB over the same
 tables and compares: row count, column names (sorted), and cell values
 (rows sorted). Reports exact float mismatches separately from near-misses.
+A gate that Verify lists as failed counts as a FAIL by name; the gates it
+did write are still compared.
 """
 import json
 import math
+import os
 import subprocess
 import sys
 
@@ -21,16 +24,22 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 
 def run_verify():
+    """Run Verify; return the gates it reports as failed."""
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF_DIR} {OUT_DIR}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
-    if r.returncode != 0:
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=1800)
+    failed = []
+    for line in (r.stdout + r.stderr).splitlines():
+        if "[verify]" in line:
+            print(line)
+        if "[verify] FAILED: " in line:
+            failed = line.split("[verify] FAILED: ", 1)[1].strip().split(",")
+    if r.returncode != 0 and not failed:
         print(r.stdout[-3000:])
         print(r.stderr[-3000:])
         sys.exit("verify run failed")
-    for line in r.stdout.splitlines():
-        if "[verify]" in line:
-            print(line)
+    return failed
 
 
 def canon(rows, cols):
@@ -53,9 +62,8 @@ def cmp_cell(a, b):
 
 
 def main():
-    run_verify()
+    verify_failed = set(run_verify())
     con = duckdb.connect()
-    import os
     for t in TABLES:
         # driver testdata ships single parquet FILES; ScaleUp output
         # (/tmp/graft_sf1 etc.) ships Spark parquet DIRECTORIES — glob those
@@ -66,6 +74,10 @@ def main():
     oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
     failures = []
     for name, sql in sorted(oracle.items()):
+        if name in verify_failed:
+            failures.append(name)
+            print(f"FAIL {name}: Verify failed to run the gate")
+            continue
         try:
             got = con.sql(f"SELECT * FROM '{OUT_DIR}/{name}/*.parquet'")
             got_cols, got_types = list(got.columns), [str(t) for t in got.types]
@@ -107,7 +119,6 @@ def main():
             print(f"FAIL {name}: {bad}/{len(g)} mismatching rows")
         else:
             print(f"OK   {name}: {len(g)} rows")
-    no_oracle = [n for n in json.load(open(f"{OUT_DIR}/oracle_sql.json"))]
     print(f"\n{len(oracle) - len(failures)}/{len(oracle)} oracle queries pass")
     if failures:
         sys.exit(f"FAILURES: {failures}")
