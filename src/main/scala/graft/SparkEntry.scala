@@ -1734,10 +1734,18 @@ object SparkEntry {
       // with the index write + corpus chain on a second driver thread
       // (guide §2.6: actions are only sequential because the driver calls
       // them sequentially); results are unchanged, the two chains just
-      // back-fill each other's idle cores
+      // back-fill each other's idle cores. A pooled thread keeps the Spark
+      // local properties of whichever thread created it, so the caller's
+      // job group, description and interrupt flag are set on it for the
+      // chain (and cleared after) — a cancelJobGroup then reaches its jobs
+      val sc = s.sparkContext
+      val jobProps = Seq("spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel").map(p => p -> sc.getLocalProperty(p))
       val internalF = scala.concurrent.Future {
-        Dedup.minhashLshLabels(batch, "doc_id", "text")
+        jobProps.foreach { case (p, v) => sc.setLocalProperty(p, v) }
+        try Dedup.minhashLshLabels(batch, "doc_id", "text")
           .select(col("id").as("id_a"), col("cluster").as("id_b"))
+        finally jobProps.foreach { case (p, _) => sc.setLocalProperty(p, null) }
       }(scala.concurrent.ExecutionContext.global)
       Dedup.writeMinhashIndex(base, path)
       // labels REGROUP the just-written index (r14) instead of re-running

@@ -1,8 +1,9 @@
 package graft.api
 
-import graft.geo.{Geohash, GeohashPruning}
+import graft.geo.GeohashPruning
 import graft.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -249,14 +250,36 @@ object Gis {
    * client, including the final cross-region merge the reference's
    * KNNClient never performs (KNNClient.java:55-57).
    *
-   * strict=true reproduces the reference's 9-cell candidate bound (may miss
-   * true neighbors past cell edges); default widens to the full table when
-   * the candidate cells hold fewer than k points.
+   * With a geohash column, each candidate scan ("ring") reads the 9-cell
+   * block around the origin at some precision, and on a
+   * [[writePointsPartitioned]] layout also skips every `gh_prefix`
+   * directory the block cannot touch, as [[within]] does.
+   *
+   * strict=true reproduces the reference's 9-cell candidate bound: one ring
+   * at `precision`, which may miss true neighbors past the cell edges.
+   *
+   * The default is exact, by a search over widening rings, each one job:
+   *  - the first ring is at the coarsest precision whose block names the
+   *    same directories as the block at `precision` (read from the
+   *    relation's partition listing; `precision` without directories);
+   *  - a ring's top-k is the answer, returned as a local frame, when it has
+   *    k rows, its k-th distance is at most the distance from the origin to
+   *    the block's nearest edge, and its 9 cells tile a box (a block cut by
+   *    a pole or wrapped across the antimeridian proves nothing) — no point
+   *    outside the block can then be closer;
+   *  - otherwise the next ring is two precisions coarser when the ring held
+   *    fewer than k rows, else the finest precision whose cell side is at
+   *    least the k-th distance (that ring holds every candidate so far and
+   *    always passes the proof);
+   *  - after 3 rings the search falls back to a full-table top-k.
+   *
+   * k = 0 yields an empty frame with the result schema; k < 0 is an error.
    */
   def knn(points: DataFrame, lon: Double, lat: Double, k: Int,
           strict: Boolean = false, precision: Int = 7,
           lonCol: String = "lon", latCol: String = "lat",
           geohashCol: String = "geohash"): DataFrame = {
+    require(k >= 0, s"k must be non-negative, got k = $k")
     // a null coordinate has no distance and is never a neighbour (an
     // ascending sort would otherwise put its null distance first)
     def topK(base: DataFrame): DataFrame = base
@@ -265,32 +288,45 @@ object Gis {
       .filter(col("distance").isNotNull)
       .orderBy(col("distance").asc)
       .limit(k)
-    if (points.columns.contains(geohashCol)) {
-      val prefixes = GeohashPruning.knnPrefixes(lon, lat, precision)
-      val pruned = points.filter(prefixPredicate(col(geohashCol), prefixes))
-      if (strict) topK(pruned)
-      else {
-        // Exact-mode soundness: the pruned result is valid only if the k-th
-        // candidate is no farther than the nearest edge of the 9-cell block
-        // — otherwise a point just outside the block could be closer. The
-        // pruned top-k (≤ k rows, the final-limit materialization every KNN
-        // query pays) doubles as the soundness probe: collect it once,
-        // return it directly when sound, widen to the full table only when
-        // candidates are sparse or the k-th crosses the block edge.
-        val bboxes = prefixes.map(Geohash.decodeBbox)
-        val latMin = bboxes.map(_._1).min; val latMax = bboxes.map(_._2).max
-        val lonMin = bboxes.map(_._3).min; val lonMax = bboxes.map(_._4).max
-        val margin = Seq(lon - lonMin, lonMax - lon, lat - latMin, latMax - lat).min
-        val candidate = topK(pruned)
-        val rows = candidate.collect()
-        val kth = if (rows.length < k) Double.PositiveInfinity
-                  else rows.last.getDouble(rows.last.fieldIndex("distance"))
-        if (rows.length >= k && kth <= margin)
-          candidate.sparkSession.createDataFrame(
-            java.util.Arrays.asList(rows: _*), candidate.schema)
-        else topK(points)
+    val hasDirs = points.columns.contains("gh_prefix")
+    def ring(prefixes: Seq[String]): DataFrame = {
+      val keyed = points.filter(prefixPredicate(col(geohashCol), prefixes))
+      topK(if (hasDirs) keyed.filter(partitionPrefixPredicate(prefixes)) else keyed)
+    }
+    // Each ring's top-k (≤ k rows, the final-limit materialization every
+    // KNN query pays) doubles as its own soundness probe: collect it once
+    // and return it directly when the proof holds.
+    @annotation.tailrec
+    def search(p: Int, ringsLeft: Int): DataFrame = {
+      val prefixes = GeohashPruning.knnPrefixes(lon, lat, p)
+      val candidate = ring(prefixes)
+      val rows = candidate.collect()
+      val kth = if (rows.length < k) Double.PositiveInfinity
+                else rows.last.getDouble(rows.last.fieldIndex("distance"))
+      if (GeohashPruning.knnMargin(lon, lat, prefixes).exists(kth <= _))
+        candidate.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), candidate.schema)
+      else GeohashPruning.nextRingPrecision(p, kth) match {
+        case Some(q) if ringsLeft > 1 => search(q, ringsLeft - 1)
+        case _ => topK(points)
       }
-    } else topK(points)
+    }
+    if (k == 0 || !points.columns.contains(geohashCol)) topK(points)
+    else if (strict) ring(GeohashPruning.knnPrefixes(lon, lat, precision))
+    else search(GeohashPruning.firstRingPrecision(lon, lat, precision,
+      if (hasDirs) directoryPrefixLen(points) else None), ringsLeft = 3)
+  }
+
+  /** Length of the `gh_prefix` directory names in the file listing of
+    * `points` (no job, no data read); None unless exactly one length is
+    * found, e.g. for a frame not read from a partitioned layout. */
+  private def directoryPrefixLen(points: DataFrame): Option[Int] = {
+    val lengths = points.inputFiles
+      .flatMap(_.split('/').find(_.startsWith("gh_prefix=")))
+      .map(_.stripPrefix("gh_prefix="))
+      .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      .map(_.length).distinct
+    if (lengths.length == 1) lengths.headOption else None
   }
 
   /**

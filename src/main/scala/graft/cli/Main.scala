@@ -1,7 +1,8 @@
 package graft.cli
 
 import graft.api.Gis
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * CLI mirroring the reference's entry points
@@ -10,15 +11,24 @@ import org.apache.spark.sql.SparkSession
  * Ingest.java:40; BulkIngest.java:27):
  *
  *   runMain graft.cli.Main ingest <tsvPath> [outParquet]
- *   runMain graft.cli.Main within <pointsPath(tsv|parquet)> <wkt> [--no-prune]
+ *   runMain graft.cli.Main within <pointsPath> <wkt> [--no-prune]
  *   runMain graft.cli.Main knn    <pointsPath> <lon> <lat> <k> [--strict]
  *   runMain graft.cli.Main topx   <csvPath> <groupCol> <tsCol> <n>
  *   runMain graft.cli.Main bulk   <n> <lonMin> <lonMax> <latMin> <latMax> [seed]
+ *
+ * A points path is a TSV file, a `.parquet` file, or a parquet directory
+ * (e.g. a `Gis.writePointsPartitioned` layout).
  */
 object Main {
-  private def loadPoints(spark: SparkSession, path: String) =
-    if (path.endsWith(".parquet")) spark.read.parquet(path)
+  /** A directory (such as a [[Gis.writePointsPartitioned]] layout) or a
+    * `.parquet` path reads as parquet; any other file as a points TSV. */
+  private[graft] def loadPoints(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
+    if (isDir || path.endsWith(".parquet")) spark.read.parquet(path)
     else Gis.ingestTsv(spark, path)
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ingest|within|knn|topx|bulk ...")

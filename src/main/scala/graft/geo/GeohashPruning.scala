@@ -81,17 +81,24 @@ object GeohashPruning {
    * antimeridian-wrapped neighbor set is not a contiguous block and must
    * coarsen instead.
    */
-  private def cellsEncodeCover(cells: Seq[String], query: Geometry): Boolean = {
+  private def cellsEncodeCover(cells: Seq[String], query: Geometry): Boolean =
+    tiledBox(cells).exists { case (y0, y1, x0, x1) =>
+      val (qx0, qx1, qy0, qy1) = query.bbox
+      val eastOk = if (x1 >= 180.0) qx1 <= x1 else qx1 < x1
+      val northOk = if (y1 >= 90.0) qy1 <= y1 else qy1 < y1
+      qx0 >= x0 && qy0 >= y0 && eastOk && northOk
+    }
+
+  /** Bounding box (latMin, latMax, lonMin, lonMax) of `cells` when they tile
+    * it exactly; None for a set that leaves holes in its box, such as a
+    * neighbour set wrapped across the antimeridian. */
+  private def tiledBox(cells: Seq[String]): Option[(Double, Double, Double, Double)] = {
     val boxes = cells.map(Geohash.decodeBbox)
     val y0 = boxes.map(_._1).min; val y1 = boxes.map(_._2).max
     val x0 = boxes.map(_._3).min; val x1 = boxes.map(_._4).max
     val tiled = boxes.map(b => (b._2 - b._1) * (b._4 - b._3)).sum
     val box = (y1 - y0) * (x1 - x0)
-    if (math.abs(tiled - box) > 1e-9 * box) return false
-    val (qx0, qx1, qy0, qy1) = query.bbox
-    val eastOk = if (x1 >= 180.0) qx1 <= x1 else qx1 < x1
-    val northOk = if (y1 >= 90.0) qy1 <= y1 else qy1 < y1
-    qx0 >= x0 && qy0 >= y0 && eastOk && northOk
+    if (math.abs(tiled - box) > 1e-9 * box) None else Some((y0, y1, x0, x1))
   }
 
   /** Per-part prefix search, unioned. Sound: a covered point is covered
@@ -108,4 +115,52 @@ object GeohashPruning {
     * 8 neighbors (KNNQuery.java:31,84-88; default precision 7 ≈ ±0.7 km). */
   def knnPrefixes(lon: Double, lat: Double, precision: Int = 7): Seq[String] =
     Geohash.cellAndNeighbors(lat, lon, precision)
+
+  /** The shorter side, in degrees, of a geohash cell at `precision`
+    * (5 bits per character; longitude takes the odd bit). */
+  private def cellSide(precision: Int): Double = {
+    val bits = 5 * precision
+    math.min(180.0 / math.pow(2, bits / 2), 360.0 / math.pow(2, (bits + 1) / 2))
+  }
+
+  /**
+   * Radius of the disc around (lon, lat) that the KNN block `cells` is
+   * known to contain: the distance to the block's nearest edge. Only a full
+   * block of 9 cells that tiles a box bounds such a disc; a block cut by a
+   * pole or wrapped across the antimeridian yields None.
+   */
+  def knnMargin(lon: Double, lat: Double, cells: Seq[String]): Option[Double] =
+    if (cells.size != 9) None
+    else tiledBox(cells).map { case (y0, y1, x0, x1) =>
+      Seq(lon - x0, x1 - lon, lat - y0, y1 - lat).min
+    }
+
+  /**
+   * First ring of the exact KNN search on a layout whose directories are
+   * geohash prefixes of `dirLen` characters: the coarsest precision in
+   * [dirLen, precision] whose block, cut to `dirLen` characters, names the
+   * same directories as the block at `precision`. That ring opens no more
+   * directories than the finest one. Without directories it is `precision`.
+   */
+  def firstRingPrecision(lon: Double, lat: Double, precision: Int,
+                         dirLen: Option[Int]): Int = dirLen match {
+    case Some(d) if d < precision =>
+      def dirs(p: Int) = knnPrefixes(lon, lat, p).map(_.take(d)).toSet
+      val finest = dirs(precision)
+      (d until precision).find(p => dirs(p) == finest).getOrElse(precision)
+    case _ => precision
+  }
+
+  /**
+   * Precision of the KNN ring after one at `p` whose top-k failed the
+   * exactness proof. With fewer than k rows (`kth` infinite), two
+   * precisions coarser. Otherwise the finest coarser precision whose cell
+   * side is at least `kth`: that block holds every current candidate and
+   * its margin is at least one cell side, so it passes the proof. None
+   * when no coarser ring exists.
+   */
+  def nextRingPrecision(p: Int, kth: Double): Option[Int] =
+    if (p <= 1) None
+    else if (kth.isInfinite) Some(math.max(1, p - 2))
+    else (p - 1 to 1 by -1).find(q => cellSide(q) >= kth)
 }

@@ -64,15 +64,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("knn plans as TakeOrderedAndProject (partial heaps + driver merge)") {
-    val wifi = Gis.ingestTsv(spark, "/root/reference/src/test/resources/wifi_4326.txt")
+    // seeded points dense enough that the origin's 10 nearest lie well
+    // inside its 9-cell block
+    val pts = Gis.bulkIngest(spark, 20000, -73.995, -73.945, 40.735, 40.785, seed = 9)
     // strict mode keeps the plan lazy (the sound non-strict path returns its
     // already-collected ≤k rows as a LocalTableScan — one scan, by design)
-    val p = plan(Gis.knn(wifi, -73.97, 40.76, 10, strict = true))
+    val p = plan(Gis.knn(pts, -73.97, 40.76, 10, strict = true))
     assert(p.contains("TakeOrderedAndProject"), s"no bounded top-k operator:\n$p")
-    // non-strict result agrees with the strict plan on this in-cells fixture
-    val strictRows = Gis.knn(wifi, -73.97, 40.76, 10, strict = true)
+    // non-strict result agrees with the strict plan for this in-cells origin
+    val strictRows = Gis.knn(pts, -73.97, 40.76, 10, strict = true)
       .select("geohash").collect().map(_.getString(0)).toSet
-    val soundRows = Gis.knn(wifi, -73.97, 40.76, 10)
+    val soundRows = Gis.knn(pts, -73.97, 40.76, 10)
       .select("geohash").collect().map(_.getString(0)).toSet
     assert(strictRows == soundRows)
   }

@@ -1,7 +1,14 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import graft.{SparkEntry, SparkTestBase}
 import graft.text.TextCore
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -2994,5 +3001,56 @@ class PipelineSpec extends AnyFunSuite {
     // zero total weight fails loudly
     val zero = Seq(("x", 0L)).toDF("src", "n")
     intercept[Exception](Sampling.apportion(zero, "src", "n", 5L).collect())
+  }
+
+  // --- job groups: a gate that starts jobs from a second driver thread keeps
+  // them in the caller's group, so cancelJobGroup reaches all of them ---
+
+  test("q_dedup_keeplist_incr starts every job in the caller's job group") {
+    val sc = spark.sparkContext
+    // make every thread of the global pool exist under another group first:
+    // a pooled thread keeps the local properties it was created with
+    val n = Runtime.getRuntime.availableProcessors
+    val allUp = new CountDownLatch(n)
+    sc.setJobGroup("graft-test-elsewhere", "pool warm-up")
+    try {
+      val warm = (1 to n).map(_ => Future {
+        allUp.countDown(); allUp.await(10, TimeUnit.SECONDS)
+      }(ExecutionContext.global))
+      warm.foreach(Await.result(_, 30.seconds))
+    } finally sc.clearJobGroup()
+
+    val group = "graft-test-keeplist-incr"
+    val (start, end) = ("graft-test-start", "graft-test-end")
+    val started = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[String]()
+    // job-start events arrive in order on the listener bus: jobs in the
+    // marker groups delimit the ones the gate starts
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+        if (g == start) started.countDown()
+        else if (g == end) done.countDown()
+        else if (started.getCount == 0 && done.getCount == 1) seen.add(g)
+      }
+    }
+    def marker(g: String): Unit = {
+      sc.setJobGroup(g, "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(start)
+      assert(started.await(60, TimeUnit.SECONDS))
+      sc.setJobGroup(group, "keeplist-incr under a job group", interruptOnCancel = true)
+      try SparkEntry.queries("q_dedup_keeplist_incr")(spark, sf).count()
+      finally sc.clearJobGroup()
+      marker(end)
+      assert(done.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val groups = seen.asScala.toSeq
+    assert(groups.nonEmpty)
+    assert(groups.forall(_ == group), groups.groupBy(identity).map { case (g, v) => g -> v.size })
   }
 }
