@@ -68,10 +68,8 @@ import scala.collection.mutable.ArrayBuffer
  * committed BENCH_DETAIL.json.
  */
 object Bench {
-  // SPARK_GRAFT_ONLY=q_a,q_b restricts the run for focused re-benching of a
-  // hot query before a commit (the full JSON stays the driver contract)
-  private val only: Option[Set[String]] =
-    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+  // the focused-run subset; an unrestricted run covers every gate
+  private val only: Option[Set[String]] = graft.gates.Gate.only
 
   /** One query's outcome: wall seconds (elapsed-at-cancel when timed out,
     * so totals stay meaningful), plus the degradation flags. */

@@ -7,11 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump (and the oracle
-    // json) for focused pre-commit iteration on new gates; the driver
-    // never sets it, so the contract run always covers everything
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").map(_.trim).toSet)
+    // the focused-run subset restricts the dump and the oracle json
+    val only = graft.gates.Gate.only
     val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
@@ -35,9 +32,19 @@ object Verify {
       spark.catalog.clearCache()
       failure
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }))
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** `oracles` as one JSON object, name → SQL. The string escape covers
+    * backslash, quote and ALL control chars (< 0x20): a tab or CR in an
+    * oracle would otherwise make the DuckDB compare's json.load fail. */
+  def oracleJson(oracles: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -47,14 +54,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"[verify] FAILED: ${failed.mkString(",")}")
-      sys.exit(1)
-    }
+    oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

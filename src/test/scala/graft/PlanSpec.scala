@@ -158,13 +158,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("geojson sink emits valid features") {
-    val wifi = Gis.ingestTsv(spark, "/root/reference/src/test/resources/wifi_4326.txt")
-    val f = Gis.toGeoJson(wifi.limit(1)).head().getString(0)
+    val pts = Gis.bulkIngest(spark, 10, -74.02, -73.93, 40.70, 40.80, seed = 13)
+    val f = Gis.toGeoJson(pts.limit(1)).head().getString(0)
     assert(f.contains(""""type":"Feature"""") && f.contains(""""coordinates""""), f)
   }
 
   test("geojson FeatureCollection file round-trips through a JSON reader") {
-    val wifi = Gis.ingestTsv(spark, "/root/reference/src/test/resources/wifi_4326.txt")
+    val wifi = Gis.ingestTsv(spark, graft.gates.Fixtures.WifiTsv)
     val matches = Gis.within(wifi,
       "POLYGON ((-73.980844 40.758703, -73.987214 40.761369, -73.990839 40.7564, -73.984422 40.753642, -73.980844 40.758703))")
     val path = java.nio.file.Files.createTempDirectory("geojson").resolve("out.geojson").toString
@@ -185,15 +185,16 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("within: holed polygon and MULTIPOLYGON end-to-end (rect-arithmetic oracle)") {
-    val wifi = Gis.ingestTsv(spark, "/root/reference/src/test/resources/wifi_4326.txt")
+    // seeded points over the shapes' Midtown extent
+    val pts = Gis.bulkIngest(spark, 5000, -74.0, -73.96, 40.745, 40.765, seed = 17)
     // axis-aligned shapes make the oracle independent of Geom: plain
     // column-range predicates (boundary-inclusive outer, strict hole interior)
     val outer = "POLYGON ((-73.99 40.75, -73.99 40.762, -73.97 40.762, -73.97 40.75, -73.99 40.75))"
     val holed = "POLYGON ((-73.99 40.75, -73.99 40.762, -73.97 40.762, -73.97 40.75, -73.99 40.75), " +
       "(-73.985 40.754, -73.985 40.758, -73.975 40.758, -73.975 40.754, -73.985 40.754))"
-    val nOuter = Gis.within(wifi, outer).count()
-    val nHoled = Gis.within(wifi, holed).count()
-    val nHoleInterior = wifi.filter(
+    val nOuter = Gis.within(pts, outer).count()
+    val nHoled = Gis.within(pts, holed).count()
+    val nHoleInterior = pts.filter(
       col("lon") > -73.985 && col("lon") < -73.975 &&
         col("lat") > 40.754 && col("lat") < 40.758).count()
     assert(nHoleInterior > 0 && nHoled < nOuter, "fixture must exercise the hole")
@@ -203,9 +204,9 @@ class PlanSpec extends AnyFunSuite {
     val r2 = "POLYGON ((-73.975 40.75, -73.975 40.76, -73.965 40.76, -73.965 40.75, -73.975 40.75))"
     val mp = "MULTIPOLYGON (((-73.99 40.75, -73.99 40.76, -73.98 40.76, -73.98 40.75, -73.99 40.75)), " +
       "((-73.975 40.75, -73.975 40.76, -73.965 40.76, -73.965 40.75, -73.975 40.75)))"
-    val n1 = Gis.within(wifi, r1).count(); val n2 = Gis.within(wifi, r2).count()
+    val n1 = Gis.within(pts, r1).count(); val n2 = Gis.within(pts, r2).count()
     assert(n1 > 0 && n2 > 0, "fixture must hit both parts")
-    assert(Gis.within(wifi, mp).count() == n1 + n2)
+    assert(Gis.within(pts, mp).count() == n1 + n2)
   }
 
   test("bitset exact-join plan: exactly 2 shuffles (bucket groupBy + pair dedup)") {

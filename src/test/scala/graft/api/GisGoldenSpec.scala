@@ -15,10 +15,20 @@ class GisGoldenSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private val WifiPath = "/root/reference/src/test/resources/wifi_4326.txt"
-  private val TaxiPath = "/root/reference/src/test/resources/yellow_tripdata_2021-07.csv"
+  private val TaxiPath =
+    s"${graft.gates.Fixtures.ReferenceDir}/src/test/resources/yellow_tripdata_2021-07.csv"
 
-  lazy val wifi: DataFrame = Gis.ingestTsv(spark, WifiPath).cache()
+  lazy val wifi: DataFrame = Gis.ingestTsv(spark, graft.gates.Fixtures.WifiTsv).cache()
+
+  /** Seeded points over the wifi fixture's Manhattan extent: a stand-in for
+    * the fixture in tests that assert a differential, not a reference number. */
+  private lazy val manhattan: DataFrame =
+    Gis.bulkIngest(spark, 5000, -74.02, -73.93, 40.70, 40.80, seed = 13).cache()
+
+  /** The sf0.001 events with epoch-ms `ts_ms`, for the top-X differentials. */
+  private lazy val events: DataFrame =
+    graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "events")
+      .withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
 
   // Midtown 5-pt polygon (TestWithinFilter.java:72-76; README.md:56-60)
   private val Midtown =
@@ -43,8 +53,9 @@ class GisGoldenSpec extends AnyFunSuite {
 
   test("within: pruning on == pruning off (differential oracle)") {
     for (poly <- Seq(Midtown, Reduced)) {
-      val pruned = Gis.within(wifi, poly).select("geohash").collect().map(_.getString(0)).sorted
-      val full = Gis.within(wifi, poly, prune = false).select("geohash").collect().map(_.getString(0)).sorted
+      val pruned = Gis.within(manhattan, poly).select("id").collect().map(_.getString(0)).sorted
+      val full = Gis.within(manhattan, poly, prune = false).select("id").collect().map(_.getString(0)).sorted
+      assert(full.nonEmpty, s"no seeded point inside $poly")
       assert(pruned.sameElements(full))
     }
   }
@@ -129,19 +140,16 @@ class GisGoldenSpec extends AnyFunSuite {
   }
 
   test("topX: bounded-heap variant matches window variant per group") {
-    case class Trip(pu_id: Int, pu_ts: Long)
-    val ds = taxi.select($"pu_id", $"pu_ts").as[(Int, Long)]
-    val bounded = Gis.topXBounded[(Int, Long)](ds, t => t._1.toString, _._2, 2)
+    val ds = events.select($"user_id", $"ts_ms").as[(Long, Long)]
+    val bounded = Gis.topXBounded[(Long, Long)](ds, t => t._1.toString, _._2, 2)
     // same multiset of (group, ts)
     val a = bounded.collect().sorted
-    val b = Gis.topX(taxi, "pu_id", "pu_ts", 2)
-      .select($"pu_id", $"pu_ts").as[(Int, Long)].collect().sorted
-    assert(a.sameElements(b))
+    val b = Gis.topX(events, "user_id", "ts_ms", 2)
+      .select($"user_id", $"ts_ms").as[(Long, Long)].collect().sorted
+    assert(a.nonEmpty && a.sameElements(b))
   }
 
   test("topXAgg (bounded-heap aggregate) == window topX on events") {
-    val events = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "events")
-      .withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
     val win = Gis.topX(events, "user_id", "ts_ms", 3, tieBreak = Seq("event_id"))
       .select($"user_id", $"ts_ms", $"event_id").as[(Long, Long, Long)].collect().sorted
     val agg = Gis.topXAgg(events, "user_id", "ts_ms", "event_id", 3)
@@ -259,8 +267,8 @@ class GisGoldenSpec extends AnyFunSuite {
       "dr" -> (2L, -73.99, -73.97, 40.75, 40.76),
       "r3" -> (1L, 151.21, 151.21, -33.87, -33.87)))
     // counts always sum to the input size (cells partition the corpus)
-    val wifiCells = Gis.gridDensity(wifi, precision = 4)
-    assert(wifiCells.agg(sum($"n_points")).head.getLong(0) == wifi.count())
+    val cells = Gis.gridDensity(manhattan, precision = 4)
+    assert(cells.agg(sum($"n_points")).head.getLong(0) == manhattan.count())
     // partition invariance
     val rep = Gis.gridDensity(pts.repartition(5), precision = 2)
       .collect().map(_.toSeq).toSet

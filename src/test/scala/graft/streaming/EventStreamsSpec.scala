@@ -486,7 +486,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming contamination scan == batch twin (update-mode aggregate)") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val probes = graft.SparkEntry.ContaminationProbes
+    val probes = graft.gates.TextGates.ContaminationProbes
     val stream = DocStreams.readDocStream(spark, stageDocsDir())
     val q = DocStreams.contaminationStream(stream, probes)
       .writeStream.outputMode("complete").format("memory").queryName("cont_out").start()
