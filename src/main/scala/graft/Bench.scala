@@ -1,803 +1,350 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
-import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /**
- * Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
- * prints ONE JSON line {"metric":...,"queries":{...}}.
+ * Benchmark main: one timed loop over named entries.
  *
- * HARNESS CONTRACT (r10, after BENCH_r09 died rc=124/parsed=null when the
- * n=3 default outgrew the driver's wall-clock window):
+ * Entries: each `SparkEntry.gates` gate times `query(spark, dir).count()`;
+ * seven `ev_*` evidence entries measure claims no single gate shows, check
+ * them with `require` and record their non-timing fields under their own
+ * name. `SPARK_GRAFT_ONLY=a,b` selects entries by name, gates or evidence.
  *
- *  1. n=1 by default. SPARK_GRAFT_RUNS / SPARK_GRAFT_SF1_RUNS opt back
- *     into median mode (the controlled re-bench workflow); the driver's
- *     unattended window gets one pass of everything instead of a kill.
- *  2. Global wall-clock budget (SPARK_GRAFT_BUDGET_SEC, default 1380 s):
- *     every optional pass checks remaining budget before starting; the
- *     suite loops themselves stop cleanly at the deadline and record how
- *     many queries were skipped, so an over-budget run degrades to a
- *     parseable partial record instead of a timeout kill.
- *  3. Per-query timeout (SPARK_GRAFT_QUERY_TIMEOUT_SEC, default 180 s):
- *     a watchdog cancels the query's job group (interrupt-on-cancel), the
- *     row is recorded with "timed out" flagged, and the suite continues —
- *     one pathological query degrades one row, never the artifact.
- *  4. Incremental emission: after EVERY query a short parseable snapshot
- *     line ({"metric":"total",...,"partial":true,...}) goes to stdout and
- *     the full detail-so-far is flushed to the side files, so an external
- *     kill at any instant still leaves a parsed record in the tail
- *     capture AND a readable BENCH_DETAIL.json. The complete final line
- *     is printed last, as before.
+ * Runs: every entry runs `SPARK_GRAFT_RUNS` times (default 3) in an order
+ * rotated on each run, and the record keeps each entry's median: single
+ * samples under host contention have been up to 8× off controlled re-runs.
+ * An entry that throws is named in `failures` and the run goes on. One
+ * untimed gate first absorbs session and codegen startup.
  *
- * Per-query timing wraps a full action (count) on a warm session; one
- * untimed warmup query first absorbs session/codegen startup so the
- * numbers measure the plans, not JVM warmup. When median mode is opted
- * into, each query's MEDIAN over the runs is what the driver line records
- * — single samples under host contention have been up to 8× off
- * controlled re-runs (raw runs preserved in the detail file).
+ * Calibration: a fixed CPU-bound job ([[calibSec]]) is timed at the start,
+ * between the base and sf1 passes and at the end (`drift.calib_sec`), so
+ * host-speed swings (same-code totals have moved 29 % between runs) can be
+ * divided out of comparisons (`tools/compare_bench.py`).
  *
- * Scale pass: unless SPARK_GRAFT_SCALE_SF1=false, the run then
- * materializes a deterministic 10× copy of the data
- * ([[graft.tools.ScaleUp]]) and re-runs every query on it — scale
- * behavior is measured in the recorded bench, not claimed from side
- * notes. The pass runs HEAVIEST-FIRST (by measured base seconds) under
- * the deadline, so a tight window degrades to an explicitly-recorded
- * heavy-query subset (sf1_coverage:"subset" + sf1_skipped) instead of an
- * all-or-nothing skip; only a window too small for the scale-up itself
- * skips the pass entirely.
+ * sf1: unless `SPARK_GRAFT_SCALE_SF1=false`, [[graft.tools.ScaleUp]] writes
+ * a 10× copy of the data and the same loop times every gate on it. All a
+ * run writes lies under one temp directory, deleted however the run ends.
  *
- * Drift + variance instrumentation (r12): a fixed CPU-bound calibration
- * job is timed at marathon start/middle/end ([[calibSec]]) and recorded
- * as a `drift` block (plus `drift_max_ratio` on the compact line) so
- * same-code host swings — measured up to 29% between marathons — can be
- * normalized out of cross-round comparisons; and when the budget has
- * slack after every evidence pass, a SECOND base-scale run merges into
- * the committed medians with per-query [min, median, max] in
- * `queries_spread`, so the record carries its own dispersion evidence.
- *
- * Committed-record protection: incremental flushes write to the /tmp
- * side file and BENCH_DETAIL.json.partial; the committed
- * BENCH_DETAIL.json is replaced only at the end, atomically, and only
- * when the new record covers at least as many samples ([[commitDetail]])
- * — a truncated replay can never shrink a richer committed record.
- *
- * Output contract: the stdout line is COMPACT (sf0.1 per-query + scalar
- * totals) and printed LAST so the driver's tail capture always parses it;
- * the full detail (per-query sf1, storage, skew blocks) goes to the
- * SPARK_GRAFT_BENCH_OUT side file (default /tmp/graft_bench.json) and the
- * committed BENCH_DETAIL.json.
+ * Output: one JSON record, written to `BENCH_DETAIL.json` (tmp file plus
+ * rename) and printed as the last stdout line, with `queries` (medians),
+ * `runs`, `runs_detail`, `queries_spread` ([min, median, max]),
+ * `failures`, one object per evidence entry, `sf1_runs` / `sf1_medians` /
+ * `sf1_runs_detail` and `drift`. Then, as `Verify` does, the process exits
+ * 1 with `[bench] FAILED: <names>` on stderr when any entry threw.
  */
 object Bench {
-  // the focused-run subset; an unrestricted run covers every gate
-  private val only: Option[Set[String]] = graft.gates.Gate.only
 
-  /** One query's outcome: wall seconds (elapsed-at-cancel when timed out,
-    * so totals stay meaningful), plus the degradation flags. */
-  final case class QResult(name: String, sec: Double,
-                           timedOut: Boolean, failed: Boolean)
+  /** One timed unit: `run` returns the fields to record under `name`. */
+  final case class Entry(name: String, run: () => JObject)
 
-  /** Run `queries` in order with a per-query timeout and a global
-    * deadline. The timeout fires a job-group cancel (interrupt-on-cancel)
-    * from a daemon watchdog, so a runaway query degrades to one flagged
-    * row and the suite continues; reaching `deadlineNanos` stops the loop
-    * cleanly and reports how many queries were never started. `onDone`
-    * fires after each query — the incremental-flush hook. Testable
-    * directly (BenchSpec injects a deliberately slow query and asserts
-    * the suite completes with the row flagged). */
-  def runTimed(spark: SparkSession, queries: Seq[(String, () => Unit)],
-               perQueryTimeoutSec: Double, deadlineNanos: Long,
-               onDone: QResult => Unit = _ => ()): (Seq[QResult], Int) = {
-    val sc = spark.sparkContext
-    val timer = new java.util.Timer("graft-bench-watchdog", true)
-    val results = ArrayBuffer.empty[QResult]
-    var i = 0
-    var stopped = false
-    while (i < queries.size && !stopped) {
-      val (name, fn) = queries(i)
-      val remainSec = (deadlineNanos - System.nanoTime()) / 1e9
-      if (remainSec <= 0) { stopped = true }
-      else {
-        val group = s"graft-bench-$name"
-        val timeoutSec = math.min(perQueryTimeoutSec, remainSec)
-        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-        // cancelJobGroup cancels only ACTIVE jobs: a multi-job query (e.g. a
-        // 16-scan robust-stats gate) that is between jobs when the timer
-        // fires would keep running to its next action, so the watchdog
-        // RE-cancels every 2 s until the query thread observes it
-        val task = new java.util.TimerTask {
-          override def run(): Unit = { fired.set(true); sc.cancelJobGroup(group) }
-        }
-        timer.schedule(task, math.max(1L, (timeoutSec * 1000).toLong), 2000L)
-        sc.setJobGroup(group, s"bench $name", interruptOnCancel = true)
+  /** Each run's (name, seconds) in execution order, the names that threw
+    * and each entry's fields from its last clean run. */
+  final case class Timings(runs: Seq[Seq[(String, Double)]], failures: Seq[String],
+                           fields: Seq[(String, JObject)])
+
+  /** Times every entry `n` times. */
+  def timeAll(spark: SparkSession, entries: Seq[Entry], n: Int): Timings = {
+    require(n >= 1, s"runs must be at least 1, got $n")
+    val failures = scala.collection.mutable.LinkedHashSet.empty[String]
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, JObject]
+    val runs = (0 until n).map { i =>
+      // ROTATE the order on each run: with a fixed order every run times an
+      // entry at the same JVM-state position, so warmup and GC drift
+      // correlate into per-entry spreads (up to 1.6× within one run of the
+      // suite). Rotation decorrelates position from entry, so the median
+      // absorbs drift instead of inheriting it.
+      val off = i * entries.size / n
+      (entries.drop(off) ++ entries.take(off)).map { e =>
         val t0 = System.nanoTime()
-        var threw = false
-        try fn() catch {
-          case e: Throwable =>
-            threw = true
-            val kind = if (fired.get()) "TIMED OUT" else "failed"
-            System.err.println(s"[bench] $name $kind: ${e.getMessage}")
-        } finally {
-          task.cancel()
-          sc.clearJobGroup()
+        try {
+          val f = e.run()
+          if (f.obj.nonEmpty) fields(e.name) = f
+        } catch { case t: Throwable =>
+          failures += e.name
+          System.err.println(s"[bench] ${e.name} failed: ${t.getMessage}")
         }
-        val t = (System.nanoTime() - t0) / 1e9
-        // release the query's localCheckpoint blocks OUTSIDE the timed
-        // window: in a 170-query marathon, waiting for the ContextCleaner's
-        // weak-reference GC let block-manager residue accumulate and
-        // inflated LATER memory-hungry queries 3-6x at sf1 (measured:
-        // q_dedup_ngram 24.0 s mid-marathon vs 7.1 s fresh-session — the
-        // corpus and plans identical). Each gate query is self-contained,
-        // so freeing between queries is semantics-neutral.
-        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache() // DataFrame .cache() entries (clusters)
-        // nudge the ContextCleaner: shuffle files and broadcast blocks are
-        // released via WEAK references, so without a GC the cleanup queue
-        // only drains when the heap happens to collect — hundreds of
-        // queries of shuffle residue otherwise stay live on disk/heap
-        System.gc()
-        // timedOut only when the query actually DIED to the cancel: a query
-        // finishing right at the timeout (timer fired, action already done)
-        // succeeded and must not be flagged — its seconds are real
-        val r = QResult(name, t, timedOut = fired.get() && threw, failed = threw && !fired.get())
-        results += r
-        onDone(r)
-        i += 1
+        val elapsed = (System.nanoTime() - t0) / 1e9
+        // outside the timed window: see Session.release
+        Session.release(spark)
+        e.name -> elapsed
       }
     }
-    timer.cancel()
-    (results.toSeq, queries.size - results.size)
+    Timings(runs, failures.toSeq, fields.toSeq)
   }
 
-  /** Gate queries in run order: alphabetical by default (deterministic),
-    * or heaviest-first when a measured cost map is supplied — the sf1 pass
-    * orders by base-pass seconds so a deadline stop still leaves the
-    * heavy-query scale evidence (the cheap tail is what gets skipped). */
-  private def gateQueries(spark: SparkSession, sfDir: String,
-                          costHint: Option[Map[String, Double]] = None): Seq[(String, () => Unit)] =
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy { case (name, _) => costHint match {
-        case Some(c) => (-c.getOrElse(name, 0.0), name)
-        case None => (0.0, name)
-      }}
-      .map { case (name, fn) => name -> (() => { fn(spark, sfDir).count(); () }) }
+  /** The gate entries for data directory `dir`, by name. */
+  def gateEntries(spark: SparkSession, dir: String): Seq[Entry] =
+    SparkEntry.gates.sortBy(_.name).map { g =>
+      Entry(g.name, () => { g.query(spark, dir).count(); JObject() })
+    }
 
-  private def toJsonMap(results: Seq[(String, Double)]): String =
-    results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+  /** The evidence entries over `sfDir`, writing only under `scratch`. */
+  def evidenceEntries(spark: SparkSession, sfDir: String, scratch: Path): Seq[Entry] = {
+    import graft.pipeline.{Dedup, Similarity, TextAnalysis}
+    import graft.sources.Tables
+    import graft.gates.Fixtures.firstVector
+    def table(name: String) = Tables.table(spark, sfDir, name)
+    def under(name: String): String = scratch.resolve(name).toString
+    def distinctFiles(df: org.apache.spark.sql.DataFrame): Long =
+      df.select(input_file_name()).distinct().count()
+    def recalls(sweep: Seq[(Int, Double)]) =
+      rounded(sweep.map { case (np, r) => s"nprobe$np" -> r })
 
-  private def jsonStrArr(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    Seq(
+      // delivered recall of the one gate with no SQL oracle
+      // (q_embed_topk_ivf, honestly approximate), with the gate's config
+      Entry("ev_ivf_recall", () => {
+        val embs = table("embeddings")
+        val centroids = Similarity.ivfTrain(embs, nCells = 8, iters = 3)
+        val q = firstVector(embs)
+        // on an isotropic corpus probing nProbe of nCells cells recalls
+        // ~nProbe/nCells; below that floor − ε the index, not the data, broke
+        // (measured at nProbe 6/8: 0.80 at sf0.1, 1.00 at sf0.01)
+        val floor = 6.0 / 8 - 0.05
+        val sweep = Seq(1, 2, 4, 6).map(np =>
+          np -> Similarity.ivfDeliveredRecall(embs, centroids, q, 10, nProbe = np))
+        val r = sweep.last._2
+        require(r >= floor,
+          f"ivf delivered recall $r%.3f below machine-checked floor $floor%.3f (nProbe/nCells - 0.05)")
+        // same centroids and query, so recall cannot fall as nprobe grows
+        // (probing more cells only adds candidates): a dip is an index bug
+        val curve = sweep.map(_._2)
+        require(curve.zip(curve.tail).forall { case (a, b) => b >= a },
+          s"ivf recall not monotone in nprobe: ${curve.mkString(",")}")
+        // no coarse quantizer beats nProbe/nCells on an isotropic corpus, so
+        // the curve above measures the data. To gate the OPERATOR, plant 8
+        // separated clusters (a per-cluster axis shift) and require the
+        // k-means codebook to reach recall 0.8 by nprobe 4: real corpora cluster.
+        val clustered = embs.selectExpr("vec_id",
+          "transform(embedding, (x, i) -> CAST(x + IF(i = CAST(vec_id % 8 AS INT), 6.0, 0.0) AS FLOAT)) AS embedding")
+        val cCent = Similarity.ivfTrain(clustered, nCells = 8, iters = 5)
+        val cq = firstVector(clustered)
+        val cSweep = Seq(1, 2, 4).map(np =>
+          np -> Similarity.ivfDeliveredRecall(clustered, cCent, cq, 10, nProbe = np))
+        val cBy4 = cSweep.map(_._2).max
+        require(cBy4 >= 0.8,
+          f"clustered-corpus ivf recall $cBy4%.3f below 0.80 by nprobe 4 — the k-means " +
+            "codebook failed to capture planted cluster structure (operator bug, not data)")
+        ("recall" -> r) ~ ("floor" -> floor) ~ ("sweep" -> recalls(sweep)) ~
+          ("sweep_clustered" -> recalls(cSweep)) ~ ("clustered_floor" -> 0.8)
+      }),
+      // the scan-avoidance lever: one within() polygon over gh_prefix
+      // directory-partitioned vs naive parquet of the same points; the gap
+      // in files and bytes is what partition pruning buys
+      Entry("ev_storage", () => {
+        val rows = 2000000L
+        val pts = graft.api.Gis.bulkIngest(spark, rows, -76.0, -75.0, 44.0, 45.0)
+        // prefixLen 4 ≈ 0.35°×0.18° cells: the 1°×1° bbox splits into ~20
+        // directories, so the polygon's prefixes prune most of them (len 3
+        // would give this bbox only ~4 dirs — nothing to skip)
+        graft.api.Gis.writePointsPartitioned(pts, under("store_part"), prefixLen = 4)
+        pts.write.mode("overwrite").parquet(under("store_flat"))
+        val poly = "POLYGON ((-75.52 44.42, -75.44 44.42, -75.44 44.36, -75.52 44.36, -75.52 44.42))"
+        // count through an aggregate whose QueryExecution we keep, so the
+        // pruned scan's planning-time listing gives the files/bytes touched
+        def within(path: String): (Long, Long, Long) = {
+          val agg = graft.api.Gis.within(spark.read.parquet(path), poly).groupBy().count()
+          val matched = agg.head().getLong(0)
+          val (files, bytes) = agg.queryExecution.sparkPlan.collectLeaves().collectFirst {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+              val sel = f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+              (sel.map(_.files.size).sum.toLong, sel.flatMap(_.files).map(_.getLen).sum)
+          }.getOrElse((-1L, -1L))
+          (matched, files, bytes)
+        }
+        val (mPart, fPart, bPart) = within(under("store_part"))
+        val (mFlat, fFlat, bFlat) = within(under("store_flat"))
+        require(mPart == mFlat, s"layout changed results: $mPart vs $mFlat")
+        ("rows" -> rows) ~ ("files_part" -> fPart) ~ ("files_flat" -> fFlat) ~
+          ("bytes_part" -> bPart) ~ ("bytes_flat" -> bFlat) ~ ("matched" -> mPart)
+      }),
+      // the embedding analog of ev_storage: the same top-k through the
+      // lsh_bucket-partitioned layout vs a flat scan, with the files a
+      // one-bucket read touches
+      Entry("ev_ann_storage", () => {
+        val embs = table("embeddings")
+        val path = under("emb_bucketed")
+        Similarity.writeEmbeddingsBucketed(embs, path, planes = 6)
+        val q = firstVector(embs)
+        val stored = Similarity.cosineTopKLshStored(spark, path, q, 10, planes = 6)
+          .collect().map(_.getLong(0)).toSet
+        val brute = Similarity.cosineTopK(spark.read.parquet(path), q, 10)
+          .collect().map(_.getLong(0)).toSet
+        val all = spark.read.parquet(path)
+        val qb = org.apache.spark.sql.graft.VecOps.signBucket(
+          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(q), 6, 42L)
+        ("files_total" -> distinctFiles(all)) ~
+          ("files_one_bucket" -> distinctFiles(all.filter(col("lsh_bucket") === qb))) ~
+          ("overlap_of_10" -> stored.intersect(brute).size)
+      }),
+      // the tokenizer loop end to end (train → broadcast → count) at bench
+      // scale; the histogram collect is vocabulary-bounded and the count a
+      // stateless scan
+      Entry("ev_bpe", () => {
+        val docs = table("documents")
+        val merges = TextAnalysis.trainBpe(docs, numMerges = 200)
+        val st = TextAnalysis.bpeState(spark, merges)
+        val tokens = docs.select(TextAnalysis.tokenCountBpe(col("text"), st).cast("long").as("n"))
+          .agg(sum(col("n"))).head().getLong(0)
+        ("merges" -> merges.length) ~ ("tokens" -> tokens)
+      }),
+      // the persisted-index path: build the corpus minhash index once (the
+      // compaction-cadence cost), then probe an arriving batch against it
+      Entry("ev_incremental", () => {
+        val docs = table("documents")
+        val path = under("mh_index")
+        Dedup.writeMinhashIndex(docs, path)
+        val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+          .withColumn("doc_id", col("doc_id") + lit(1000000L))
+        val pairs = Dedup.dedupAgainstIndex(spark, path, batch, docs).count()
+        val corpusRows = Tables.rowCount(spark, sfDir, "documents")
+        ("pairs" -> pairs) ~ ("corpus_rows" -> corpusRows) ~ ("batch_rows" -> corpusRows / 10)
+      }),
+      // the trainer hand-off writer: shard count, and the planning-time
+      // file pruning a single-shard read gets from the directory layout
+      Entry("ev_shards", () => {
+        val budget = 5000L
+        val path = under("shards")
+        TextAnalysis.writeTokenShards(table("documents").filter(col("text").isNotNull), path, budget)
+        val back = spark.read.parquet(path)
+        val shards = back.select(col("source"), col("pack_id")).distinct()
+        val first = shards.orderBy(col("source"), col("pack_id")).head()
+        ("budget_tokens" -> budget) ~ ("n_shards" -> shards.count()) ~
+          ("files_total" -> distinctFiles(back)) ~
+          ("files_one_shard" -> distinctFiles(back.filter(
+            col("source") === first.getString(0) && col("pack_id") === first.get(1))))
+      }),
+      // a hot-key corpus (one user owns half of all rows, the worst case
+      // for Window.partitionBy) through the unsalted and salted window
+      // operators; the salted paths are exact rewrites, so counts must agree
+      Entry("ev_skew", () => {
+        val rows = 8000000L
+        val ev = spark.range(rows).select(
+          col("id").as("event_id"),
+          when(col("id") < rows / 2, 0L)
+            .otherwise(pmod(hash(col("id")), lit(100000)).cast("long")).as("user_id"),
+          timestamp_micros(lit(1700000000000000L) +
+            pmod(hash(col("id"), lit(7)), lit(86400000L)) * 1000L).as("ts"),
+          when(pmod(col("id"), lit(5)) === 0, "error").otherwise("click")
+            .as("event_type")).cache()
+        val nS = graft.streaming.EventStreams.sessionizeBatch(ev, 60000L).count()
+        val nSs = graft.streaming.EventStreams.sessionizeBatchSalted(ev, 60000L).count()
+        require(nS == nSs, s"salted sessionize diverged: $nS vs $nSs")
+        val (errors, clicks) = graft.gates.EventsGates.errorsAndClicks(ev)
+        val nA = graft.api.AsofJoin.asofJoin(errors, clicks,
+          keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
+          rightPayload = Seq("event_id"), rightIdCol = "event_id").count()
+        val nAs = graft.api.AsofJoin.asofJoinSalted(errors, clicks,
+          keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
+          rightPayload = Seq("event_id"), rightIdCol = "event_id").count()
+        require(nA == nAs, s"salted asof diverged: $nA vs $nAs")
+        ("rows" -> rows) ~ ("hot_share" -> 0.5)
+      })
+    )
+  }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Host-drift calibration: a fixed CPU-bound job (60M xxhash64 + sum —
+  /** `x` to 3 decimals. */
+  private def num(x: Double): JDouble = JDouble(math.rint(x * 1000) / 1000)
+
+  private def rounded(kvs: Seq[(String, Double)]): JObject =
+    JObject(kvs.map { case (k, v) => JField(k, num(v)) }.toList)
+
+  /** Each entry's samples across runs, by name. */
+  private def samples(t: Timings): Seq[(String, Seq[Double])] =
+    t.runs.flatten.groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+
+  private def medians(t: Timings): Seq[(String, Double)] =
+    samples(t).map { case (k, v) => k -> median(v) }
+
+  /** Host-drift calibration: a fixed CPU-bound job (200M xxhash64 + sum —
     * no I/O, no shuffle skew, deterministic plan) timed as the median of
-    * 3 executions. Run at marathon start/middle/end, it turns "same-code
-    * totals moved 29% between runs" into a recorded drift index the
-    * cross-round comparison can normalize by: a query regression that
-    * tracks the calibration ratio is host contention, one that exceeds
-    * it is code. */
+    * 3 executions. A query regression that tracks the calibration ratio is
+    * host contention; one that exceeds it is code. */
   private def calibSec(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.{col, shiftrightunsigned, sum, xxhash64}
     def once(): Unit =
       // top halves only: 2e8 × 2^32 ≈ 8.6e17 keeps the ANSI sum in a long
       spark.range(200000000L)
         .select(shiftrightunsigned(xxhash64(col("id")), 32).as("h"))
         .agg(sum(col("h"))).head()
     // untimed ×3: absorb codegen AND C2 tier-up so point 1 measures the
-    // host, not the JVM (the first marathon recorded start 0.174 s vs
-    // steady 0.078 s — a 2.2× warmup artifact masquerading as drift)
+    // host, not the JVM (a start point once read 0.174 s vs steady
+    // 0.078 s — a 2.2× warmup artifact masquerading as drift)
     (1 to 3).foreach(_ => once())
-    val runs = (1 to 3).map { _ =>
+    median((1 to 3).map { _ =>
       val t0 = System.nanoTime()
       once()
       (System.nanoTime() - t0) / 1e9
-    }
-    median(runs)
+    })
   }
 
-  /** Per-query [min, median, max] across base-scale runs — the
-    * committed dispersion evidence (r11 judge item 3). */
-  private def spreadJson(samples: Seq[Seq[(String, Double)]]): String = {
-    val byName = samples.map(_.toMap)
-    samples.head.map(_._1).map { n =>
-      val vs = byName.flatMap(_.get(n))
-      "\"" + n + f"\":[${vs.min}%.3f,${median(vs)}%.3f,${vs.max}%.3f]"
-    }.mkString("{", ",", "}")
-  }
-
-  /** Flag ledger across all passes: which queries ever timed out / failed
-    * / were never started — carried in both the driver line (counts) and
-    * the detail file (names), so degradation is observable, never silent. */
-  private val timedOutQ = scala.collection.mutable.LinkedHashSet.empty[String]
-  private val failedQ = scala.collection.mutable.LinkedHashSet.empty[String]
-  @volatile private var skippedCount = 0
-
-  /** Sample-count richness of a detail record: base samples + sf1 samples
-    * (per-query entries × runs), parsed leniently (unparseable → 0, so a
-    * corrupt existing file never blocks a fresh record). */
-  def recordRichness(json: String): Long = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
+  /** The record and the entries that threw: `gates(dir)` on `sfDir` (and on
+    * the sf1 copy when `sf1`) and `evidence(scratch)` on `sfDir`, each
+    * narrowed by `SPARK_GRAFT_ONLY`. */
+  def run(spark: SparkSession, sfDir: String, n: Int, sf1: Boolean,
+          gates: String => Seq[Entry], evidence: Path => Seq[Entry]): (JObject, Seq[String]) = {
+    val t0 = System.nanoTime()
+    def selected(es: Seq[Entry]) = es.filter(e => graft.gates.Gate.only.forall(_(e.name)))
+    val scratch = Files.createTempDirectory("graft-bench")
     try {
-      val j = JsonMethods.parse(json)
-      def mapSize(field: String): Long = j \ field match {
-        case JObject(fs) => fs.size.toLong; case _ => 0L
+      val calibStart = calibSec(spark)
+      val base = timeAll(spark, selected(gates(sfDir) ++ evidence(scratch)), n)
+      val calibMid = calibSec(spark)
+      val sf1Runs = Option.when(sf1) {
+        val sf1Dir = scratch.resolve("sf1").toString
+        graft.tools.ScaleUp.run(spark, sfDir, sf1Dir, factor = 10)
+        timeAll(spark, selected(gates(sf1Dir)), n)
       }
-      def intOf(field: String): Long = j \ field match {
-        case JInt(v) => math.max(1L, v.toLong); case _ => 1L
-      }
-      mapSize("queries") * intOf("runs") + mapSize("sf1_medians") * intOf("sf1_runs")
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-  }
-
-  /** Replace the committed detail record ATOMICALLY (tmp + rename), and
-    * REFUSE when the existing record covers more samples than the new one
-    * — a truncated driver replay (n=1, one scale) must never shrink a
-    * committed n=3 two-scale record; the rejected record is preserved at
-    * `path.candidate` so nothing is lost either way. Returns whether the
-    * replace happened. */
-  def commitDetail(path: String, line: String): Boolean = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val p = Paths.get(path)
-    val existing =
-      if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8") else ""
-    val oldRich = recordRichness(existing)
-    val newRich = recordRichness(line)
-    if (existing.nonEmpty && oldRich > newRich) {
-      System.err.println(s"[bench] NOT replacing $path: existing record is richer " +
-        s"($oldRich samples > $newRich); new record kept at $path.candidate")
-      scala.util.Try(Files.write(Paths.get(path + ".candidate"),
-        (line + "\n").getBytes("UTF-8")))
-      false
-    } else {
-      val tmp = Paths.get(path + ".tmp")
-      Files.write(tmp, (line + "\n").getBytes("UTF-8"))
-      Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      true
-    }
-  }
-
-  /** Run the suite `runs` times and reduce each query to its MEDIAN when
-    * median mode is opted into (SPARK_GRAFT_RUNS>1); the default single
-    * run records the one sample. Raw runs go to the detail file either
-    * way. Each completed query fires `onDone` for incremental flushing. */
-  private def timeMedians(spark: SparkSession, dir: String, runs: Int,
-                          perQueryTimeoutSec: Double, deadlineNanos: Long,
-                          onDone: QResult => Unit,
-                          onRunStart: () => Unit = () => (),
-                          costHint: Option[Map[String, Double]] = None)
-      : (Seq[(String, Double)], Seq[Seq[(String, Double)]]) = {
-    val qs = gateQueries(spark, dir, costHint)
-    val samples = (1 to runs).map { runIdx =>
-      // reset the incremental-snapshot state per run: without this, median
-      // mode accumulated 'total'/'done' across runs and emitted duplicate
-      // live_queries keys in the flushes (final record was unaffected)
-      onRunStart()
-      // ROTATE the query order across passes (deterministic offset): with a
-      // fixed order, every pass times each query at the same JVM-state
-      // position, so warmup/GC drift correlates into per-query spreads up
-      // to 1.6x within one marathon (the r12 record's q_triangles
-      // [2.08, 3.24]). Rotation decorrelates position from query, so the
-      // median absorbs drift instead of inheriting it. Cost-ordered
-      // (deadline-degrading) passes keep their heaviest-first order — the
-      // degradation contract depends on it.
-      val ordered =
-        if (costHint.nonEmpty || runs <= 1) qs
-        else { val off = ((runIdx - 1) * qs.length) / runs; qs.drop(off) ++ qs.take(off) }
-      val (rs, skipped) = runTimed(spark, ordered, perQueryTimeoutSec, deadlineNanos, onDone)
-      rs.foreach { r =>
-        if (r.timedOut) timedOutQ += r.name
-        if (r.failed) failedQ += r.name
-      }
-      skippedCount = math.max(skippedCount, skipped)
-      rs.map(r => r.name -> r.sec)
-    }
-    val byName = samples.map(_.toMap)
-    // a query may be missing from a deadline-stopped later run; median
-    // over the samples that have it
-    val meds = samples.head.map(_._1).map { n =>
-      n -> median(byName.flatMap(_.get(n)))
-    }
-    (meds, samples)
+      val calibs = Seq(calibStart, calibMid, calibSec(spark))
+      val failures = (base +: sf1Runs.toSeq).flatMap(_.failures).distinct
+      val record = ("total_sec" -> num(medians(base).map(_._2).sum)) ~ ("sf" -> sfDir) ~
+        ("runs" -> n) ~ ("queries" -> rounded(medians(base))) ~
+        ("runs_detail" -> base.runs.map(rounded)) ~
+        ("queries_spread" -> JObject(samples(base).map { case (k, v) =>
+          JField(k, JArray(List(v.min, median(v), v.max).map(num)))
+        }.toList)) ~
+        ("failures" -> failures) ~ JObject(base.fields.toList) ~
+        sf1Runs.fold(JObject())(t => ("sf1_runs" -> n) ~ ("sf1_medians" -> rounded(medians(t))) ~
+          ("sf1_runs_detail" -> t.runs.map(rounded))) ~
+        ("drift" -> ("calib_sec" -> calibs.map(num)) ~ ("max_ratio" -> num(calibs.max / calibs.min))) ~
+        // counted log mutes (Logs): a future genuinely-unbounded window shows
+        // as a count regression in the record instead of a muted logger
+        ("window_warns_suppressed" -> graft.util.Logs.suppressedWindowWarns.get()) ~
+        ("unpersist_warns_suppressed" -> graft.util.Logs.suppressedUnpersistWarns.get()) ~
+        ("elapsed_sec" -> num((System.nanoTime() - t0) / 1e9))
+      (record, failures)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
   }
 
   def main(args: Array[String]): Unit = {
-    val startNanos = System.nanoTime()
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "1380").toDouble
-    val deadlineNanos = startNanos + (budgetSec * 1e9).toLong
-    def remainingSec: Double = (deadlineNanos - System.nanoTime()) / 1e9
-    val perQueryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "180").toDouble
-
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val n = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+    val sf1 = sys.env.getOrElse("SPARK_GRAFT_SCALE_SF1", "true") != "false"
     val spark = Session.local("graft-bench")
-
-    // ------- incremental emission state -------
-    val nGates = gateQueries(spark, sfDir).size
-    // Incremental flushes go to the /tmp side file and a .partial twin of
-    // the committed record — NEVER straight to BENCH_DETAIL.json: a run
-    // that dies mid-way (or a FOCUSED SPARK_GRAFT_ONLY top-up, or a
-    // truncated full driver replay) must not clobber a richer committed
-    // record. The committed file is only replaced at the END, through the
-    // richness-guarded atomic [[commitDetail]].
-    val detailPath = "BENCH_DETAIL.json"
-    val sidePaths = (sys.env.get("SPARK_GRAFT_BENCH_OUT").toSeq :+
-      "/tmp/graft_bench.json" :++
-      (if (only.isEmpty) Seq(detailPath + ".partial") else Nil)).distinct
-    def writeSide(line: String): Unit = sidePaths.foreach { p =>
-      scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (line + "\n").getBytes("UTF-8")))
-        .recover { case e => System.err.println(s"[bench] side-file write failed: ${e.getMessage}") }
+    val (record, failures) =
+      try {
+        // warmup: session init + codegen paths
+        SparkEntry.queries("q_agg_q1")(spark, sfDir).count()
+        run(spark, sfDir, n, sf1, gateEntries(spark, _), evidenceEntries(spark, sfDir, _))
+      } finally spark.stop()
+    val line = compact(render(record))
+    val tmp = Paths.get("BENCH_DETAIL.json.tmp")
+    Files.writeString(tmp, line + "\n")
+    Files.move(tmp, Paths.get("BENCH_DETAIL.json"),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    println(line)
+    if (failures.nonEmpty) {
+      System.err.println(s"[bench] FAILED: ${failures.mkString(",")}")
+      sys.exit(1)
     }
-    // detail fragments appended as passes complete; flushed after every
-    // query so a kill at any instant leaves a readable record. An
-    // ArrayBuffer (not a StringBuilder) so the BASE fragment can be
-    // rebuilt in place if the late base-rerun pass adds a second sample
-    // set (r11 judge item 8).
-    val liveQ = ArrayBuffer.empty[(String, Double)] // current pass, so far
-    @volatile var livePhase = "sf_base"
-    val fragments = ArrayBuffer.empty[String]
-    def doneStr: String = fragments.mkString
-    def flagsJson: String =
-      s""","timeouts":${jsonStrArr(timedOutQ.toSeq)},"failures":${jsonStrArr(failedQ.toSeq)},"queries_skipped_budget":$skippedCount"""
-    def flushDetail(): Unit = {
-      val partial =
-        if (liveQ.isEmpty) ""
-        else s""","live_phase":"$livePhase","live_queries":${toJsonMap(liveQ.toSeq)}"""
-      val total = liveQ.map(_._2).sum
-      writeSide(f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":true,"sf":"$sfDir"$flagsJson${doneStr}$partial}""")
-    }
-    // short stdout snapshot: parseable on its own, small enough that the
-    // 2000-char tail capture always holds the last COMPLETE one even if a
-    // kill lands mid-print of the next
-    var doneCount = 0
-    def snapshot(r: QResult): Unit = {
-      doneCount += 1
-      liveQ += (r.name -> r.sec)
-      if (r.timedOut) timedOutQ += r.name
-      if (r.failed) failedQ += r.name
-      val total = liveQ.map(_._2).sum
-      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":true,"phase":"$livePhase","done":$doneCount,"n_queries":$nGates,"timeouts":${timedOutQ.size},"failures":${failedQ.size},"sf":"$sfDir","detail_file":"BENCH_DETAIL.json"}""")
-      flushDetail()
-    }
-    // per-run reset (also fired between median-mode runs of one phase, so
-    // the incremental snapshots never accumulate across runs)
-    def resetRun(): Unit = { liveQ.clear(); doneCount = 0 }
-    def startPhase(name: String): Unit = { livePhase = name; resetRun() }
-
-    // warmup: session init + codegen paths
-    SparkEntry.queries("q_agg_q1")(spark, sfDir).count()
-    // drift index, point 1 of 3 (start): see [[calibSec]]
-    val calibStart = calibSec(spark)
-
-    // base-scale pass: n=1 by default (SPARK_GRAFT_RUNS opts into median
-    // mode); per-query timeout + global deadline guard the whole loop
-    val baseRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt)
-    startPhase("sf_base")
-    var (results, baseSamples) =
-      timeMedians(spark, sfDir, baseRuns, perQueryTimeoutSec, deadlineNanos,
-        snapshot, () => resetRun())
-    var total = results.map(_._2).sum
-    var baseRunsEff = baseRuns
-    // the base fragment sits at a FIXED index so the late base-rerun pass
-    // can rebuild it with the merged samples
-    def baseFragment(): String = {
-      val runsJson = baseSamples.map(s => toJsonMap(s)).mkString("[", ",", "]")
-      val spread = if (baseSamples.size >= 2)
-        s""","queries_spread":${spreadJson(baseSamples)}""" else ""
-      f""","runs":$baseRunsEff,"queries":${toJsonMap(results)},"runs_detail":$runsJson$spread"""
-    }
-    fragments += baseFragment()
-    val baseFragmentIdx = fragments.size - 1
-    flushDetail()
-    // drift index, point 2 of 3 (after the base pass)
-    val calibMid = calibSec(spark)
-
-    /** Budget gate for every optional pass: skip (and record the skip)
-      * when fewer than `minSec` remain — a pass that can't finish inside
-      * the window must not start and kill the artifact. */
-    val skippedPasses = ArrayBuffer.empty[String]
-    def passIf(name: String, minSec: Double, envFlag: String)(body: => String): String = {
-      if (sys.env.getOrElse(envFlag, "true") == "false") ""
-      else if (remainingSec < minSec) {
-        System.err.println(f"[bench] $name pass skipped: ${remainingSec}%.0f s left < $minSec%.0f s needed")
-        skippedPasses += name
-        ""
-      } else scala.util.Try(body).recover { case e =>
-        System.err.println(s"[bench] $name pass failed: ${e.getMessage}")
-        ""
-      }.get
-    }
-
-    // delivered-recall probe for the one gate query with no SQL oracle
-    // (q_embed_topk_ivf, honestly approximate): the official bench record
-    // carries its measured quality next to its wall time. Same config as
-    // the gate query; one extra brute-force scan of the embeddings table.
-    val ivfPart = passIf("ivf_recall", 60, "SPARK_GRAFT_IVF") {
-      import org.apache.spark.sql.functions.col
-      val embs = graft.sources.Tables.table(spark, sfDir, "embeddings")
-      val centroids = graft.pipeline.Similarity.ivfTrain(embs, nCells = 8, iters = 3)
-      val q = embs.filter(col("vec_id") === 0L).select("embedding").head()
-        .getSeq[Float](0).toArray
-      val r = graft.pipeline.Similarity.ivfDeliveredRecall(embs, centroids, q, 10, nProbe = 6)
-      // machine-checked floor for the one no-SQL-oracle gate: on an
-      // isotropic corpus the expected recall of probing nProbe of nCells
-      // cells is ~nProbe/nCells (the measured sweep's ceiling, ROUND_NOTES
-      // round 6, item 2); a run below floor − ε means the index, not the
-      // data, broke. nProbe=6/8 measured: recall 0.80 at sf0.1, 1.00 at
-      // sf0.01 → floor 0.70
-      val floor = 6.0 / 8 - 0.05
-      require(r >= floor,
-        f"ivf delivered recall $r%.3f below machine-checked floor $floor%.3f (nProbe/nCells - 0.05)")
-      // nprobe SWEEP: the recall/cost curve as recorded evidence, not a
-      // single point — same centroids and query, so recall is mathematically
-      // non-decreasing in nprobe (probing more cells only adds candidates);
-      // the require turns a violated curve into a loud index bug
-      val sweep = Seq(1, 2, 4).map(np => np ->
-        graft.pipeline.Similarity.ivfDeliveredRecall(embs, centroids, q, 10, nProbe = np))
-      val curve = sweep.map(_._2) :+ r // nprobe 1,2,4,6
-      require(curve.zip(curve.tail).forall { case (a, b) => b >= a },
-        s"ivf recall not monotone in nprobe: ${curve.mkString(",")}")
-      val sweepJson = (sweep :+ (6 -> r))
-        .map { case (np, rec) => f""""nprobe$np":$rec%.3f""" }.mkString("{", ",", "}")
-      // CLUSTERED-corpus sweep: the gate corpus is isotropic (pairwise
-      // cosines a unimodal bell at 0), where NO coarse quantizer can beat
-      // the nProbe/nCells ceiling — the curve above measures the data, not
-      // the operator. To gate the OPERATOR's low-nprobe quality, plant 8
-      // well-separated clusters (a deterministic per-cluster axis shift on
-      // the same embeddings) and require the k-means ivfTrain codebook to
-      // deliver recall >= 0.8 by nprobe <= 4 there — real embedding
-      // corpora cluster heavily, so this is the curve a consumer sees.
-      val clustered = embs.selectExpr("vec_id",
-        "transform(embedding, (x, i) -> CAST(x + IF(i = CAST(vec_id % 8 AS INT), 6.0, 0.0) AS FLOAT)) AS embedding")
-      val cCent = graft.pipeline.Similarity.ivfTrain(clustered, nCells = 8, iters = 5)
-      val cq = clustered.filter(col("vec_id") === 0L).select("embedding").head()
-        .getSeq[Float](0).toArray
-      val cSweep = Seq(1, 2, 4).map(np => np ->
-        graft.pipeline.Similarity.ivfDeliveredRecall(clustered, cCent, cq, 10, nProbe = np))
-      val cBy4 = cSweep.filter(_._1 <= 4).map(_._2).max
-      require(cBy4 >= 0.8,
-        f"clustered-corpus ivf recall $cBy4%.3f below 0.80 by nprobe 4 — the k-means " +
-          "codebook failed to capture planted cluster structure (operator bug, not data)")
-      val cSweepJson = cSweep
-        .map { case (np, rec) => f""""nprobe$np":$rec%.3f""" }.mkString("{", ",", "}")
-      f""","ivf_recall":$r%.3f,"ivf_recall_floor":$floor%.3f,"ivf_sweep":$sweepJson""" +
-        f""","ivf_sweep_clustered":$cSweepJson,"ivf_clustered_floor":0.8"""
-    }
-    fragments += ivfPart; flushDetail()
-
-    // 10× scale pass (driver-recorded sf1 numbers). The r10 driver artifact
-    // budget-skipped this pass because the old gate estimated it at 6× the
-    // base pass (1405 s) when the measured cost is ScaleUp ~7 s + ~2.3×
-    // base (sf1 n=1 ≈ 354 s vs base 156 s in the committed n=3 record) —
-    // so the pass now (a) gates only on a small FLOOR (scale-up + a few
-    // heavy queries), (b) runs the queries HEAVIEST-FIRST by measured
-    // base-pass seconds, and (c) lets the deadline stop the loop cleanly:
-    // a tight window degrades to an explicitly-recorded heavy-query SUBSET
-    // (sf1_coverage/sf1_skipped) instead of an all-or-nothing skip. A
-    // reserve slice keeps the later evidence passes (storage/bpe/skew/...)
-    // alive when the window is large, but never squeezes a small window —
-    // sf1 is the top evidence priority (judge r10 item 1).
-    val sf1Runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "1").toInt)
-    var sf1TotalPart = ""
-    val scalePart = passIf("sf1_scale", 90, "SPARK_GRAFT_SCALE_SF1") {
-      val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      val tScale0 = System.nanoTime()
-      graft.tools.ScaleUp.run(spark, sfDir, sf1Dir, factor = 10)
-      val scaleSec = (System.nanoTime() - tScale0) / 1e9
-      val reserve = math.min(
-        sys.env.getOrElse("SPARK_GRAFT_SF1_RESERVE_SEC", "240").toDouble,
-        remainingSec * 0.25)
-      val sf1Deadline = math.min(deadlineNanos,
-        System.nanoTime() + ((remainingSec - reserve) * 1e9).toLong)
-      startPhase("sf1")
-      val baseCost = results.toMap
-      val (sf1Medians, sf1Samples) =
-        timeMedians(spark, sf1Dir, sf1Runs, perQueryTimeoutSec, sf1Deadline,
-          snapshot, () => resetRun(), costHint = Some(baseCost))
-      val sf1Total = sf1Medians.map(_._2).sum
-      val doneNames = sf1Medians.map(_._1).toSet
-      val sf1Skipped = results.map(_._1).filterNot(doneNames)
-      val coverage = if (sf1Skipped.isEmpty) "full" else "subset"
-      // the five queries the r6 audit flagged as superlinear-looking get
-      // their medians into the COMPACT driver line (plus totals); the
-      // full median map + every raw run goes to the detail file
-      val audit = Seq("q_dedup_substring", "q_dedup_url", "q_dedup_cosine",
-        "q_pagerank", "q_assoc_pairs")
-      val auditPart = sf1Medians.filter { case (n, _) => audit.contains(n) }
-      val runsJson = sf1Samples.map(s => toJsonMap(s)).mkString("[", ",", "]")
-      val subsetPart =
-        f""","sf1_done":${doneNames.size},"sf1_coverage":"$coverage","sf1_order":"desc_base_cost""""
-      sf1TotalPart =
-        f""","sf1_total":$sf1Total%.3f,"sf1_runs":$sf1Runs$subsetPart,"sf1_medians":${toJsonMap(auditPart)}"""
-      f""","sf1_total":$sf1Total%.3f,"sf1_runs":$sf1Runs$subsetPart,"sf1_skipped":${jsonStrArr(sf1Skipped)},"sf1_scaleup_sec":$scaleSec%.3f,"sf1_medians":${toJsonMap(sf1Medians)},"sf1_runs_detail":$runsJson"""
-    }
-    fragments += scalePart; flushDetail()
-
-    // partitioned-storage pass: the 100 TB scan-avoidance lever, measured in
-    // the recorded bench rather than claimed from plan asserts — the same
-    // within() polygon query over (a) gh_prefix directory-partitioned and
-    // (b) naive unsorted parquet of the same synthetic point table. The gap
-    // is what geohash partition pruning + sorted row-group stats buy.
-    val storagePart = passIf("storage", 120, "SPARK_GRAFT_STORAGE") {
-      val n = sys.env.getOrElse("SPARK_GRAFT_STORAGE_N", "2000000").toLong
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val pts = graft.api.Gis.bulkIngest(spark, n, -76.0, -75.0, 44.0, 45.0)
-      val partPath = "/tmp/graft_store_part"
-      val flatPath = "/tmp/graft_store_flat"
-      // prefixLen 4 ≈ 0.35°×0.18° cells: the 1°×1° synthetic bbox splits
-      // into ~20 directories, so the polygon's prefix set prunes most of
-      // them (len 3 would give this bbox only ~4 dirs — nothing to skip)
-      val (_, wPart) = timed(
-        graft.api.Gis.writePointsPartitioned(pts, partPath, prefixLen = 4))
-      val (_, wFlat) = timed(pts.write.mode("overwrite").parquet(flatPath))
-      val poly = "POLYGON ((-75.52 44.42, -75.44 44.42, -75.44 44.36, " +
-        "-75.52 44.36, -75.52 44.42))"
-      // run count() through an aggregate whose QueryExecution we keep, so
-      // the scan node's files/bytes metrics (the actual scan-avoidance
-      // won by partition pruning) land in the bench JSON, not just seconds
-      def runWithin(path: String): (Long, Double, Long, Long) = {
-        val agg = graft.api.Gis.within(spark.read.parquet(path), poly).groupBy().count()
-        val (m, sec) = timed(agg.head().getLong(0))
-        val finalPlan = agg.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case p => p
-        }
-        // planning-time listing with the partition filters applied — the
-        // deterministic "files/bytes the pruned scan actually touches"
-        val (files, bytes) = finalPlan.collectLeaves().collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            val sel = f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            (sel.map(_.files.size).sum.toLong,
-              sel.flatMap(_.files).map(_.getLen).sum)
-        }.getOrElse((-1L, -1L))
-        (m, sec, files, bytes)
-      }
-      val (mPart, qPart, fPart, bPart) = runWithin(partPath)
-      val (mFlat, qFlat, fFlat, bFlat) = runWithin(flatPath)
-      require(mPart == mFlat, s"layout changed results: $mPart vs $mFlat")
-      f""","storage":{"rows":$n,"write_part_sec":$wPart%.3f,"write_flat_sec":$wFlat%.3f,"within_part_sec":$qPart%.3f,"within_flat_sec":$qFlat%.3f,"files_part":$fPart,"files_flat":$fFlat,"bytes_part":$bPart,"bytes_flat":$bFlat,"matched":$mPart}"""
-    }
-    fragments += storagePart; flushDetail()
-
-    // ANN-storage pass: the embedding analog of the geo storage block —
-    // same top-k through the lsh_bucket-partitioned layout vs a flat scan,
-    // recording seconds AND files touched, so the "bucket predicate becomes
-    // directory pruning" claim is a measured number in the record.
-    val annStoragePart = passIf("ann_storage", 90, "SPARK_GRAFT_ANN_STORAGE") {
-      import org.apache.spark.sql.functions.{col, input_file_name}
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val embs = graft.sources.Tables.table(spark, sfDir, "embeddings")
-      val path = "/tmp/graft_emb_bucketed"
-      val (_, wSec) = timed(
-        graft.pipeline.Similarity.writeEmbeddingsBucketed(embs, path, planes = 6))
-      val q = embs.filter(col("vec_id") === 0L).select("embedding").head()
-        .getSeq[Float](0).toArray
-      val (storedIds, sSec) = timed(
-        graft.pipeline.Similarity.cosineTopKLshStored(spark, path, q, 10, planes = 6)
-          .collect().map(_.getLong(0)).toSet)
-      val (bruteIds, bSec) = timed(
-        graft.pipeline.Similarity.cosineTopK(spark.read.parquet(path), q, 10)
-          .collect().map(_.getLong(0)).toSet)
-      val all = spark.read.parquet(path)
-      val filesAll = all.select(input_file_name()).distinct().count()
-      val qb = org.apache.spark.sql.graft.VecOps.signBucket(
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(q), 6, 42L)
-      val filesPruned = all.filter(col("lsh_bucket") === qb)
-        .select(input_file_name()).distinct().count()
-      val overlap = storedIds.intersect(bruteIds).size
-      f""","ann_storage":{"write_sec":$wSec%.3f,"topk_stored_sec":$sSec%.3f,"topk_flat_sec":$bSec%.3f,"files_total":$filesAll,"files_one_bucket":$filesPruned,"overlap_of_10":$overlap}"""
-    }
-    fragments += annStoragePart; flushDetail()
-
-    // BPE pass: train a merges table on the bench corpus, then count
-    // tokens with it — the tokenizer loop (train → broadcast → count)
-    // measured end-to-end in the official record, not just gate-checked
-    // at fixture scale. Histogram collect is vocabulary-bounded; the
-    // count pass is a stateless scan.
-    val bpePart = passIf("bpe", 90, "SPARK_GRAFT_BPE") {
-      import org.apache.spark.sql.functions.{col, sum}
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-      val (merges, trainSec) = timed(
-        graft.pipeline.TextAnalysis.trainBpe(docs, numMerges = 200))
-      val st = graft.pipeline.TextAnalysis.bpeState(spark, merges)
-      val (tokens, countSec) = timed(
-        docs.select(graft.pipeline.TextAnalysis.tokenCountBpe(col("text"), st)
-          .cast("long").as("n"))
-          .agg(sum(col("n"))).head().getLong(0))
-      f""","bpe":{"merges":${merges.length},"train_sec":$trainSec%.3f,"count_sec":$countSec%.3f,"tokens":$tokens}"""
-    }
-    fragments += bpePart; flushDetail()
-
-    // incremental-dedup pass: the amortization claim as a measured number —
-    // the corpus index is built ONCE (the lake-compaction-cadence cost),
-    // then an arriving batch pays only the probe. Probe ≪ build is the
-    // whole case for the persisted index vs re-running corpus dedup.
-    val incrementalPart = passIf("incremental", 90, "SPARK_GRAFT_INCREMENTAL") {
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-      val path = "/tmp/graft_bench_mh_index"
-      val (_, wSec) = timed(graft.pipeline.Dedup.writeMinhashIndex(docs, path))
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      // min-of-2 probes: at bench scale the first pays codegen/jit for
-      // the whole probe pipeline; the warm number is the per-arriving-
-      // batch marginal cost the amortization case is about (probe scales
-      // with |batch|, the build with |corpus| — report both row counts
-      // so the ratio is readable)
-      val (nPairs, p1) = timed(
-        graft.pipeline.Dedup.dedupAgainstIndex(spark, path, batch, docs).count())
-      val (_, p2) = timed(
-        graft.pipeline.Dedup.dedupAgainstIndex(spark, path, batch, docs).count())
-      val corpusRows = graft.sources.Tables.rowCount(spark, sfDir, "documents")
-      val batchRows = corpusRows / 10
-      f""","incremental":{"index_write_sec":$wSec%.3f,"probe_sec":${math.min(p1, p2)}%.3f,"pairs":$nPairs,"corpus_rows":$corpusRows,"batch_rows":$batchRows}"""
-    }
-    fragments += incrementalPart; flushDetail()
-
-    // token-shard pass: the trainer hand-off writer measured — write time,
-    // shard count, and the planning-time file pruning a single-shard read
-    // gets from the directory layout (the consumer-side claim as numbers).
-    val shardsPart = passIf("shards", 60, "SPARK_GRAFT_SHARDS") {
-      import org.apache.spark.sql.functions.{col, input_file_name}
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-        .filter(col("text").isNotNull)
-      val path = "/tmp/graft_bench_shards"
-      val budget = sys.env.getOrElse("SPARK_GRAFT_SHARD_TOKENS", "5000").toLong
-      val (_, wSec) = timed(
-        graft.pipeline.TextAnalysis.writeTokenShards(docs, path, budget))
-      val back = spark.read.parquet(path)
-      val shards = back.select(col("source"), col("pack_id")).distinct()
-      val nShards = shards.count()
-      val filesAll = back.select(input_file_name()).distinct().count()
-      val first = shards.orderBy(col("source"), col("pack_id")).head()
-      val filesOne = back
-        .filter(col("source") === first.getString(0) && col("pack_id") === first.get(1))
-        .select(input_file_name()).distinct().count()
-      f""","shards":{"budget_tokens":$budget,"write_sec":$wSec%.3f,"n_shards":$nShards,"files_total":$filesAll,"files_one_shard":$filesOne}"""
-    }
-    fragments += shardsPart; flushDetail()
-
-    // skew pass: a hot-key corpus (one user owns half of all rows — the
-    // worst case for Window.partitionBy) timed through the unsalted vs
-    // salted window operators, so the salted twins' payoff is a
-    // driver-recorded number, not a side-tool claim. Counts must agree —
-    // the salted paths are exact rewrites, benched only when equal.
-    val skewPart = passIf("skew", 120, "SPARK_GRAFT_SKEW") {
-      import org.apache.spark.sql.functions._
-      val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_N", "8000000").toLong
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val ev = spark.range(rows).select(
-        col("id").as("event_id"),
-        when(col("id") < rows / 2, 0L)
-          .otherwise(pmod(hash(col("id")), lit(100000)).cast("long")).as("user_id"),
-        timestamp_micros(lit(1700000000000000L) +
-          pmod(hash(col("id"), lit(7)), lit(86400000L)) * 1000L).as("ts"),
-        when(pmod(col("id"), lit(5)) === 0, "error").otherwise("click")
-          .as("event_type")).cache()
-      ev.count()
-      val (nS, sessPlain) = timed(
-        graft.streaming.EventStreams.sessionizeBatch(ev, 60000L).count())
-      val (nSs, sessSalted) = timed(
-        graft.streaming.EventStreams.sessionizeBatchSalted(ev, 60000L).count())
-      require(nS == nSs, s"salted sessionize diverged: $nS vs $nSs")
-      val e = ev.withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), col("ts_ms"))
-      val clicks = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts_ms"))
-        .agg(max(col("event_id")).as("event_id"))
-      val (nA, asofPlain) = timed(graft.api.AsofJoin.asofJoin(errors, clicks,
-        keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
-        rightPayload = Seq("event_id"), rightIdCol = "event_id").count())
-      val (nAs, asofSalted) = timed(graft.api.AsofJoin.asofJoinSalted(errors, clicks,
-        keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
-        rightPayload = Seq("event_id"), rightIdCol = "event_id").count())
-      require(nA == nAs, s"salted asof diverged: $nA vs $nAs")
-      ev.unpersist()
-      f""","skew":{"rows":$rows,"hot_share":0.5,"sessionize_sec":$sessPlain%.3f,"sessionize_salted_sec":$sessSalted%.3f,"asof_sec":$asofPlain%.3f,"asof_salted_sec":$asofSalted%.3f}"""
-    }
-    fragments += skewPart; flushDetail()
-
-    // base RERUN pass (r11 judge item 8): when the window still has room
-    // after every evidence pass, spend the slack on a SECOND full
-    // base-scale run so the driver record carries its own variance
-    // evidence — the committed medians/spread merge both runs, and the
-    // first-pass raw samples stay in runs_detail either way. Runs LAST so
-    // it can never squeeze sf1 or the evidence passes.
-    val rerunPart = passIf("base_rerun",
-      math.max(150.0, total * 1.3), "SPARK_GRAFT_BASE_RERUN") {
-      startPhase("sf_base_rerun")
-      val (rerunMeds, rerunSamples) =
-        timeMedians(spark, sfDir, 1, perQueryTimeoutSec, deadlineNanos,
-          snapshot, () => resetRun())
-      baseSamples = baseSamples ++ rerunSamples
-      val byName = baseSamples.map(_.toMap)
-      results = results.map(_._1).map(n => n -> median(byName.flatMap(_.get(n))))
-      total = results.map(_._2).sum
-      baseRunsEff = baseSamples.size
-      fragments(baseFragmentIdx) = baseFragment()
-      f""","base_rerun_total":${rerunMeds.map(_._2).sum}%.3f"""
-    }
-    fragments += rerunPart; flushDetail()
-
-    // drift index, point 3 of 3 (end) + the recorded block: same-code
-    // sf0.1 totals have moved 29% between marathons (r11 ROUND_NOTES), so
-    // the record now carries the host-speed ratio at start/middle/end —
-    // cross-round comparisons divide by this before calling a move a
-    // regression (r11 judge item 3)
-    val calibEnd = calibSec(spark)
-    val calibs = Seq(calibStart, calibMid, calibEnd)
-    val driftMaxRatio = calibs.max / math.max(1e-9, calibs.min)
-    fragments += f""","drift":{"calib_query":"range200m_xxhash64_sum_median_of_3","calib_sec":[$calibStart%.3f,$calibMid%.3f,$calibEnd%.3f],"max_ratio":$driftMaxRatio%.3f}"""
-    flushDetail()
-
-    // Three artifacts, one contract: the full detail (per-query sf1,
-    // storage, skew) goes to the side file AND a committed repo copy
-    // (BENCH_DETAIL.json — the machine-readable record the judge can read
-    // whole); the driver's stdout line is printed LAST and SELF-TRUNCATES
-    // to the driver's 2000-char tail-capture window (r5's official record
-    // came back "parsed": null because 129 per-query entries outgrew the
-    // window — the full map now lives in the files, stdout carries the
-    // slowest queries that fit plus the scalar totals).
-    // suppressed bounded-window WARN count: the message-specific mute
-    // (Logs.muteBoundedWindowWarn) reports how many times it fired, so a
-    // future genuinely-unbounded window shows as a count regression in
-    // this committed artifact instead of disappearing into a muted logger
-    val warns = graft.util.Logs.suppressedWindowWarns.get()
-    val uwarns = graft.util.Logs.suppressedUnpersistWarns.get()
-    val elapsed = (System.nanoTime() - startNanos) / 1e9
-    val passesJson =
-      if (skippedPasses.isEmpty) "" else s""","passes_skipped_budget":${jsonStrArr(skippedPasses.toSeq)}"""
-    val detailLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"$flagsJson$passesJson,"window_warns_suppressed":$warns,"unpersist_warns_suppressed":$uwarns,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsed%.1f${doneStr}}"""
-    writeSide(detailLine)
-    // the committed record is replaced only now, atomically, and only when
-    // the new record is at least as rich — see [[commitDetail]]
-    if (only.isEmpty && commitDetail(detailPath, detailLine))
-      scala.util.Try(java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(detailPath + ".partial")))
-    val tailBudget = 1900 // driver tail capture is 2000 chars; leave margin
-    val flagsCompact =
-      s""","n_timeouts":${timedOutQ.size},"n_failures":${failedQ.size},"n_skipped":$skippedCount""" +
-        f""","drift_max_ratio":$driftMaxRatio%.3f"""
-    // self-describing stdout cut: the per-query map keeps the SLOWEST
-    // queries that fit the tail budget — an omitted query is a fast one,
-    // never missing coverage; the full map is in the detail file
-    val omitRule =
-      s""","omit_rule":"stdout keeps slowest queries that fit $tailBudget chars; all ${results.length} in detail_file""""
-    val fixedTail = f""","sf":"$sfDir"$ivfPart$sf1TotalPart$flagsCompact,"window_warns_suppressed":$warns,"unpersist_warns_suppressed":$uwarns,"queries_omitted":000$omitRule,"detail_file":"BENCH_DETAIL.json"}"""
-    val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$baseRunsEff,"n_queries":${results.length},"queries":{"""
-    var room = tailBudget - head.length - fixedTail.length
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    results.sortBy(-_._2).foreach { case (k, v) =>
-      val entry = "\"" + k + f"\":$v%.3f" // +1 for the comma
-      if (entry.length + 1 <= room) { kept += ((k, v)); room -= entry.length + 1 }
-    }
-    val driverLine = head +
-      kept.sortBy(_._1).map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString(",") +
-      "}" + f""","sf":"$sfDir"$ivfPart$sf1TotalPart$flagsCompact,"window_warns_suppressed":$warns,"unpersist_warns_suppressed":$uwarns,"queries_omitted":${results.length - kept.length}$omitRule,"detail_file":"BENCH_DETAIL.json"}"""
-    println(driverLine)
-    spark.stop()
   }
 }

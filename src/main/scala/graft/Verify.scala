@@ -24,12 +24,7 @@ object Verify {
             new java.io.File(s"$outDir/$name"))
           Some(name)
         }
-      // free each query's localCheckpoint/cache blocks immediately: in a
-      // 170-query run, waiting for the ContextCleaner's weak-ref GC let
-      // block-manager residue accumulate (the Bench marathon lesson)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Session.release(spark)
       failure
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(

@@ -2,7 +2,7 @@ package graft.api
 
 import graft.geo.GeohashPruning
 import graft.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -394,27 +394,5 @@ object Gis {
       .agg(agg.as("__topn"))
       .select(col(groupCol), explode(col("__topn")).as("__p"))
       .select(col(groupCol), col("__p.ord").as(ordCol), col("__p.id").as(idCol))
-  }
-
-  /**
-   * Bounded-memory grouped top-N (the reference's MinMaxPriorityQueue
-   * admission property, TopXEndpoint.java:90-96): per-group heap of size n,
-   * never materializing a whole group. Use when single groups are huge and
-   * the window sort would spill.
-   */
-  def topXBounded[T](ds: Dataset[T], key: T => String, ts: T => Long, n: Int)
-                    (implicit enc: Encoder[T]): Dataset[T] = {
-    ds.groupByKey(key)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroups { (_, it) =>
-        // max-heap on ts: evict the largest once size exceeds n
-        val heap = scala.collection.mutable.PriorityQueue.empty[(Long, T)](
-          Ordering.by[(Long, T), Long](_._1))
-        it.foreach { t =>
-          val tsv = ts(t)
-          if (heap.size < n) heap.enqueue((tsv, t))
-          else if (tsv < heap.head._1) { heap.dequeue(); heap.enqueue((tsv, t)) }
-        }
-        heap.iterator.map(_._2).toList.iterator
-      }
   }
 }

@@ -4,7 +4,7 @@ package gates
 import graft.pipeline.EventAnalytics
 import graft.sources.Tables
 import graft.streaming.EventStreams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Event-stream and time-series gates: as-of joins, streaming windows,
@@ -41,9 +41,8 @@ object EventsGates {
   /** The as-of fixture over events with epoch-ms `ts_ms`: error events
     * (the left side) and clicks collapsed to the latest event_id per
     * (user, ms) (the right side). */
-  private def errorsAndClicks(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e = Tables.table(s, d, "events")
-      .withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
+  private[graft] def errorsAndClicks(events: DataFrame): (DataFrame, DataFrame) = {
+    val e = events.withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
     val errors = e.filter(col("event_type") === "error")
       .select(col("user_id"), col("event_id"), col("ts_ms"))
     val clicks = e.filter(col("event_type") === "click")
@@ -66,7 +65,7 @@ object EventsGates {
     // as-of join: each error event → the latest click by the same user at or
     // before it (union-merge implementation, one shuffle)
     Gate("q_join_asof", (s, d) => {
-      val (errors, clicks) = errorsAndClicks(s, d)
+      val (errors, clicks) = errorsAndClicks(Tables.table(s, d, "events"))
       graft.api.AsofJoin.asofJoin(errors, clicks,
         keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
         rightPayload = Seq("event_id"), rightIdCol = "event_id")
@@ -80,7 +79,7 @@ object EventsGates {
     // tolerance splits matches near the middle at every scale; 60 s kept
     // almost nothing) — stale matches drop (inner)
     Gate("q_join_asof_tol", (s, d) => {
-      val (errors, clicks) = errorsAndClicks(s, d)
+      val (errors, clicks) = errorsAndClicks(Tables.table(s, d, "events"))
       graft.api.AsofJoin.asofJoinTolerance(errors, clicks,
         keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
         rightPayload = Seq("event_id"), rightIdCol = "event_id",
@@ -301,7 +300,7 @@ object EventsGates {
     // q_join_asof / q_sessionize via (key, time-bucket) salting — see
     // AsofJoin.asofJoinSalted / EventStreams.sessionizeBatchSalted
     Gate("q_join_asof_salted", (s, d) => {
-      val (errors, clicks) = errorsAndClicks(s, d)
+      val (errors, clicks) = errorsAndClicks(Tables.table(s, d, "events"))
       graft.api.AsofJoin.asofJoinSalted(errors, clicks,
         keyCol = "user_id", leftTsCol = "ts_ms", rightTsCol = "ts_ms",
         rightPayload = Seq("event_id"), rightIdCol = "event_id")

@@ -18,8 +18,8 @@ object Gate {
   }
 
   /** SPARK_GRAFT_ONLY=q_a,q_b: the gates Bench and Verify restrict a run
-    * to, for focused iteration on a few gates; None (every gate) when
-    * unset. */
+    * to (Bench's evidence entries are selected by name the same way), for
+    * focused iteration; None (everything) when unset. */
   def only: Option[Set[String]] =
     sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
 }

@@ -32,8 +32,9 @@ object ScaleUp {
     spark.stop()
   }
 
-  /** Reusable scale-up body — also called in-session by [[graft.Bench]] so
-    * the sf1 numbers are produced inside the driver-recorded bench run. */
+  /** Reusable scale-up body — also called in-session by [[graft.Bench]],
+    * which writes the copy into its run's temp directory and times every
+    * gate on it (the record's `sf1_*` keys). */
   def run(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
     // events.parquet has shipped as TIMESTAMP(NANOS) int64 and as plain
     // micros TIMESTAMP_NTZ; nanosAsLong lets the legacy layout load, and

@@ -1,116 +1,91 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import graft.Bench.Entry
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
-/** The bench harness degradation contract (judge r9 items 1+4): a
-  * pathological query must cost ONE flagged row, never the artifact —
-  * BENCH_r09.json came back rc=124/parsed=null because the suite had no
-  * per-query timeout and no wall-clock budget. These tests drive
-  * [[Bench.runTimed]] directly with an injected never-finishing query. */
+/** The bench loop's contract: every entry is timed n times in rotated
+  * order, a throwing entry is named in `failures` without stopping the
+  * run, the record carries the keys `tools/compare_bench.py` reads, and
+  * the run's scratch directory is gone afterwards, thrown or not. */
 class BenchHarnessSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+  private val SfDir = "/root/testdata/sf0.001"
 
-  private def fast(n: String): (String, () => Unit) =
-    n -> (() => { spark.range(1000).count(); () })
+  private def fast(name: String, ran: ArrayBuffer[String]): Entry =
+    Entry(name, () => { spark.range(1000).count(); ran += name; JObject() })
 
-  /** A query whose tasks sleep far beyond the timeout: only a job-group
-    * cancel (interrupt-on-cancel) can stop it. */
-  private def slow(n: String): (String, () => Unit) =
-    n -> (() => {
-      import spark.implicits._
-      spark.range(4).mapPartitions { it =>
-        Thread.sleep(120000); it
-      }.count()
-      ()
-    })
+  private val boom = Entry("q_boom", () => throw new RuntimeException("boom"))
 
-  test("a slow query is cancelled at the per-query timeout and the suite completes") {
-    spark.range(1000).count() // warmup, as Bench.main does — a cold first
-    // job can legitimately exceed a tight 2 s timeout and get flagged
-    val t0 = System.nanoTime()
-    val (results, skipped) = Bench.runTimed(spark,
-      Seq(fast("q_fast1"), slow("q_slow"), fast("q_fast2")),
-      perQueryTimeoutSec = 2.0,
-      deadlineNanos = System.nanoTime() + 600L * 1000 * 1000 * 1000)
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    assert(results.map(_.name) === Seq("q_fast1", "q_slow", "q_fast2"))
-    assert(skipped === 0)
-    val bad = results.find(_.name == "q_slow").get
-    assert(bad.timedOut, "slow query must be flagged timedOut")
-    assert(!results.find(_.name == "q_fast1").get.timedOut)
-    assert(!results.find(_.name == "q_fast2").get.timedOut)
-    assert(!results.find(_.name == "q_fast2").get.failed,
-      "queries after a cancelled one must still run clean")
-    // the 120 s sleep must NOT be waited out: cancel lands ~2 s in
-    assert(wallSec < 60, f"suite took $wallSec%.1f s — watchdog did not fire")
+  /** Writes under the scratch directory and records one field. */
+  private def writer(scratch: Path): Entry = Entry("ev_write", () => {
+    spark.range(10).write.mode("overwrite").parquet(scratch.resolve("w").toString)
+    JObject("rows" -> JInt(10))
+  })
+
+  test("a throwing entry is named in failures and later entries still run clean") {
+    val ran = ArrayBuffer.empty[String]
+    val t = Bench.timeAll(spark, Seq(fast("q_a", ran), boom, fast("q_b", ran)), 1)
+    assert(t.failures == Seq("q_boom"))
+    assert(ran.toSeq == Seq("q_a", "q_b"))
+    assert(t.runs.map(_.map(_._1)) == Seq(Seq("q_a", "q_boom", "q_b")))
   }
 
-  test("the global deadline stops the loop cleanly and reports skips") {
-    val (results, skipped) = Bench.runTimed(spark,
-      Seq(fast("q_a"), fast("q_b"), fast("q_c")),
-      perQueryTimeoutSec = 60.0,
-      deadlineNanos = System.nanoTime() - 1L) // already expired
-    assert(results.isEmpty)
-    assert(skipped === 3)
+  test("with n = 3 every entry is timed 3 times, in rotated order") {
+    val ran = ArrayBuffer.empty[String]
+    val t = Bench.timeAll(spark, Seq("q_a", "q_b", "q_c").map(fast(_, ran)), 3)
+    val rotated = Seq(Seq("q_a", "q_b", "q_c"), Seq("q_b", "q_c", "q_a"), Seq("q_c", "q_a", "q_b"))
+    assert(t.runs.map(_.map(_._1)) == rotated)
+    assert(ran.toSeq == rotated.flatten)
+    assert(t.runs.flatten.forall(_._2 > 0) && t.failures.isEmpty)
   }
 
-  test("a failing query is flagged failed (not timedOut) and the suite continues") {
-    val boom = "q_boom" -> (() => { throw new RuntimeException("boom"); () })
-    val (results, skipped) = Bench.runTimed(spark,
-      Seq(fast("q_a"), boom, fast("q_b")),
-      perQueryTimeoutSec = 60.0,
-      deadlineNanos = System.nanoTime() + 600L * 1000 * 1000 * 1000)
-    assert(skipped === 0)
-    val bad = results.find(_.name == "q_boom").get
-    assert(bad.failed && !bad.timedOut)
-    assert(!results.find(_.name == "q_b").get.failed)
+  /** One n = 2 run with the sf1 pass on: a table-reading gate and a
+    * throwing one per data directory, plus one evidence entry. Yields the
+    * parsed record, the failures, the scratch directory and the sf1 dir. */
+  private lazy val (record, failures, scratch, sf1Dir) = {
+    val dirs = ArrayBuffer.empty[String]
+    var seen: Option[Path] = None
+    val gates = (dir: String) => {
+      dirs += dir
+      Seq(Entry("q_orders", () => { graft.sources.Tables.table(spark, dir, "orders").count(); JObject() }), boom)
+    }
+    val (r, f) = Bench.run(spark, SfDir, 2, sf1 = true, gates,
+      s => { seen = Some(s); Seq(writer(s)) })
+    (parse(compact(render(r))), f, seen.get, dirs.last)
   }
 
-  test("onDone fires once per completed query (the incremental-flush hook)") {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    Bench.runTimed(spark, Seq(fast("q_a"), fast("q_b")),
-      perQueryTimeoutSec = 60.0,
-      deadlineNanos = System.nanoTime() + 600L * 1000 * 1000 * 1000,
-      onDone = r => seen += r.name)
-    assert(seen.toSeq === Seq("q_a", "q_b"))
+  test("the record parses with json4s and carries the keys compare_bench.py reads") {
+    def names(v: JValue): Set[String] = v match {
+      case JObject(fs) => fs.map(_._1).toSet
+      case other => fail(s"not an object: $other")
+    }
+    assert(names(record \ "queries") == Set("q_orders", "q_boom", "ev_write"))
+    assert(record \ "runs" == JInt(2))
+    val JArray(detail) = record \ "runs_detail"
+    assert(detail.size == 2 && detail.forall(names(_) == Set("q_orders", "q_boom", "ev_write")))
+    val JObject(spread) = record \ "queries_spread"
+    spread.foreach { case (_, JArray(List(JDouble(lo), JDouble(med), JDouble(hi)))) =>
+      assert(lo <= med && med <= hi)
+    case other => fail(s"bad spread $other") }
+    assert(record \ "sf1_runs" == JInt(2))
+    assert(names(record \ "sf1_medians") == Set("q_orders", "q_boom"))
+    val JArray(calib) = record \ "drift" \ "calib_sec"
+    assert(calib.size == 3 && calib.forall { case JDouble(s) => s > 0; case _ => false })
+    assert(record \ "failures" == JArray(List(JString("q_boom"))))
+    assert(record \ "ev_write" \ "rows" == JInt(10))
   }
 
-  // ---- committed-record clobber guard (judge r10 item 4): a smaller run
-  // must never shrink the committed BENCH_DETAIL.json ----
-
-  private def rec(nq: Int, runs: Int, nSf1: Int, sf1Runs: Int): String = {
-    def qmap(n: Int) = (1 to n).map(i => s""""q_$i":1.0""").mkString("{", ",", "}")
-    s"""{"metric":"total","value":1.0,"runs":$runs,"queries":${qmap(nq)}""" +
-      (if (nSf1 > 0) s""","sf1_runs":$sf1Runs,"sf1_medians":${qmap(nSf1)}""" else "") + "}"
-  }
-
-  test("recordRichness counts base and sf1 samples across runs") {
-    assert(Bench.recordRichness(rec(192, 3, 192, 3)) === 192L * 3 + 192L * 3)
-    assert(Bench.recordRichness(rec(192, 1, 0, 1)) === 192L)
-    assert(Bench.recordRichness("not json at all") === 0L)
-    assert(Bench.recordRichness("") === 0L)
-  }
-
-  test("commitDetail refuses to replace a richer record and preserves both") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-guard")
-    val path = dir.resolve("BENCH_DETAIL.json").toString
-    val rich = rec(10, 3, 10, 3)
-    val poor = rec(10, 1, 0, 1)
-    assert(Bench.commitDetail(path, rich), "fresh commit must succeed")
-    assert(!Bench.commitDetail(path, poor),
-      "an n=1 one-scale record must not replace an n=3 two-scale record")
-    val kept = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-    assert(kept.trim === rich, "committed record must be unchanged")
-    val cand = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path + ".candidate")), "UTF-8")
-    assert(cand.trim === poor, "rejected record must be preserved at .candidate")
-    // an equally-or-more rich record replaces (tmp file must not linger)
-    val richer = rec(12, 3, 12, 3)
-    assert(Bench.commitDetail(path, richer))
-    val now = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-    assert(now.trim === richer)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".tmp")))
+  test("the scratch directory is gone after a run, including one where an entry throws") {
+    assert(failures == Seq("q_boom"))
+    assert(sf1Dir.startsWith(scratch.toString))
+    assert(!Files.exists(scratch), s"$scratch left behind")
+    var seen: Option[Path] = None
+    val (_, clean) = Bench.run(spark, SfDir, 1, sf1 = false, _ => Nil,
+      s => { seen = Some(s); Seq(writer(s)) })
+    assert(clean.isEmpty && seen.nonEmpty && !Files.exists(seen.get))
   }
 }

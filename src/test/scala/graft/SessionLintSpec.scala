@@ -4,20 +4,38 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Every main and the tests build their session through [[Session]]: a
-  * second `SparkSession.builder` under src/main would let settings drift
-  * apart again. */
+/** Source lints over src/main. Every main and the tests build their
+  * session through [[Session]]: a second `SparkSession.builder` would let
+  * settings drift apart again. Every `SPARK_GRAFT_*` knob is one more
+  * configuration to cover, so adding one is a deliberate edit here. */
 class SessionLintSpec extends AnyFunSuite {
-  test("SparkSession.builder appears only in the session factory") {
+
+  /** (path relative to src/main/scala, contents) of every Scala source. */
+  private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")
     val walk = Files.walk(root)
-    val builders =
-      try walk.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally walk.close()
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("SparkSession.builder appears only in the session factory") {
+    val builders = sources.collect { case (p, s) if s.contains("SparkSession.builder") => p }
     assert(builders == Seq("graft/Session.scala"))
+  }
+
+  test("src/main reads exactly the listed SPARK_GRAFT_* knobs") {
+    val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val found = sources.flatMap { case (_, s) => knob.findAllIn(s) }.toSet
+    assert(found == Set(
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", // Session
+      "SPARK_GRAFT_ONLY", // Gate.only: Bench and Verify
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_SF1", // Bench
+      "SPARK_GRAFT_DUMP", // RunQuery
+      "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_PLAN_TAG", "SPARK_GRAFT_PROFILE_RUNS", // ProfileQ
+      "SPARK_GRAFT_GRAPH_BCAST_MAX", // Graph
+      "SPARK_GRAFT_SCATTER_MAX_BYTES", "SPARK_GRAFT_SCATTER_MIN_BYTES")) // Tables
   }
 }

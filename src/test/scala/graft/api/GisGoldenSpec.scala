@@ -139,16 +139,6 @@ class GisGoldenSpec extends AnyFunSuite {
     assert(all.filter($"pu_id" === 68).count() == 141) // TestTopX.java:146-152
   }
 
-  test("topX: bounded-heap variant matches window variant per group") {
-    val ds = events.select($"user_id", $"ts_ms").as[(Long, Long)]
-    val bounded = Gis.topXBounded[(Long, Long)](ds, t => t._1.toString, _._2, 2)
-    // same multiset of (group, ts)
-    val a = bounded.collect().sorted
-    val b = Gis.topX(events, "user_id", "ts_ms", 2)
-      .select($"user_id", $"ts_ms").as[(Long, Long)].collect().sorted
-    assert(a.nonEmpty && a.sameElements(b))
-  }
-
   test("topXAgg (bounded-heap aggregate) == window topX on events") {
     val win = Gis.topX(events, "user_id", "ts_ms", 3, tieBreak = Seq("event_id"))
       .select($"user_id", $"ts_ms", $"event_id").as[(Long, Long, Long)].collect().sorted
