@@ -1379,59 +1379,37 @@ object Dedup {
    * The convergence check rides the label-update job itself
    * (`Dataset.observe` counts changed labels while the cache
    * materializes), so each round is exactly ONE action and no extra probe
-   * join.
+   * join. A pair list of at most `driverMaxEdges` rows (default
+   * [[DriverPath.DriverMaxEdges]]; 0 sends any non-empty list to the
+   * loop) is labeled on the driver by union-find instead, with the same
+   * labels.
    *
    * Throws if `maxIter` rounds pass without convergence (returning
    * unconverged labels would silently split true clusters).
    */
   def clusters(pairs: DataFrame, maxIter: Int = 12,
-               driverMaxEdges: Long = 2000000L,
+               driverMaxEdges: Long = DriverPath.DriverMaxEdges,
                doublingEagerEdges: Long = 50000000L,
                checkpointDir: Option[String] = None): DataFrame = {
     // cache the directed pairs FIRST: the union below references the pairs
     // plan twice, and without this the (possibly expensive — e.g. a full
     // LSH pipeline) upstream would execute once per branch
     val directed = pairs.select(col("id_a").cast("long"), col("id_b").cast("long")).cache()
+    // a pair list of at most driverMaxEdges rows is labeled on the driver
+    // by union-find ([[DriverPath]]): the same min-id labeling, without
+    // the per-round jobs of the distributed loop below
+    val nDirected = DriverPath.collectUnder(directed, driverMaxEdges) match {
+      case Right(cols) =>
+        DriverPath.release(directed)
+        return DriverPath.frame(pairs.sparkSession, Seq("id", "cluster"),
+          DriverPath.unionFindLabels(cols(0), cols(1)))
+      case Left(n) => n
+    }
     // size-adaptive parallelism: the edge list is orders of magnitude
     // smaller than the corpus (it only holds near-dup PAIRS), so at bench
     // scale the session's shuffle-partition count means ~1k-row tasks of
     // pure scheduling overhead per round. Aim for ~250k edges/partition,
     // floor 4; a 100 TB corpus with billions of pairs still gets thousands.
-    val nDirected = directed.count()
-    // driver fast path: a SMALL edge list (the common case — near-dup pairs
-    // are a vanishing fraction of any curated corpus) pays several
-    // scheduling rounds of pure overhead in the iterative plan, while an
-    // exact union-find over ≤ driverMaxEdges collected pairs (2M edges as
-    // primitive long pairs ≈ 64 MB transient — trivial against any driver
-    // heap, and ~milliseconds of union-find) yields the identical
-    // min-label component labeling. Corpora with more pairs than the cap
-    // take the distributed pointer-doubling loop below unchanged.
-    if (nDirected > 0 && nDirected <= driverMaxEdges) {
-      val edgeRows = {
-        import pairs.sparkSession.implicits._
-        directed.as[(Long, Long)].collect()
-      }
-      directed.unpersist()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
-        r
-      }
-      edgeRows.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        // union by MIN root so the representative is the minimum id —
-        // exactly the distributed loop's fixpoint labeling
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        else { parent.getOrElseUpdate(a, ra); parent.getOrElseUpdate(b, rb) }
-      }
-      val ids = edgeRows.flatMap { case (a, b) => Seq(a, b) }.distinct
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster")
-    }
     val parts = math.max(4, math.min(
       pairs.sparkSession.sessionState.conf.numShufflePartitions,
       (2 * nDirected / 250000 + 1).toInt))
@@ -1456,8 +1434,6 @@ object Dedup {
     var iter = 1
     var lastChanged = Option(obs0.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
     var prevChanged = -1L  // the round before that
-    if (sys.env.contains("GRAFT_CC_LOG"))
-      System.err.println(s"[cc] round 0 (fused init) changed=$lastChanged parts=$parts")
     while (!converged && iter < maxIter) {
       // 1. min label among neighbors (one shuffle over edges), folded into
       //    each node's own label; labels only ever decrease
@@ -1504,12 +1480,9 @@ object Dedup {
         // constant-size; the checkpoint's own job feeds the observation.
         // checkpointDir opts into the fault-tolerant rung (Checkpoints).
         checkpointDir)
-      val t0 = System.nanoTime()
       labels.unpersist()
       labels = next
       val changed = Option(obs.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc] round $iter doubling=$doubling changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
       converged = changed == 0L
       prevChanged = lastChanged
       lastChanged = changed
@@ -1794,7 +1767,7 @@ object Dedup {
 
   def clustersIncremental(labels: DataFrame, newPairs: DataFrame,
                           maxIter: Int = 12,
-                          driverMaxEdges: Long = 2000000L,
+                          driverMaxEdges: Long = DriverPath.DriverMaxEdges,
                           doublingEagerEdges: Long = 50000000L,
                           checkpointDir: Option[String] = None): DataFrame = {
     // materialize the delta ONCE: this plan is referenced three times

@@ -17,6 +17,22 @@ import org.apache.spark.sql.functions._
  * both the per-edge contribution and the damping blend), so a SQL oracle
  * replays every iteration bit-for-bit and results are independent of
  * partitioning and summation order.
+ *
+ * Small graphs run the round-based operators on the driver. The min-fold
+ * family (components, BFS, weighted SSSP, temporal reach and their
+ * converged twins) and the LPA family (labelPropagation and its
+ * converged twin, communityStatsLpa, modularityPermilleLpa) each first
+ * materialize a cleaned edge table: `e` in their setup, or the
+ * canonical pairs for LPA. The gate counts that table right there. At
+ * most [[DriverPath.DriverMaxEdges]] (2M) rows are collected and the
+ * rounds run in primitive arrays ([[DriverPath.MinFold]],
+ * [[DriverPath.Lpa]]), one job each for the count and the collect
+ * instead of several per round. The results match the distributed
+ * rounds exactly: fixed rounds stay fixed, converged twins stop and
+ * throw at the same round, and long overflow throws as ANSI SQL does.
+ * Larger tables run the distributed rounds over the same materialized
+ * table. There is no option for this; tests reach the distributed rounds
+ * through the `private[pipeline]` overloads that take the budget first.
  */
 object Graph {
 
@@ -409,7 +425,14 @@ object Graph {
     * so without truncation the raw edge list is re-scanned per consumer. */
   private def canonDeg(edges: DataFrame, checkpointDir: Option[String])
       : (DataFrame, DataFrame) = {
-    val canon = Checkpoints.materialize(
+    val canon = canonical(edges, checkpointDir)
+    (canon, degrees(canon, checkpointDir))
+  }
+
+  /** The (a, b) half of [[canonDeg]], materialized. */
+  private def canonical(edges: DataFrame,
+                        checkpointDir: Option[String]): DataFrame =
+    Checkpoints.materialize(
       edges.filter(col("src").isNotNull && col("dst").isNotNull)
         .select(
           least(col("src").cast("long"), col("dst").cast("long")).as("a"),
@@ -417,17 +440,18 @@ object Graph {
         .filter(col("a") < col("b"))
         .distinct(),
       checkpointDir)
-    // deg is n-sized and consumed 2-3× by every caller (orientation joins,
-    // LPA self-loops, stats rollups, coefficient denominators) — each
-    // consumer otherwise re-runs the explode+aggregate over the canon
-    // blocks; materialized it is also the free node COUNT the broadcast
-    // budget check reads (r14)
-    val deg = Checkpoints.materialize(
+
+  /** The (n, d) degree half of [[canonDeg]]: deg is n-sized and consumed
+    * 2-3× by every caller (orientation joins, LPA self-loops, stats
+    * rollups, coefficient denominators) — each consumer otherwise re-runs
+    * the explode+aggregate over the canon blocks; materialized it is also
+    * the free node COUNT the broadcast budget check reads. */
+  private def degrees(canon: DataFrame,
+                      checkpointDir: Option[String]): DataFrame =
+    Checkpoints.materialize(
       canon.select(explode(array(col("a"), col("b"))).as("n"))
         .groupBy(col("n")).agg(count(lit(1)).as("d")),
       checkpointDir)
-    (canon, deg)
-  }
 
   def triangleCounts(edges: DataFrame,
                      checkpointDir: Option[String] = None): DataFrame = {
@@ -538,6 +562,38 @@ object Graph {
       .select(col("node"), (-col("m.nl")).as("label"))
   }
 
+  /** The LPA operators' shared canonical pass, behind the driver-path
+    * gate: a canonical edge table of at most `budget` rows is collected
+    * into the driver kernel and freed (Right); a larger one gets its
+    * degree table, the broadcast decision and the vote adjacency (Left). */
+  private def lpaInput(edges: DataFrame, budget: Long,
+                       checkpointDir: Option[String])
+      : Either[LpaGraph, DriverPath.Lpa] = {
+    val canon = canonical(edges, checkpointDir)
+    DriverPath.collectUnder(canon, budget) match {
+      case Right(cols) =>
+        DriverPath.release(canon)
+        Right(new DriverPath.Lpa(cols(0), cols(1),
+          new DriverPath.SqlLong(edges.sparkSession)))
+      case Left(_) =>
+        val deg = degrees(canon, checkpointDir)
+        val bcast = deg.count() <= nodeBroadcastMaxEntries
+        Left(LpaGraph(canon, deg, bcast,
+          lpaAdjacencyFrom(canon, deg, checkpointDir, bcast)))
+    }
+  }
+
+  /** The distributed LPA invariants: [[canonDeg]]'s pair, the broadcast
+    * decision and the vote adjacency. */
+  private case class LpaGraph(canon: DataFrame, deg: DataFrame,
+                              bcast: Boolean, adj: DataFrame)
+
+  /** (node, community) after `iters` distributed rounds. */
+  private def lpaCommunities(g: LpaGraph, iters: Int,
+                             checkpointDir: Option[String]): DataFrame =
+    runLpa(g.adj, iters, checkpointDir, g.bcast)
+      .select(col("node"), col("label").as("community"))
+
   /**
    * Label-propagation community detection (Raghavan et al. '07), the
    * deterministic SYNCHRONOUS variant: labels start as the node ids, and
@@ -554,49 +610,78 @@ object Graph {
    * oscillation damper. Each round is one adjacency join + one (node,
    * label) count shuffle + one per-node window; rounds are checkpointed
    * every 8 to keep plan growth linear (the clusters() lineage lesson).
+   * A canonical edge table of at most [[DriverPath.DriverMaxEdges]] rows
+   * runs its rounds on the driver instead.
    *
    * Output: (node, community) — community = the final label.
    */
   def labelPropagation(edges: DataFrame, iters: Int,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       checkpointDir: Option[String] = None): DataFrame =
+    labelPropagation(DriverPath.DriverMaxEdges, edges, iters, checkpointDir)
+
+  /** [[labelPropagation]] with the driver path's row `budget` (a
+    * negative one forces the distributed rounds). */
+  private[pipeline] def labelPropagation(budget: Long, edges: DataFrame,
+                                         iters: Int,
+                                         checkpointDir: Option[String]): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val (canon, deg) = canonDeg(edges, checkpointDir)
-    val bcast = deg.count() <= nodeBroadcastMaxEntries
-    runLpa(lpaAdjacencyFrom(canon, deg, checkpointDir, bcast), iters,
-        checkpointDir, bcast)
-      .select(col("node"), col("label").as("community"))
+    lpaInput(edges, budget, checkpointDir) match {
+      case Right(k) =>
+        for (_ <- 1 to iters) k.round()
+        DriverPath.frame(edges.sparkSession, Seq("node", "community"), k.labels)
+      case Left(g) => lpaCommunities(g, iters, checkpointDir)
+    }
   }
 
   /** `communityStats(edges, labelPropagation(edges, iters))` with ONE
     * canonical pass: the naive composition re-derives the edge source and
     * the canonical distinct once for the LPA adjacency and once for the
     * stats rollup — here a single [[canonDeg]] feeds both (exact same
-    * rows by construction; the gate's oracle hash is unchanged). */
+    * rows by construction; the gate's oracle hash is unchanged). On the
+    * driver path the rollup runs on the driver too. */
   def communityStatsLpa(edges: DataFrame, iters: Int,
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        checkpointDir: Option[String] = None): DataFrame =
+    communityStatsLpa(DriverPath.DriverMaxEdges, edges, iters, checkpointDir)
+
+  /** [[communityStatsLpa]] with the driver path's row `budget`. */
+  private[pipeline] def communityStatsLpa(budget: Long, edges: DataFrame,
+                                          iters: Int,
+                                          checkpointDir: Option[String]): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val (canon, deg) = canonDeg(edges, checkpointDir)
-    val bcast = deg.count() <= nodeBroadcastMaxEntries
-    val communities =
-      runLpa(lpaAdjacencyFrom(canon, deg, checkpointDir, bcast), iters,
-          checkpointDir, bcast)
-        .select(col("node"), col("label").as("community"))
-    communityStatsFrom(canon, deg, communities, checkpointDir, bcast)
+    lpaInput(edges, budget, checkpointDir) match {
+      case Right(k) =>
+        for (_ <- 1 to iters) k.round()
+        DriverPath.frame(edges.sparkSession,
+          Seq("community", "n_nodes", "degree_sum", "intra_edges"),
+          k.communityStats)
+      case Left(g) =>
+        communityStatsFrom(g.canon, g.deg, lpaCommunities(g, iters, checkpointDir),
+          checkpointDir, g.bcast)
+    }
   }
 
   /** `modularityPermille(edges, labelPropagation(edges, iters))` with ONE
     * canonical pass — the [[communityStatsLpa]] sharing applied to the
     * modularity composite. */
   def modularityPermilleLpa(edges: DataFrame, iters: Int,
-                            checkpointDir: Option[String] = None): DataFrame = {
+                            checkpointDir: Option[String] = None): DataFrame =
+    modularityPermilleLpa(DriverPath.DriverMaxEdges, edges, iters, checkpointDir)
+
+  /** [[modularityPermilleLpa]] with the driver path's row `budget`. */
+  private[pipeline] def modularityPermilleLpa(budget: Long, edges: DataFrame,
+                                              iters: Int,
+                                              checkpointDir: Option[String])
+      : DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val (canon, deg) = canonDeg(edges, checkpointDir)
-    val bcast = deg.count() <= nodeBroadcastMaxEntries
-    val communities =
-      runLpa(lpaAdjacencyFrom(canon, deg, checkpointDir, bcast), iters,
-          checkpointDir, bcast)
-        .select(col("node"), col("label").as("community"))
-    modularityFrom(canon, deg, communities, checkpointDir, bcast)
+    lpaInput(edges, budget, checkpointDir) match {
+      case Right(k) =>
+        for (_ <- 1 to iters) k.round()
+        DriverPath.frame(edges.sparkSession, Seq("m_edges", "q_permille"),
+          k.modularity)
+      case Left(g) =>
+        modularityFrom(g.canon, g.deg, lpaCommunities(g, iters, checkpointDir),
+          checkpointDir, g.bcast)
+    }
   }
 
   /**
@@ -608,36 +693,48 @@ object Graph {
    * oscillators (bipartite cores) settle; genuinely cyclic label states
    * hit the cap and throw. Returns (communities, rounds run).
    *
-   * Each round is materialized (the change-count check is an action
-   * anyway) and the change count is one ≤n-row join — the price of the
-   * stopping rule, same shape as the PageRank delta check.
+   * Each distributed round is materialized (the change-count check is an
+   * action anyway) and the change count is one ≤n-row join — the price
+   * of the stopping rule, same shape as the PageRank delta check.
    */
   def labelPropagationConverged(edges: DataFrame, maxIters: Int = 50,
                                 checkpointDir: Option[String] = None)
+      : (DataFrame, Int) =
+    labelPropagationConverged(DriverPath.DriverMaxEdges, edges, maxIters,
+      checkpointDir)
+
+  /** [[labelPropagationConverged]] with the driver path's row `budget`. */
+  private[pipeline] def labelPropagationConverged(budget: Long, edges: DataFrame,
+                                                  maxIters: Int,
+                                                  checkpointDir: Option[String])
       : (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val (canon, deg) = canonDeg(edges, checkpointDir)
-    val bcast = deg.count() <= nodeBroadcastMaxEntries
-    val adj = lpaAdjacencyFrom(canon, deg, checkpointDir, bcast)
-    var labels = Checkpoints.materialize(
-      adj.select(col("node")).distinct().withColumn("label", col("node")),
-      checkpointDir)
     var iter = 0
     var changed = Long.MaxValue
-    while (changed > 0 && iter < maxIters) {
-      val next = Checkpoints.materialize(lpaStep(adj, labels, bcast),
-        checkpointDir)
-      changed = next.withColumnRenamed("label", "__new")
-        .join(labels.withColumnRenamed("label", "__old"), "node")
-        .filter(col("__new") =!= col("__old")).count()
-      labels = next
-      iter += 1
+    val communities = lpaInput(edges, budget, checkpointDir) match {
+      case Right(k) =>
+        while (changed > 0 && iter < maxIters) { changed = k.round(); iter += 1 }
+        DriverPath.frame(edges.sparkSession, Seq("node", "community"), k.labels)
+      case Left(g) =>
+        var labels = Checkpoints.materialize(
+          g.adj.select(col("node")).distinct().withColumn("label", col("node")),
+          checkpointDir)
+        while (changed > 0 && iter < maxIters) {
+          val next = Checkpoints.materialize(lpaStep(g.adj, labels, g.bcast),
+            checkpointDir)
+          changed = next.withColumnRenamed("label", "__new")
+            .join(labels.withColumnRenamed("label", "__old"), "node")
+            .filter(col("__new") =!= col("__old")).count()
+          labels = next
+          iter += 1
+        }
+        labels.select(col("node"), col("label").as("community"))
     }
     if (changed > 0)
       throw new IllegalStateException(
         s"labelPropagationConverged: $changed labels still changing after " +
           s"$maxIters rounds — raise maxIters (oscillating label state)")
-    (labels.select(col("node"), col("label").as("community")), iter)
+    (communities, iter)
   }
 
   /**
@@ -979,20 +1076,138 @@ object Graph {
     (kcoreReport(adj, alive, bcast), iter)
   }
 
+  // ------------------------------------------------- min-fold operators
+
+  /** One min-fold operator, ready to run on either path: `e`, the
+    * materialized cleaned edge table (`src`, `dst` and, for SSSP and
+    * temporal reach, the payload column third); the round-0 table — the
+    * `seeds` inside the node set at `start`, or with `seeds` None every
+    * node at its own id; the value column and its output name; the
+    * distributed round; and the driver round's offer and admission rule
+    * ([[DriverPath.MinFold]]). */
+  private final case class MinFold(e: DataFrame, seeds: Option[DataFrame],
+                                   start: Long, value: String, out: String,
+                                   step: (DataFrame, DataFrame) => DataFrame,
+                                   offer: (Long, Long) => Long,
+                                   admits: (Long, Long) => Boolean = (_, _) => true)
+
+  /** The distributed round-0 table, materialized. Seeds outside the
+    * node set have no edges to propagate over and are ignored. */
+  private def round0(mf: MinFold, checkpointDir: Option[String]): DataFrame =
+    Checkpoints.materialize(
+      mf.seeds match {
+        case Some(s) =>
+          s.select(col("node").cast("long").as("node"))
+            .filter(col("node").isNotNull).distinct()
+            .join(mf.e.select(col("src").as("node"))
+              .union(mf.e.select(col("dst").as("node"))).distinct(),
+              Seq("node"), "left_semi")
+            .withColumn(mf.value, lit(mf.start))
+        case None => mf.e.select(col("src").as("node")).distinct()
+          .withColumn(mf.value, col("node"))
+      },
+      checkpointDir)
+
+  /** The driver kernel for `mf` when `e` and the non-null seed rows each
+    * have at most `budget` rows: both are collected (the kernel drops
+    * seeds outside the node set), then `e` is freed. None otherwise. */
+  private def minFoldDriver(mf: MinFold, budget: Long): Option[DriverPath.MinFold] =
+    for {
+      cols <- DriverPath.collectUnder(mf.e, budget).toOption
+      init <- mf.seeds match {
+        case Some(s) =>
+          DriverPath.collectUnder(s.select(col("node").cast("long"))
+            .filter(col("node").isNotNull), budget).toOption
+            .map(_(0).distinct.toSeq.map(_ -> mf.start))
+        case None => Some(cols(0).distinct.toSeq.map(x => x -> x))
+      }
+    } yield {
+      DriverPath.release(mf.e)
+      new DriverPath.MinFold(cols(0), cols(1),
+        if (cols.length > 2) cols(2) else null, init, mf.offer, mf.admits)
+    }
+
+  /** Exactly `rounds` rounds of `mf`. The distributed plan references
+    * the value table twice per round (offer + union), so it checkpoints
+    * every 4 rounds — the k-core doubling rate. */
+  private def minFoldFixed(mf: MinFold, rounds: Int, budget: Long,
+                           checkpointDir: Option[String]): DataFrame =
+    minFoldDriver(mf, budget) match {
+      case Some(k) =>
+        for (_ <- 1 to rounds) k.round()
+        DriverPath.frame(mf.e.sparkSession, Seq("node", mf.out), k.result)
+      case None =>
+        var cur = round0(mf, checkpointDir)
+        for (i <- 1 to rounds) {
+          cur = mf.step(mf.e, cur)
+          if (i % 4 == 0 && i < rounds)
+            cur = Checkpoints.materialize(cur, checkpointDir)
+        }
+        cur.select(col("node"), col(mf.value).as(mf.out))
+    }
+
+  /** Rounds of `mf` until one changes nothing, capped at `maxRounds`;
+    * throws "`stall` after `maxRounds` rounds" past the cap. The change
+    * check is (row count, Σ value) equality: reached-set growth raises the
+    * count, any improvement strictly lowers the sum, and min-folding
+    * never raises one, so the pair is stable iff the table is. Each
+    * distributed round is materialized. Returns (table, rounds run — the
+    * last being the confirming no-op). */
+  private def minFoldConverged(mf: MinFold, maxRounds: Int, budget: Long,
+                               checkpointDir: Option[String],
+                               stall: String): (DataFrame, Int) = {
+    val spark = mf.e.sparkSession
+    val (result, (iter, changed)) = minFoldDriver(mf, budget) match {
+      case Some(k) =>
+        val ops = new DriverPath.SqlLong(spark)
+        val run = converge(k.signature(ops), maxRounds) { () =>
+          k.round(); k.signature(ops)
+        }
+        (DriverPath.frame(spark, Seq("node", mf.out), k.result), run)
+      case None =>
+        def signature(t: DataFrame) =
+          t.agg(count(lit(1)), coalesce(sum(col(mf.value)), lit(0L))).head()
+        var cur = round0(mf, checkpointDir)
+        val run = converge(signature(cur), maxRounds) { () =>
+          cur = Checkpoints.materialize(mf.step(mf.e, cur), checkpointDir)
+          signature(cur)
+        }
+        (cur.select(col("node"), col(mf.value).as(mf.out)), run)
+    }
+    if (changed)
+      throw new IllegalStateException(
+        s"$stall after $maxRounds rounds — raise maxRounds")
+    (result, iter)
+  }
+
+  /** Runs `round` (which returns the new stopping signature) until the
+    * signature repeats or `maxRounds` rounds ran; returns (rounds run,
+    * whether the last round still changed it). */
+  private def converge[S](initial: S, maxRounds: Int)(round: () => S): (Int, Boolean) = {
+    var state = initial
+    var iter = 0
+    var changed = true
+    while (changed && iter < maxRounds) {
+      val next = round()
+      changed = next != state
+      state = next
+      iter += 1
+    }
+    (iter, changed)
+  }
+
   // ------------------------------------------------------ BFS distances
 
   /** Shared BFS setup: the distinct null-free long edge list (the
-    * loop-invariant table every round joins — materialized once) and the
-    * round-0 distance table (seeds ∩ graph nodes at distance 0; seeds
-    * outside the node set are ignored, mirroring [[pagerankInt]]'s seeded
-    * contract — they have no edges to measure distance over).
-    * `assumeDistinct` skips the dedup shuffle when the caller's edge list
-    * is distinct by construction (e.g. a symmetrized union of disjoint
-    * orientations). */
+    * loop-invariant table every round joins — materialized once), seeded
+    * at distance 0 (seeds outside the node set are ignored, mirroring
+    * [[pagerankInt]]'s seeded contract — they have no edges to measure
+    * distance over). `assumeDistinct` skips the dedup shuffle when the
+    * caller's edge list is distinct by construction (e.g. a symmetrized
+    * union of disjoint orientations). */
   private def bfsSetup(edges: DataFrame, seeds: DataFrame,
                        assumeDistinct: Boolean,
-                       checkpointDir: Option[String])
-      : (DataFrame, DataFrame) = {
+                       checkpointDir: Option[String]): MinFold = {
     val cast = edges.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
@@ -1002,15 +1217,9 @@ object Graph {
     // extra up-front exchange measured as a pure loss (q_sssp 1.7 → 3.2 s)
     val e = Checkpoints.materialize(
       if (assumeDistinct) cast else cast.distinct(), checkpointDir)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val d0 = Checkpoints.materialize(
-      seeds.select(col("node").cast("long").as("node"))
-        .filter(col("node").isNotNull).distinct()
-        .join(nodes, Seq("node"), "left_semi")
-        .withColumn("dist", lit(0L)),
-      checkpointDir)
-    (e, d0)
+    val ops = new DriverPath.SqlLong(edges.sparkSession)
+    MinFold(e, Some(seeds), 0L, "dist", "dist", bfsStep,
+      (d, _) => ops.add(d, 1L))
   }
 
   /** One propagation round: every reached node offers dist+1 along its
@@ -1042,20 +1251,24 @@ object Graph {
    * The dist plan references itself twice per round (offer + union), so
    * rounds checkpoint every 4 — the k-core doubling rate. At 100 TB each
    * round costs one edge-list scan keyed on the frontier; rows never
-   * carry more than (node, dist).
+   * carry more than (node, dist). A cleaned edge list of at most
+   * [[DriverPath.DriverMaxEdges]] rows runs its rounds on the driver.
    */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
                    assumeDistinct: Boolean = false,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   checkpointDir: Option[String] = None): DataFrame =
+    bfsDistances(DriverPath.DriverMaxEdges, edges, seeds, rounds,
+      assumeDistinct, checkpointDir)
+
+  /** [[bfsDistances]] with the driver path's row `budget` (a negative
+    * one forces the distributed rounds). */
+  private[pipeline] def bfsDistances(budget: Long, edges: DataFrame,
+                                     seeds: DataFrame, rounds: Int,
+                                     assumeDistinct: Boolean,
+                                     checkpointDir: Option[String]): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val (e, d0) = bfsSetup(edges, seeds, assumeDistinct, checkpointDir)
-    var dist = d0
-    for (i <- 1 to rounds) {
-      dist = bfsStep(e, dist)
-      if (i % 4 == 0 && i < rounds)
-        dist = Checkpoints.materialize(dist, checkpointDir)
-    }
-    dist
+    minFoldFixed(bfsSetup(edges, seeds, assumeDistinct, checkpointDir),
+      rounds, budget, checkpointDir)
   }
 
   /**
@@ -1071,26 +1284,19 @@ object Graph {
                             maxRounds: Int = 50,
                             assumeDistinct: Boolean = false,
                             checkpointDir: Option[String] = None)
+      : (DataFrame, Int) =
+    bfsDistancesConverged(DriverPath.DriverMaxEdges, edges, seeds, maxRounds,
+      assumeDistinct, checkpointDir)
+
+  /** [[bfsDistancesConverged]] with the driver path's row `budget`. */
+  private[pipeline] def bfsDistancesConverged(budget: Long, edges: DataFrame,
+                                              seeds: DataFrame, maxRounds: Int,
+                                              assumeDistinct: Boolean,
+                                              checkpointDir: Option[String])
       : (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e, d0) = bfsSetup(edges, seeds, assumeDistinct, checkpointDir)
-    var dist = d0
-    var state = dist.agg(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
-      .head()
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxRounds) {
-      val next = Checkpoints.materialize(bfsStep(e, dist), checkpointDir)
-      val ns = next.agg(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
-        .head()
-      changed = ns != state
-      dist = next; state = ns; iter += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"bfsDistancesConverged: still propagating after $maxRounds " +
-          "rounds — raise maxRounds")
-    (dist, iter)
+    minFoldConverged(bfsSetup(edges, seeds, assumeDistinct, checkpointDir),
+      maxRounds, budget, checkpointDir, "bfsDistancesConverged: still propagating")
   }
 
   // -------------------------------------------- weighted shortest paths
@@ -1104,8 +1310,7 @@ object Graph {
     * seed distances at 0 for seeds inside the node set. */
   private def ssspSetup(edges: DataFrame, seeds: DataFrame,
                         weightCol: String, assumeMinFolded: Boolean,
-                        checkpointDir: Option[String])
-      : (DataFrame, DataFrame) = {
+                        checkpointDir: Option[String]): MinFold = {
     val cast = edges.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"),
@@ -1115,15 +1320,9 @@ object Graph {
       if (assumeMinFolded) cast
       else cast.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")),
       checkpointDir)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val d0 = Checkpoints.materialize(
-      seeds.select(col("node").cast("long").as("node"))
-        .filter(col("node").isNotNull).distinct()
-        .join(nodes, Seq("node"), "left_semi")
-        .withColumn("dist", lit(0L)),
-      checkpointDir)
-    (e, d0)
+    val ops = new DriverPath.SqlLong(edges.sparkSession)
+    MinFold(e, Some(seeds), 0L, "dist", "dist", ssspStep,
+      (d, w) => ops.add(d, w))
   }
 
   /** One Bellman-Ford relaxation round: every reached node offers
@@ -1164,22 +1363,25 @@ object Graph {
    * rounds checkpoint every 4 — the BFS doubling rate. At 100 TB each
    * round costs one edge-list scan keyed on the frontier; rows never
    * carry more than (node, dist), and the weight rides the materialized
-   * edge table, never the shuffle stream.
+   * edge table, never the shuffle stream. A cleaned edge list of at most
+   * [[DriverPath.DriverMaxEdges]] rows runs its rounds on the driver.
    */
   def ssspWeighted(edges: DataFrame, seeds: DataFrame, rounds: Int,
                    weightCol: String = "w",
                    assumeMinFolded: Boolean = false,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   checkpointDir: Option[String] = None): DataFrame =
+    ssspWeighted(DriverPath.DriverMaxEdges, edges, seeds, rounds, weightCol,
+      assumeMinFolded, checkpointDir)
+
+  /** [[ssspWeighted]] with the driver path's row `budget`. */
+  private[pipeline] def ssspWeighted(budget: Long, edges: DataFrame,
+                                     seeds: DataFrame, rounds: Int,
+                                     weightCol: String, assumeMinFolded: Boolean,
+                                     checkpointDir: Option[String]): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val (e, d0) = ssspSetup(edges, seeds, weightCol, assumeMinFolded,
-      checkpointDir)
-    var dist = d0
-    for (i <- 1 to rounds) {
-      dist = ssspStep(e, dist)
-      if (i % 4 == 0 && i < rounds)
-        dist = Checkpoints.materialize(dist, checkpointDir)
-    }
-    dist
+    minFoldFixed(
+      ssspSetup(edges, seeds, weightCol, assumeMinFolded, checkpointDir),
+      rounds, budget, checkpointDir)
   }
 
   /**
@@ -1197,36 +1399,29 @@ object Graph {
                             maxRounds: Int = 50,
                             assumeMinFolded: Boolean = false,
                             checkpointDir: Option[String] = None)
+      : (DataFrame, Int) =
+    ssspWeightedConverged(DriverPath.DriverMaxEdges, edges, seeds, weightCol,
+      maxRounds, assumeMinFolded, checkpointDir)
+
+  /** [[ssspWeightedConverged]] with the driver path's row `budget`. */
+  private[pipeline] def ssspWeightedConverged(budget: Long, edges: DataFrame,
+                                              seeds: DataFrame, weightCol: String,
+                                              maxRounds: Int,
+                                              assumeMinFolded: Boolean,
+                                              checkpointDir: Option[String])
       : (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e, d0) = ssspSetup(edges, seeds, weightCol, assumeMinFolded,
-      checkpointDir)
-    var dist = d0
-    var state = dist.agg(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
-      .head()
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxRounds) {
-      val next = Checkpoints.materialize(ssspStep(e, dist), checkpointDir)
-      val ns = next.agg(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
-        .head()
-      changed = ns != state
-      dist = next; state = ns; iter += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"ssspWeightedConverged: still relaxing after $maxRounds " +
-          "rounds — raise maxRounds")
-    (dist, iter)
+    minFoldConverged(
+      ssspSetup(edges, seeds, weightCol, assumeMinFolded, checkpointDir),
+      maxRounds, budget, checkpointDir, "ssspWeightedConverged: still relaxing")
   }
 
   // -------------------------------------------- temporal reachability
 
   private def temporalSetup(edges: DataFrame, seeds: DataFrame,
-                            timeCol: String, startTime: Long,
+                            timeCol: String, startTime: Long, strict: Boolean,
                             assumeDistinct: Boolean,
-                            checkpointDir: Option[String])
-      : (DataFrame, DataFrame) = {
+                            checkpointDir: Option[String]): MinFold = {
     val cast = edges.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"),
@@ -1234,15 +1429,9 @@ object Graph {
       .filter(col("t").isNotNull)
     val e = Checkpoints.materialize(
       if (assumeDistinct) cast else cast.distinct(), checkpointDir)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val d0 = Checkpoints.materialize(
-      seeds.select(col("node").cast("long").as("node"))
-        .filter(col("node").isNotNull).distinct()
-        .join(nodes, Seq("node"), "left_semi")
-        .withColumn("arrival", lit(startTime)),
-      checkpointDir)
-    (e, d0)
+    MinFold(e, Some(seeds), startTime, "arrival", "arrival",
+      temporalStep(_, _, strict), (_, t) => t,
+      if (strict) (arrival, t) => t > arrival else (arrival, t) => t >= arrival)
   }
 
   /** One earliest-arrival round: every reached node offers each outgoing
@@ -1285,23 +1474,31 @@ object Graph {
    *
    * Per round: ONE join keyed on the current node with the eligibility
    * predicate evaluated inside it + ONE min shuffle; rows never wider
-   * than (node, arrival); contacts ride the materialized edge table.
+   * than (node, arrival); contacts ride the materialized edge table. A
+   * cleaned contact list of at most [[DriverPath.DriverMaxEdges]] rows
+   * runs its rounds on the driver.
    */
   def temporalReachability(edges: DataFrame, seeds: DataFrame, rounds: Int,
                            timeCol: String = "t", startTime: Long = 0L,
                            strict: Boolean = false,
                            assumeDistinct: Boolean = false,
-                           checkpointDir: Option[String] = None): DataFrame = {
+                           checkpointDir: Option[String] = None): DataFrame =
+    temporalReachability(DriverPath.DriverMaxEdges, edges, seeds, rounds,
+      timeCol, startTime, strict, assumeDistinct, checkpointDir)
+
+  /** [[temporalReachability]] with the driver path's row `budget`. */
+  private[pipeline] def temporalReachability(budget: Long, edges: DataFrame,
+                                             seeds: DataFrame, rounds: Int,
+                                             timeCol: String, startTime: Long,
+                                             strict: Boolean,
+                                             assumeDistinct: Boolean,
+                                             checkpointDir: Option[String])
+      : DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val (e, d0) = temporalSetup(edges, seeds, timeCol, startTime,
-      assumeDistinct, checkpointDir)
-    var arr = d0
-    for (i <- 1 to rounds) {
-      arr = temporalStep(e, arr, strict)
-      if (i % 4 == 0 && i < rounds)
-        arr = Checkpoints.materialize(arr, checkpointDir)
-    }
-    arr
+    minFoldFixed(
+      temporalSetup(edges, seeds, timeCol, startTime, strict, assumeDistinct,
+        checkpointDir),
+      rounds, budget, checkpointDir)
   }
 
   /**
@@ -1320,35 +1517,29 @@ object Graph {
                                     maxRounds: Int = 100,
                                     assumeDistinct: Boolean = false,
                                     checkpointDir: Option[String] = None)
+      : (DataFrame, Int) =
+    temporalReachabilityConverged(DriverPath.DriverMaxEdges, edges, seeds,
+      timeCol, startTime, strict, maxRounds, assumeDistinct, checkpointDir)
+
+  /** [[temporalReachabilityConverged]] with the driver path's row
+    * `budget`. */
+  private[pipeline] def temporalReachabilityConverged(
+      budget: Long, edges: DataFrame, seeds: DataFrame, timeCol: String,
+      startTime: Long, strict: Boolean, maxRounds: Int,
+      assumeDistinct: Boolean, checkpointDir: Option[String])
       : (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e, d0) = temporalSetup(edges, seeds, timeCol, startTime,
-      assumeDistinct, checkpointDir)
-    var arr = d0
-    var state = arr.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L)))
-      .head()
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxRounds) {
-      val next = Checkpoints.materialize(temporalStep(e, arr, strict),
-        checkpointDir)
-      val ns = next.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L)))
-        .head()
-      changed = ns != state
-      arr = next; state = ns; iter += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"temporalReachabilityConverged: still propagating after " +
-          s"$maxRounds rounds — raise maxRounds")
-    (arr, iter)
+    minFoldConverged(
+      temporalSetup(edges, seeds, timeCol, startTime, strict, assumeDistinct,
+        checkpointDir),
+      maxRounds, budget, checkpointDir,
+      "temporalReachabilityConverged: still propagating")
   }
 
   // ---------------------------------------------- connected components
 
   private def ccSetup(edges: DataFrame, assumeDistinct: Boolean,
-                      checkpointDir: Option[String])
-      : (DataFrame, DataFrame) = {
+                      checkpointDir: Option[String]): MinFold = {
     val cast = edges.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
@@ -1365,11 +1556,7 @@ object Graph {
     val e = Checkpoints.materialize(
       (if (assumeDistinct) sym else sym.distinct()).repartition(col("src")),
       checkpointDir)
-    val l0 = Checkpoints.materialize(
-      e.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")),
-      checkpointDir)
-    (e, l0)
+    MinFold(e, None, 0L, "label", "component", ccStep, (label, _) => label)
   }
 
   /** One min-label round: every node offers its label along its edges;
@@ -1393,56 +1580,55 @@ object Graph {
    * labeled graph's propagation depth — the min node's eccentricity
    * within each component — is exact; [[componentLabelsConverged]]
    * finds the depth). Use clusters() when the edge list is a near-dup
-   * pair stream (it has the driver fast path and the O(log n) doubling
-   * for deep chains); use this when round-replayability or the
-   * graph-API shape is wanted.
+   * pair stream (its driver path is a union-find, and its distributed
+   * loop doubles pointers for deep chains); use this when
+   * round-replayability or the graph-API shape is wanted. A symmetrized
+   * edge list of at most [[DriverPath.DriverMaxEdges]] rows runs its
+   * rounds on the driver.
    *
    * Output: (node, component) — component = min member id.
    */
   def componentLabels(edges: DataFrame, rounds: Int,
                       assumeDistinct: Boolean = false,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      checkpointDir: Option[String] = None): DataFrame =
+    componentLabels(DriverPath.DriverMaxEdges, edges, rounds, assumeDistinct,
+      checkpointDir)
+
+  /** [[componentLabels]] with the driver path's row `budget`. */
+  private[pipeline] def componentLabels(budget: Long, edges: DataFrame,
+                                        rounds: Int, assumeDistinct: Boolean,
+                                        checkpointDir: Option[String]): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val (e, l0) = ccSetup(edges, assumeDistinct, checkpointDir)
-    var labels = l0
-    for (i <- 1 to rounds) {
-      labels = ccStep(e, labels)
-      if (i % 4 == 0 && i < rounds)
-        labels = Checkpoints.materialize(labels, checkpointDir)
-    }
-    labels.select(col("node"), col("label").as("component"))
+    minFoldFixed(ccSetup(edges, assumeDistinct, checkpointDir), rounds, budget,
+      checkpointDir)
   }
 
   /**
    * Convergence-mode components: propagate until a round changes
    * nothing, capped at `maxRounds` (throws past the cap — house policy).
-   * Change check: Σ label alone — the node set is fixed after setup and
-   * labels only ever decrease, so the sum is stable iff no label moved.
-   * Termination ≤ the largest component's min-node eccentricity (≤ n).
-   * Returns (labels, rounds run — the last being the confirming no-op).
+   * Change check: (row count, Σ label) — the node set is fixed after
+   * setup and labels only ever decrease, so the sum is stable iff no
+   * label moved. Termination ≤ the largest component's min-node
+   * eccentricity (≤ n). Returns (labels, rounds run — the last being the
+   * confirming no-op).
    */
   def componentLabelsConverged(edges: DataFrame,
                                maxRounds: Int = 50,
                                assumeDistinct: Boolean = false,
                                checkpointDir: Option[String] = None)
+      : (DataFrame, Int) =
+    componentLabelsConverged(DriverPath.DriverMaxEdges, edges, maxRounds,
+      assumeDistinct, checkpointDir)
+
+  /** [[componentLabelsConverged]] with the driver path's row `budget`. */
+  private[pipeline] def componentLabelsConverged(budget: Long, edges: DataFrame,
+                                                 maxRounds: Int,
+                                                 assumeDistinct: Boolean,
+                                                 checkpointDir: Option[String])
       : (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e, l0) = ccSetup(edges, assumeDistinct, checkpointDir)
-    var labels = l0
-    var state = labels.agg(coalesce(sum(col("label")), lit(0L))).head()
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxRounds) {
-      val next = Checkpoints.materialize(ccStep(e, labels), checkpointDir)
-      val ns = next.agg(coalesce(sum(col("label")), lit(0L))).head()
-      changed = ns != state
-      labels = next; state = ns; iter += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"componentLabelsConverged: still propagating after $maxRounds " +
-          "rounds — raise maxRounds")
-    (labels.select(col("node"), col("label").as("component")), iter)
+    minFoldConverged(ccSetup(edges, assumeDistinct, checkpointDir), maxRounds,
+      budget, checkpointDir, "componentLabelsConverged: still propagating")
   }
 
   // ------------------------------------------------ degree distribution

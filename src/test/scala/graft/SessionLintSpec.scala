@@ -26,16 +26,29 @@ class SessionLintSpec extends AnyFunSuite {
     assert(builders == Seq("graft/Session.scala"))
   }
 
+  private val knobs = Set(
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", // Session
+    "SPARK_GRAFT_ONLY", // Gate.only: Bench and Verify
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_SF1", // Bench
+    "SPARK_GRAFT_DUMP", // RunQuery
+    "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_PLAN_TAG", "SPARK_GRAFT_PROFILE_RUNS", // ProfileQ
+    "SPARK_GRAFT_GRAPH_BCAST_MAX", // Graph
+    "SPARK_GRAFT_SCATTER_MAX_BYTES", "SPARK_GRAFT_SCATTER_MIN_BYTES") // Tables
+
   test("src/main reads exactly the listed SPARK_GRAFT_* knobs") {
     val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
     val found = sources.flatMap { case (_, s) => knob.findAllIn(s) }.toSet
-    assert(found == Set(
-      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", // Session
-      "SPARK_GRAFT_ONLY", // Gate.only: Bench and Verify
-      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_SF1", // Bench
-      "SPARK_GRAFT_DUMP", // RunQuery
-      "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_PLAN_TAG", "SPARK_GRAFT_PROFILE_RUNS", // ProfileQ
-      "SPARK_GRAFT_GRAPH_BCAST_MAX", // Graph
-      "SPARK_GRAFT_SCATTER_MAX_BYTES", "SPARK_GRAFT_SCATTER_MIN_BYTES")) // Tables
+    assert(found == knobs)
+  }
+
+  test("every environment read in src/main names a listed knob") {
+    // each read is sys.env / System.getenv applied to a string literal;
+    // a read of any other shape (a computed name, the whole map) fails too
+    val read = """(sys\.env|System\.getenv)(\.(getOrElse|get|contains|apply))?(\(\s*"([^"]*)")?""".r
+    val names = sources.flatMap { case (p, s) =>
+      read.findAllMatchIn(s).map(m => p -> Option(m.group(5)))
+    }
+    assert(names.nonEmpty)
+    assert(names.filterNot { case (_, n) => n.exists(knobs) }.isEmpty)
   }
 }

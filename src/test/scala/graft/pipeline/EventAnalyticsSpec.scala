@@ -1844,4 +1844,212 @@ class EventAnalyticsSpec extends AnyFunSuite {
       EventAnalytics.cusum(mkValued(Seq.empty[(Long, Long, String, Double)]),
         bucketSeconds = 0L))
   }
+
+  // ---- graph driver path vs distributed rounds ----
+
+  /** (src, dst, w, t) edges; w is fractional so the long cast matters. */
+  private type GEdge = (Option[Long], Option[Long], Option[Double], Long)
+
+  private def gEdges(rows: Seq[GEdge]): DataFrame = rows.toDF("src", "dst", "w", "t")
+
+  /** Tie-rich random graph: a small node domain makes self-loops,
+    * duplicate, two-way and parallel edges common; a few null endpoints
+    * and null, zero, negative and fractional weights. */
+  private def randGraph(seed: Int): Seq[GEdge] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 70).map { _ =>
+      def end = if (rnd.nextInt(25) == 0) None else Some(rnd.nextInt(24).toLong)
+      val w = rnd.nextInt(12) match {
+        case 0 => None
+        case 1 => Some(0.0)
+        case 2 => Some(-2.0)
+        case 3 => Some(0.5)
+        case k => Some(k + 0.75)
+      }
+      (end, end, w, rnd.nextInt(15).toLong)
+    }
+  }
+
+  /** Every entry point of the driver path as budget → (result, rounds of
+    * a converged twin), over one graph and seed set. */
+  private def graphEntryPoints(e: DataFrame, seeds: DataFrame)
+      : Seq[(String, Long => (DataFrame, Option[Int]))] = {
+    def fixed(df: DataFrame) = (df, Option.empty[Int])
+    def conv(r: (DataFrame, Int)) = (r._1, Some(r._2))
+    Seq[(String, Long => (DataFrame, Option[Int]))](
+      "componentLabels" -> (b => fixed(Graph.componentLabels(b, e, 3, false, None))),
+      "bfsDistances" -> (b => fixed(Graph.bfsDistances(b, e, seeds, 3, false, None))),
+      "ssspWeighted" -> (b => fixed(Graph.ssspWeighted(b, e, seeds, 3, "w", false, None))),
+      "temporalReachability" -> (b => fixed(
+        Graph.temporalReachability(b, e, seeds, 3, "t", 2L, false, false, None))),
+      "temporalReachability strict" -> (b => fixed(
+        Graph.temporalReachability(b, e, seeds, 3, "t", 2L, true, false, None))),
+      "labelPropagation" -> (b => fixed(Graph.labelPropagation(b, e, 3, None))),
+      "communityStatsLpa" -> (b => fixed(Graph.communityStatsLpa(b, e, 2, None))),
+      "modularityPermilleLpa" -> (b => fixed(Graph.modularityPermilleLpa(b, e, 2, None))),
+      "componentLabelsConverged" -> (b => conv(
+        Graph.componentLabelsConverged(b, e, 50, false, None))),
+      "bfsDistancesConverged" -> (b => conv(
+        Graph.bfsDistancesConverged(b, e, seeds, 50, false, None))),
+      "ssspWeightedConverged" -> (b => conv(
+        Graph.ssspWeightedConverged(b, e, seeds, "w", 50, false, None))),
+      "temporalReachabilityConverged" -> (b => conv(
+        Graph.temporalReachabilityConverged(b, e, seeds, "t", 2L, false, 50, false, None))),
+      "temporalReachabilityConverged strict" -> (b => conv(
+        Graph.temporalReachabilityConverged(b, e, seeds, "t", 2L, true, 50, false, None))),
+      "labelPropagationConverged" -> (b => conv(
+        Graph.labelPropagationConverged(b, e, 50, None))))
+  }
+
+  /** An entry point's outcome: its column names and types, sorted rows
+    * and round count, or the class of what it threw. */
+  private def outcome(run: => (DataFrame, Option[Int])): Either[String, Any] =
+    try {
+      val (df, rounds) = run
+      Right((df.schema.map(f => f.name -> f.dataType),
+        df.collect().map(_.toSeq).toSeq.sortBy(_.mkString(",")), rounds))
+    } catch { case t: Exception => Left(t.getClass.getName) }
+
+  /** Whether a result came back from the driver path (a local relation). */
+  private def fromDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Driver path (the default budget) == forced distributed rounds (a
+    * negative budget: even an empty table is over it) for every entry
+    * point; returns the driver outcomes. */
+  private def assertPathsAgree(e: DataFrame, seeds: DataFrame,
+                               label: String): Seq[Either[String, Any]] =
+    graphEntryPoints(e, seeds).map { case (name, run) =>
+      val driver = outcome {
+        val r = run(DriverPath.DriverMaxEdges)
+        assert(fromDriver(r._1), s"$label $name: driver path not taken")
+        r
+      }
+      val distributed = outcome {
+        val r = run(-1L)
+        assert(!fromDriver(r._1), s"$label $name: distributed path not taken")
+        r
+      }
+      assert(driver == distributed, s"$label $name")
+      driver
+    }
+
+  test("graph driver path == distributed rounds on seeded random graphs") {
+    for (seed <- 1 to 5) {
+      val rnd = new scala.util.Random(seed + 100)
+      // seeds inside and outside the node set, and a null seed
+      val seeds = (Seq(Some(rnd.nextInt(24).toLong), Some(rnd.nextInt(24).toLong),
+        Some(999L), None)).toDF("node")
+      val got = assertPathsAgree(gEdges(randGraph(seed)).repartition(3), seeds,
+        s"seed $seed")
+      assert(got.forall(_.isRight))
+    }
+  }
+
+  test("graph driver path == distributed rounds on edge-case fixtures") {
+    val fixture: Seq[GEdge] = Seq(
+      (Some(1L), Some(2L), Some(3.0), 1L), (Some(1L), Some(2L), Some(1.5), 1L), // parallel
+      (Some(1L), Some(2L), Some(0.5), 0L), (Some(1L), Some(2L), None, 2L), // fractional, null
+      (Some(2L), Some(1L), Some(0.0), 4L), (Some(2L), Some(3L), Some(2.0), 3L), // zero
+      (Some(3L), Some(3L), Some(1.0), 5L), (Some(3L), Some(4L), Some(1.0), 5L), // self-loop
+      (Some(3L), Some(4L), Some(1.0), 5L), (Some(4L), Some(3L), Some(7.0), 6L), // dup, two-way
+      (None, Some(5L), Some(1.0), 1L), (Some(5L), None, Some(1.0), 1L), // null endpoints
+      (Some(6L), Some(7L), Some(1.0), 9L))
+    val seeds = Seq(Some(1L), Some(6L), Some(42L), None).toDF("node")
+    assertPathsAgree(gEdges(fixture), seeds, "fixture")
+    val none = assertPathsAgree(gEdges(Seq.empty), seeds, "empty")
+    // the empty graph: every result empty, converged twins stop after the
+    // confirming round, modularity is (0, 0)
+    assert(none.forall(_.isRight))
+    val m = graphEntryPoints(gEdges(Seq.empty), seeds).toMap
+    assert(m("modularityPermilleLpa")(DriverPath.DriverMaxEdges)._1.collect()
+      .map(_.toSeq) === Array(Seq(0L, 0L)))
+    assert(m("componentLabelsConverged")(DriverPath.DriverMaxEdges)._2 === Some(1))
+  }
+
+  test("graph driver path overflows and caps where the distributed rounds do") {
+    def bothThrow(name: String, budgetRun: Long => Any): String = {
+      val classes = Seq(DriverPath.DriverMaxEdges, -1L).map { b =>
+        intercept[Exception] {
+          budgetRun(b) match {
+            case df: DataFrame => df.collect()
+            case (df: DataFrame, _) => df.collect()
+          }
+        }.getClass.getName
+      }
+      assert(classes.distinct.size == 1, s"$name: $classes")
+      classes.head
+    }
+    val big = Seq((1L, 2L, Long.MaxValue - 1), (2L, 3L, 5L)).toDF("src", "dst", "w")
+    val one = Seq(1L).toDF("node")
+    val overflow = "org.apache.spark.SparkArithmeticException"
+    for ((name, run) <- Seq[(String, Long => Any)](
+      "sssp offer" -> (b => Graph.ssspWeighted(b, big, one, 2, "w", false, None)),
+      "sssp converged offer" -> (b => Graph.ssspWeightedConverged(b, big, one, "w", 5, false, None)),
+      "components Σ label" -> (b => Graph.componentLabelsConverged(b,
+        Seq((Long.MaxValue, Long.MaxValue - 1)).toDF("src", "dst"), 5, false, None)),
+      "temporal Σ arrival" -> (b => Graph.temporalReachabilityConverged(b,
+        Seq((1L, 2L, 1L)).toDF("src", "dst", "t"), Seq(1L, 2L).toDF("node"), "t",
+        Long.MaxValue / 2 + 1, false, 5, false, None)),
+      "lpa negated label" -> (b => Graph.labelPropagation(b,
+        Seq((Long.MinValue, 2L)).toDF("src", "dst"), 1, None))))
+      assert(bothThrow(name, run) == overflow, name)
+    val chain = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
+    for ((name, run) <- Seq[(String, Long => Any)](
+      "components cap" -> (b => Graph.componentLabelsConverged(b, chain, 2, false, None)),
+      "bfs cap" -> (b => Graph.bfsDistancesConverged(b, chain, Seq(0L).toDF("node"), 2, false, None)),
+      "lpa cap" -> (b => Graph.labelPropagationConverged(b,
+        Seq((1L, 2L)).toDF("src", "dst"), 1, None))))
+      assert(bothThrow(name, run) == "java.lang.IllegalStateException", name)
+  }
+
+  test("graph driver path runs at a budget of exactly the edge rows, not one less") {
+    val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (5L, 6L), (6L, 5L))
+      .toDF("src", "dst")
+    val seeds = Seq(1L).toDF("node")
+    // the cleaned tables: 6 distinct directed edges; 3 canonical pairs
+    val at = Graph.bfsDistances(6L, sym, seeds, 4, false, None)
+    val under = Graph.bfsDistances(5L, sym, seeds, 4, false, None)
+    assert(fromDriver(at) && !fromDriver(under))
+    assert(at.collect().toSet == under.collect().toSet)
+    // more seed rows than the budget also keep the distributed rounds
+    val manySeeds = (1L to 7L).toDF("node")
+    val seedsOver = Graph.bfsDistances(6L, sym, manySeeds, 4, false, None)
+    assert(!fromDriver(seedsOver))
+    assert(seedsOver.collect().toSet ==
+      Graph.bfsDistances(7L, sym, manySeeds, 4, false, None).collect().toSet)
+    val lpaAt = Graph.labelPropagation(3L, sym, 2, None)
+    val lpaUnder = Graph.labelPropagation(2L, sym, 2, None)
+    assert(fromDriver(lpaAt) && !fromDriver(lpaUnder))
+    assert(lpaAt.collect().toSet == lpaUnder.collect().toSet)
+  }
+
+  test("forced distributed rounds plan no nested-loop or cartesian joins") {
+    // the public entry points take the driver path on graphs this small,
+    // so PlanSpec's plan checks of them see a local relation
+    val edges = spark.range(2000)
+      .selectExpr("id % 97 as src", "(id * 7) % 113 as dst", "id % 5 + 1 as w")
+    val seeds = spark.range(1, 5).selectExpr("id as node")
+    for ((what, df) <- Seq(
+      "sssp" -> Graph.ssspWeighted(-1L, edges, seeds, 5, "w", false, None),
+      "components" -> Graph.componentLabels(-1L, edges, 5, false, None),
+      "bfs" -> Graph.bfsDistances(-1L, edges, seeds, 5, false, None))) {
+      df.count()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!fromDriver(df) && !plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"), s"$what plan has NLJ/cartesian:\n$plan")
+    }
+  }
+
+  test("graph driver path leaves no persisted RDD behind") {
+    val e = gEdges(randGraph(7))
+    val seeds = Seq(3L, 11L).toDF("node")
+    for ((name, run) <- graphEntryPoints(e, seeds)) {
+      graft.Session.release(spark)
+      val r = try run(DriverPath.DriverMaxEdges)._1 catch { case _: IllegalStateException => null }
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, name)
+      if (r != null) assert(fromDriver(r), name)
+    }
+  }
 }
