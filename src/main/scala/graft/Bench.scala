@@ -232,8 +232,8 @@ object Bench {
             pmod(hash(col("id"), lit(7)), lit(86400000L)) * 1000L).as("ts"),
           when(pmod(col("id"), lit(5)) === 0, "error").otherwise("click")
             .as("event_type")).cache()
-        val nS = graft.streaming.EventStreams.sessionizeBatch(ev, 60000L).count()
-        val nSs = graft.streaming.EventStreams.sessionizeBatchSalted(ev, 60000L).count()
+        val nS = graft.pipeline.EventAnalytics.sessionize(ev, 60000L).count()
+        val nSs = graft.pipeline.EventAnalytics.sessionizeSalted(ev, 60000L).count()
         require(nS == nSs, s"salted sessionize diverged: $nS vs $nSs")
         val (errors, clicks) = graft.gates.EventsGates.errorsAndClicks(ev)
         val nA = graft.api.AsofJoin.asofJoin(errors, clicks,

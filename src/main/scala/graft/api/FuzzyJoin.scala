@@ -192,12 +192,9 @@ object FuzzyJoin {
 
   /**
    * Match an arriving batch against a [[writeEditIndex]] reference set:
-   * all (index id, batch id, dist ≤ tau) pairs. Stateless stream-static
-   * shape — this is the `foreachBatch` body of (or directly a transform
-   * on) a streaming source; pass `dedupCandidates = false` on a stream
-   * (a global distinct is stateful there) and collapse the per-matching-
-   * signature duplicate pairs downstream, exactly the
-   * [[graft.streaming.DocStreams.dedupAgainstIndexStream]] contract.
+   * all (index id, batch id, dist ≤ tau) pairs. Stateless index-join
+   * shape; `dedupCandidates = false` skips the global distinct and leaves
+   * the per-matching-signature duplicate pairs for the caller to collapse.
    */
   def editDistanceAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                                path: String, batch: DataFrame, tau: Int,

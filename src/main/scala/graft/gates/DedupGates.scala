@@ -952,8 +952,8 @@ object DedupGates {
 
     // INCREMENTAL line dedup: corpus (3/4 of docs) line-hashed into a
     // persisted digest index; the arriving batch (1/4) is cleaned against
-    // the index plus its own within-batch first-occurrence rule — the
-    // foreachBatch body of the streaming twin, oracled end to end
+    // the index plus its own within-batch first-occurrence rule, oracled
+    // end to end
     Gate("q_dedup_lines_incr", (s, d) => {
       val fx = Tables.table(s, d, "documents")
         .withColumn("text", lineDedupFixtureText)

@@ -3,12 +3,12 @@ package gates
 
 import graft.pipeline.EventAnalytics
 import graft.sources.Tables
-import graft.streaming.EventStreams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Event-stream and time-series gates: as-of joins, streaming windows,
-  * sessions, funnels and the event-analytics folds. */
+/** Event-stream and time-series gates: as-of joins, time windows,
+  * sessions, funnels and the event-analytics folds. The `q_stream_*`
+  * names are historical; every gate runs a batch plan. */
 object EventsGates {
 
   /** Lead-bounded TWAP step integral — shared verbatim by q_twap and its
@@ -192,7 +192,7 @@ object EventsGates {
         "AS intercept FROM mo"),
 
     Gate("q_stream_window", (s, d) =>
-      EventStreams.windowedCountsBatch(Tables.table(s, d, "events"))
+      EventAnalytics.windowedCounts(Tables.table(s, d, "events"))
         .select(unix_seconds(col("window_start")).as("window_epoch"),
           col("event_type"), col("n"), col("value_milli")),
       "SELECT (epoch_us(ts) // 1000000 // 3600) * 3600 AS window_epoch, event_type, " +
@@ -203,7 +203,7 @@ object EventsGates {
     // overlapping windows — the trailing-hour-updated-every-15-min shape;
     // oracle unrolls the 4 epoch-aligned memberships per event
     Gate("q_stream_window_hop", (s, d) =>
-      EventStreams.hoppingCountsBatch(Tables.table(s, d, "events"))
+      EventAnalytics.hoppingCounts(Tables.table(s, d, "events"))
         .select(unix_seconds(col("window_start")).as("window_epoch"),
           col("event_type"), col("n"), col("value_milli")),
       // each event joins its 4 membership windows: start = floor-to-slide
@@ -217,15 +217,11 @@ object EventsGates {
         "CAST(sum(vm) AS BIGINT) AS value_milli " +
         "FROM w WHERE t < ws + 3600000000 GROUP BY 1, 2"),
 
-    // LEFT OUTER stream-stream interval join (batch twin gated; the
-    // watermark-driven null-row emission timing — an unmatched error
-    // emits only once no matching click can still arrive — is pinned in
-    // LateDataSpec): errors keep their row even with no click in the
-    // preceding 10 minutes
+    // LEFT OUTER interval join: errors keep their row even with no click
+    // in the preceding 10 minutes
     Gate("q_stream_outer_join", (s, d) =>
-      EventStreams.errorClickJoinOuterBatch(Tables.table(s, d, "events")),
-      // outer interval-join replay: ordinary SQL left join — the streaming
-      // path adds only WHEN the null row emits, not WHETHER
+      EventAnalytics.errorClickJoinOuter(Tables.table(s, d, "events")),
+      // outer interval-join replay: ordinary SQL left join
       "WITH e AS (SELECT event_id AS error_id, user_id, ts FROM events " +
         "WHERE event_type = 'error'), " +
         "c AS (SELECT event_id AS click_id, user_id, ts FROM events " +
@@ -236,12 +232,12 @@ object EventsGates {
 
     // SESSION windows via Spark's native session_window (30 min gap):
     // dynamic-length per-user bursts — the declarative sibling of
-    // q_sessionize with watermark-managed streaming state; an event at
-    // EXACTLY gap after the previous still MERGES (next.start <=
-    // current.end joins, spec-pinned at ±1 µs); oracle = island
-    // detection with diff > gap breaking, session_end = last event + gap
+    // q_sessionize; an event at EXACTLY gap after the previous still
+    // MERGES (next.start <= current.end joins, spec-pinned at ±1 µs);
+    // oracle = island detection with diff > gap breaking, session_end =
+    // last event + gap
     Gate("q_stream_session", (s, d) =>
-      EventStreams.sessionCountsBatch(Tables.table(s, d, "events"))
+      EventAnalytics.sessionCounts(Tables.table(s, d, "events"))
         .select(unix_micros(col("session_start")).as("session_start_us"),
           unix_micros(col("session_end")).as("session_end_us"),
           col("user_id"), col("n"), col("value_milli")),
@@ -290,7 +286,7 @@ object EventsGates {
         "FROM i GROUP BY user_id, island"),
 
     Gate("q_sessionize", (s, d) =>
-      EventStreams.sessionizeBatch(Tables.table(s, d, "events"),
+      EventAnalytics.sessionize(Tables.table(s, d, "events"),
         gapMs = 60 * 60 * 1000L)
         .select(col("user_id"), col("session_idx"), col("n_events"),
           col("first_ts"), col("last_ts")),
@@ -298,7 +294,7 @@ object EventsGates {
 
     // skew-resistant twins: identical semantics (and oracle SQL) to
     // q_join_asof / q_sessionize via (key, time-bucket) salting — see
-    // AsofJoin.asofJoinSalted / EventStreams.sessionizeBatchSalted
+    // AsofJoin.asofJoinSalted / EventAnalytics.sessionizeSalted
     Gate("q_join_asof_salted", (s, d) => {
       val (errors, clicks) = errorsAndClicks(Tables.table(s, d, "events"))
       graft.api.AsofJoin.asofJoinSalted(errors, clicks,
@@ -309,7 +305,7 @@ object EventsGates {
       JoinAsofOracleSql),
 
     Gate("q_sessionize_salted", (s, d) =>
-      EventStreams.sessionizeBatchSalted(Tables.table(s, d, "events"),
+      EventAnalytics.sessionizeSalted(Tables.table(s, d, "events"),
         gapMs = 60 * 60 * 1000L)
         .select(col("user_id"), col("session_idx"), col("n_events"),
           col("first_ts"), col("last_ts")),

@@ -354,18 +354,6 @@ object Geom {
     math.sqrt(dx * dx + dy * dy)
   }
 
-  /** Great-circle distance in meters (haversine) — an addition over the
-    * reference, which only has Euclidean-degrees. */
-  def haversineMeters(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
-    val R = 6371008.8
-    val dLat = math.toRadians(lat2 - lat1)
-    val dLon = math.toRadians(lon2 - lon1)
-    val a = math.sin(dLat / 2) * math.sin(dLat / 2) +
-      math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
-        math.sin(dLon / 2) * math.sin(dLon / 2)
-    2 * R * math.asin(math.min(1.0, math.sqrt(a)))
-  }
-
   // ---- WKT parsing (reference: WithinQuery.java:184-185 WKTReader.read) ----
 
   /** Split `s` on commas at paren depth 0 (top-level list elements). */

@@ -270,9 +270,10 @@ object Curation {
    * group key; the window sorts scores WITHIN a language, the same cost
    * class as CCNet's own per-language percentile cut. Heavily-skewed
    * group sizes (one dominant language) sort more rows in one partition —
-   * at that point swap the NTILE for a two-pass approximate-threshold cut
-   * (percentile_approx bounds are differential-tested in PipelineSpec);
-   * the exact NTILE is the oracle-checkable reference semantics.
+   * at that point swap the NTILE for the two-pass approximate-threshold cut
+   * [[perplexityBucketsApprox]] (its frequency bounds are differential-tested
+   * in PipelineSpec); the exact NTILE is the oracle-checkable reference
+   * semantics.
    */
   def perplexityBuckets(scored: DataFrame, groupCol: String = "lang",
                         scoreCol: String = "mean_centibits",
@@ -288,23 +289,22 @@ object Curation {
   }
 
   /** head / middle / tail label for a 1-based bucket index. */
-  def bucketLabel(bucket: Column, nBuckets: Int): Column =
+  private def bucketLabel(bucket: Column, nBuckets: Int): Column =
     when(bucket === 1, "head")
       .when(bucket === nBuckets, "tail")
       .otherwise("middle")
 
   /**
-   * The SKEW-SCALE variant of [[perplexityBuckets]] — the two-pass
-   * approximate-threshold cut its scaladoc promises: pass 1 computes
+   * The SKEW-SCALE variant of [[perplexityBuckets]]: pass 1 computes
    * per-group approximate bucket boundaries (`percentile_approx`, a
    * mergeable sketch — map-side-combined, no per-group sort); pass 2
-   * assigns scan-locally against the broadcast boundary table with the
-   * same first-boundary-holding-the-score rule as the streaming twin.
-   * One dominant language no longer funnels its whole (id, score)
-   * stream through a single sort partition — the NTILE's only
-   * scale hazard. Bucket FREQUENCIES are approximate (sketch accuracy),
-   * assignment is still deterministic and monotone in the score; the
-   * exact NTILE remains the oracle-checkable reference semantics.
+   * assigns scan-locally against the broadcast boundary table, a score
+   * going to the first bucket whose boundary holds it. One dominant
+   * language no longer funnels its whole (id, score) stream through a
+   * single sort partition — the NTILE's only scale hazard. Bucket
+   * FREQUENCIES are approximate (sketch accuracy), assignment is still
+   * deterministic and monotone in the score; the exact NTILE remains the
+   * oracle-checkable reference semantics.
    */
   def perplexityBucketsApprox(scored: DataFrame, groupCol: String = "lang",
                               scoreCol: String = "mean_centibits",
@@ -322,24 +322,6 @@ object Curation {
       .withColumn("bucket_label", bucketLabel(col("bucket"), nBuckets))
       .drop("bucket_his")
   }
-
-  /**
-   * FROZEN per-group bucket boundaries from a batch [[perplexityBuckets]]
-   * pass: one row per group with the bucket-ascending array of MAX scores
-   * (the CCNet "score a new shard against last month's percentiles"
-   * model — the [[graft.pipeline.TextAnalysis.bm25]]-frozen-model pattern
-   * for the streaming twin). |groups| rows; broadcast it.
-   */
-  def perplexityThresholds(scored: DataFrame, groupCol: String = "lang",
-                           scoreCol: String = "mean_centibits",
-                           idCol: String = "doc_id",
-                           nBuckets: Int = 3): DataFrame =
-    perplexityBuckets(scored, groupCol, scoreCol, idCol, nBuckets)
-      .groupBy(col(groupCol), col("bucket"))
-      .agg(max(col(scoreCol)).as("hi"))
-      .groupBy(col(groupCol))
-      .agg(transform(array_sort(collect_list(struct(col("bucket"), col("hi")))),
-        x => x.getField("hi")).as("bucket_his"))
 
   /**
    * Benchmark decontamination (Brown et al. NeurIPS'20 App. C — the

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{MinHashBands, NgramJaccard, SimHash64}
+import org.apache.spark.sql.graft.{NgramJaccard, SimHash64}
 
 /**
  * Document deduplication for large-scale training-data pipelines.
@@ -18,10 +18,6 @@ object Dedup {
   private def c(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     GraftShims.column(e)
   private def e(col: Column) = GraftShims.expression(col)
-
-  /** LSH band keys per document: array position = band index. */
-  def minhashBands(text: Column, numHashes: Int, bands: Int, shingle: Int): Column =
-    c(MinHashBands(e(text), e(lit(numHashes)), e(lit(bands)), e(lit(shingle))))
 
   def simhash(text: Column, shingle: Int = 5): Column =
     c(SimHash64(e(text), e(lit(shingle))))
@@ -1607,10 +1603,7 @@ object Dedup {
       items, idCol, scoreCol)
 
   /** The shared keep-list tail: component labels → keeper per cluster →
-    * singleton restore (one row per item). Public so externally-maintained
-    * labelings (e.g. the streaming fold in
-    * [[graft.streaming.DocStreams.textKeepListStream]]) can derive the
-    * same keep-list shape as the batch operators. */
+    * singleton restore (one row per item). */
   def keepListFromLabels(labels: DataFrame, items: DataFrame,
                          idCol: String, scoreCol: String): DataFrame = {
     val canon = clusterCanonical(labels, items, idCol, scoreCol)
@@ -1808,30 +1801,6 @@ object Dedup {
       .select(col("id"), col("cluster"))
       .unionByName(relabeled)
   }
-
-  /**
-   * Streaming exact dedup: drop rows whose canonical text hash was already
-   * seen, with state bounded by the watermark — a duplicate arriving
-   * AFTER its original's state expired re-emits (the standard streaming
-   * trade-off; [[graft.streaming]] LateDataSpec pins the exact contract).
-   *
-   * Uses `dropDuplicatesWithinWatermark`, NOT plain `dropDuplicates`:
-   * with the dedup key being the hash (not the event-time column), plain
-   * dropDuplicates never evicts state — the watermark bounds nothing and
-   * state grows with every distinct document forever, an unbounded-state
-   * leak at stream scale (found by the r8 late-data contract spec, which
-   * showed expired keys never re-emitting). The WithinWatermark variant
-   * expires each key once the watermark passes its event time + delay,
-   * guaranteeing dedup for duplicates within the delay of each other and
-   * bounding state to the watermark horizon.
-   */
-  def streamingExactDedup(stream: DataFrame, textCol: String, tsCol: String,
-                          watermark: String = "1 hour"): DataFrame =
-    stream
-      .withColumn("__dup_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__dup_hash")
-      .drop("__dup_hash")
 
   /**
    * (bands, planesPerBand) for sign-hyperplane LSH hitting `targetRecall`
@@ -2276,13 +2245,11 @@ object Dedup {
    * [[writeLineIndex]]-persisted corpus: a batch line is dropped when its
    * digest exists in the index (the corpus saw it first) OR an earlier
    * (id, pos) occurrence exists within the batch itself; splice and
-   * output shape are [[dedupLines]]'s exactly. This is the `foreachBatch`
-   * body of the streaming twin — stream-static join only, no state.
+   * output shape are [[dedupLines]]'s exactly — an index join only, no
+   * state.
    *
-   * Equality contract with the batch op (the arrival-order caveat, like
-   * the lake-freshness contract on
-   * [[graft.streaming.DocStreams.minhashPairsStream]]): when every corpus
-   * id precedes every batch id, the result equals
+   * Equality contract with the batch op (the arrival-order caveat): when
+   * every corpus id precedes every batch id, the result equals
    * `dedupLines(corpus ∪ batch)` restricted to batch docs, because batch-
    * global (id, pos) order then coincides with corpus-first-then-batch
    * order. Out-of-order arrival keeps the DROP decisions valid (a line in

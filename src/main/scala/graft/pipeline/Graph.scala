@@ -48,11 +48,8 @@ object Graph {
     * ≈ 130 MB data / a few hundred MB built — the same budget as
     * [[Dedup]]'s labelBroadcastMaxEntries; graphs above it keep the
     * shuffle plans (the 100 TB giant-graph posture, where no n-sized
-    * table fits a broadcast). Override via SPARK_GRAFT_GRAPH_BCAST_MAX
-    * (0 disables broadcasting — the A/B lever for cluster profiling). */
-  private[pipeline] val nodeBroadcastMaxEntries: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_BCAST_MAX").map(_.toLong)
-      .getOrElse(8000000L)
+    * table fits a broadcast). */
+  private[pipeline] val nodeBroadcastMaxEntries: Long = 8000000L
 
   /** Conditionally broadcast an n-sized per-round table. */
   private def bc(df: DataFrame, bcast: Boolean): DataFrame =

@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions._
  * Scale shape: extraction and normalization are codegen'd per-row
  * projections (no shuffle). Blocklist flagging ships (id, domain) pairs —
  * never text — through one semi-join against the blocklist (broadcast for
- * any real-world list size) and one id-keyed flag join back; with a
- * literal-array blocklist ([[blockedExpr]]) even those joins disappear
- * into the scan.
+ * any real-world list size) and one id-keyed flag join back.
  */
 object Provenance {
   /** http(s) URL: scheme, host, optional port, path/query chars. */
@@ -49,13 +47,6 @@ object Provenance {
   def withDomains(df: DataFrame, textCol: String = "text"): DataFrame =
     df.withColumn("n_urls", size(urls(col(textCol))).cast("long"))
       .withColumn("domains", domains(col(textCol)))
-
-  /** Scan-local blocked flag for a small literal blocklist: true iff any
-    * document domain is in `blocklist` (exact match, normalized form). */
-  def blockedExpr(domainsCol: Column, blocklist: Seq[String]): Column = {
-    require(blocklist.nonEmpty, "empty blocklist")
-    arrays_overlap(domainsCol, lit(blocklist.toArray))
-  }
 
   /**
    * Canonical URL key of a document's FIRST URL — the page identity used

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * Scope note (what salting does and does NOT buy): for ALGEBRAIC aggregates
  * (count/sum/avg/min/max) Spark's map-side partial aggregation already
  * bounds a hot key's reducer input to one partial row per map task —
- * saltedCount/saltedSum exist as the two-stage template, not as a win over
+ * saltedCount exists as the two-stage template, not as a win over
  * plain groupBy. Salting earns its keep for HOLISTIC aggregates whose
  * partial state grows with group size — collect_set/collect_list, exact
  * distinct sets — where one dominant key (a boilerplate domain, the "und"
@@ -30,15 +30,6 @@ object Skew {
       .agg(count(lit(1)).as("__partial"))
       .groupBy(col(keyCol))
       .agg(sum(col("__partial")).as("n"))
-
-  /** Salted sum of a long column. */
-  def saltedSum(df: DataFrame, keyCol: String, valueCol: String,
-                saltFrom: String, salt: Int = 16): DataFrame =
-    df.withColumn("__salt", saltOf(col(saltFrom), salt))
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(keyCol))
-      .agg(sum(col("__partial")).as("total"))
 
   /** Salted distinct-collection — the aggregate where salting genuinely
     * matters: per-(key, salt) partial sets stay bounded, the final merge

@@ -41,16 +41,6 @@ object TextAnalysis {
       spark.sparkContext.broadcast(merges.toArray), byteLevel)
   }
 
-  /** [[bpeState]] from a (left, right, rank) DataFrame — the lake-resident
-    * merges-table form. Driver-collects (vocab-bounded, see [[bpeState]]). */
-  def bpeStateFromDf(df: DataFrame, leftCol: String = "left",
-                     rightCol: String = "right", rankCol: String = "rank")
-      : org.apache.spark.sql.graft.BpeState = {
-    val merges = df.select(col(leftCol), col(rightCol), col(rankCol).cast("long"))
-      .collect().sortBy(_.getLong(2)).map(r => (r.getString(0), r.getString(1))).toSeq
-    bpeState(df.sparkSession, merges)
-  }
-
   /**
    * Pre-token frequency histogram — the ONLY corpus pass BPE training
    * needs. Vocabulary-bounded, not corpus-bounded (a 100 TB
@@ -699,7 +689,15 @@ object TextAnalysis {
     require(terms.nonEmpty && terms.size <= 10000, "terms must be 1..10000")
     require(topN >= 1, "topN must be positive")
     require(k1 > 0 && b >= 0 && b <= 1, s"bad BM25 params k1=$k1 b=$b")
-    val (stats, tf) = bm25Parts(df, terms, idCol, textCol)
+    val toks = split(trim(col(textCol)), "\\s+")
+    val base = df.select(col(idCol).as("doc_id"),
+      size(toks).cast("long").as("dl"),
+      filter(toks, t => t.isInCollection(terms)).as("hits"))
+    val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    val tf = base.filter(size(col("hits")) > 0)
+      .select(col("doc_id"), col("dl"), explode(col("hits")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf"))
     val withDf = tf.withColumn("df", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("term"))))
     val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
@@ -719,82 +717,6 @@ object TextAnalysis {
           lit(0.0), (acc, x) => acc + x).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
       .limit(topN)
-  }
-
-  /** The two corpus passes [[bm25]] is built from: the one-row (N, Σdl)
-    * stats and the (doc, dl, term, tf) matched-occurrence table. */
-  private def bm25Parts(df: DataFrame, terms: Seq[String],
-                        idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val toks = split(trim(col(textCol)), "\\s+")
-    val base = df.select(col(idCol).as("doc_id"),
-      size(toks).cast("long").as("dl"),
-      filter(toks, t => t.isInCollection(terms)).as("hits"))
-    val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val tf = base.filter(size(col("hits")) > 0)
-      .select(col("doc_id"), col("dl"), explode(col("hits")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    (stats, tf)
-  }
-
-  /** Frozen BM25 model: the (term → df, N, Σdl) statistics [[bm25]]
-    * derives from its corpus, extracted once so a stream can score
-    * arriving documents statelessly against a FIXED retrieval model (the
-    * ingestion-gate shape; see
-    * [[graft.streaming.DocStreams.bm25Stream]]). */
-  final case class Bm25Model(dfByTerm: Map[String, Long], nDocs: Long,
-                             sumDl: Long, k1: Double = 1.2, b: Double = 0.75)
-
-  /** Extract a [[Bm25Model]] from a corpus — two tiny driver collects
-    * (a one-row stats aggregate and the ≤|terms|-row df table). Terms
-    * absent from the corpus carry df 0. */
-  def bm25Model(df: DataFrame, terms: Seq[String], idCol: String = "doc_id",
-                textCol: String = "text", k1: Double = 1.2,
-                b: Double = 0.75): Bm25Model = {
-    require(terms.nonEmpty && terms.size <= 10000, "terms must be 1..10000")
-    val (stats, tf) = bm25Parts(df, terms, idCol, textCol)
-    val st = stats.head()
-    require(!st.isNullAt(1), "bm25Model needs at least one non-null document")
-    val dfMap = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    Bm25Model(terms.map(t => t -> dfMap.getOrElse(t, 0L)).toMap,
-      st.getLong(0), st.getLong(1), k1, b)
-  }
-
-  /**
-   * Scan-local BM25 score of one text column against a frozen
-   * [[Bm25Model]] — bit-identical to [[bm25]]'s score on the corpus the
-   * model came from: the idf/avgdl constants fold to the same doubles,
-   * the tf/dl arithmetic is the same tree, and unmatched terms add an
-   * exact 0.0 (IEEE: x + 0.0 == x for the strictly positive term
-   * scores), so folding ALL model terms in sorted order equals the batch
-   * fold over matched terms only. Zero shuffles; the model is
-   * plan-literal, sized for query-term sets (each term adds one
-   * filter-count pass over the token array).
-   */
-  def bm25Score(text: Column, model: Bm25Model): Column = {
-    val toks = split(trim(text), "\\s+")
-    val dl = size(toks).cast("long")
-    val avgdl = lit(model.sumDl.toDouble) / lit(model.nDocs.toDouble)
-    val bterm = lit(1.0 - model.b) + lit(model.b) * (dl.cast("double") / avgdl)
-    model.dfByTerm.toSeq.sortBy(_._1).map { case (t, dfT) =>
-      val tf = size(filter(toks, x => x === lit(t))).cast("long")
-      val tfd = tf.cast("double")
-      val idf = ((lit(model.nDocs) - lit(dfT)).cast("double") + lit(0.5)) /
-        (lit(dfT).cast("double") + lit(0.5))
-      when(tf > 0,
-        idf * ((tfd * lit(model.k1 + 1.0)) / (tfd + lit(model.k1) * bterm)))
-        .otherwise(lit(0.0))
-    }.foldLeft(lit(0.0))((acc, s) => acc + s)
-  }
-
-  /** Count of distinct model terms present in `text` — [[bm25]]'s
-    * `n_terms` column, scan-local. */
-  def bm25MatchedTerms(text: Column, model: Bm25Model): Column = {
-    val toks = split(trim(text), "\\s+")
-    model.dfByTerm.keys.toSeq.sorted.map { t =>
-      when(size(filter(toks, x => x === lit(t))) > 0, 1L).otherwise(0L)
-    }.foldLeft(lit(0L))((acc, x) => acc + x)
   }
 
   /**

@@ -100,18 +100,16 @@ object Tables {
    * (spark.sql.execution.sortBeforeRepartition — measured +0.5 s on the
    * graph gates), while a hash of the full row is deterministic per row
    * (retry-safe with no sort) and uniform. Every declared query's result
-   * is partition-invariant by house rule. Bounds via
-   * SPARK_GRAFT_SCATTER_MIN_BYTES / _MAX_BYTES (production clusters with
-   * multi-row-group inputs never hit the condition at the defaults).
+   * is partition-invariant by house rule. Production clusters with
+   * multi-row-group inputs never hit the condition; the upper bound
+   * follows the session's `spark.sql.files.maxPartitionBytes`.
    */
   private def scatterSmall(spark: SparkSession, df: DataFrame,
                            path: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
     if (cores <= 2) return df
-    val minBytes = sys.env.getOrElse("SPARK_GRAFT_SCATTER_MIN_BYTES",
-      (128L * 1024).toString).toLong
-    val maxBytes = sys.env.get("SPARK_GRAFT_SCATTER_MAX_BYTES").map(_.toLong)
-      .getOrElse(spark.sessionState.conf.filesMaxPartitionBytes)
+    val minBytes = 128L * 1024
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val bytes = scala.util.Try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -11,8 +11,7 @@ import org.apache.spark.sql.graft.{GeohashDecode, GeohashEncode, GeohashNeighbor
  * than custom expressions — Catalyst already generates optimal code for
  * sqrt/±/×. Parity note: `st_distance_euclidean` is planar Euclidean in
  * DEGREES, matching the reference (src/main/java/tech/stackable/gis/hbase/
- * model/DistanceComparator.java:20-27 uses java.awt.geom.Point2D.distance);
- * `st_distance_haversine` (meters) is the geodesically-honest addition.
+ * model/DistanceComparator.java:20-27 uses java.awt.geom.Point2D.distance).
  */
 object functions {
   private def c(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
@@ -39,16 +38,6 @@ object functions {
     val dx = x2 - x1
     val dy = y2 - y1
     F.sqrt(dx * dx + dy * dy)
-  }
-
-  /** Great-circle haversine distance in meters. */
-  def st_distance_haversine(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column = {
-    val r = F.lit(6371008.8)
-    val dLat = F.radians(lat2 - lat1)
-    val dLon = F.radians(lon2 - lon1)
-    val a = F.pow(F.sin(dLat / 2), 2) +
-      F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.pow(F.sin(dLon / 2), 2)
-    F.lit(2) * r * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
   }
 
   /** Register SQL names (geohash_encode, st_covers_wkt, ...) on a session. */

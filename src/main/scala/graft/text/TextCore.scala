@@ -298,14 +298,6 @@ object TextCore {
     inter.toDouble / (la + lb - inter)
   }
 
-  /** Estimated Jaccard from two equal-length MinHash signatures. */
-  def minhashJaccard(a: Array[Long], b: Array[Long]): Double = {
-    var eq = 0
-    var i = 0
-    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / a.length
-  }
-
   def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /**

@@ -31,9 +31,7 @@ class SessionLintSpec extends AnyFunSuite {
     "SPARK_GRAFT_ONLY", // Gate.only: Bench and Verify
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS", "SPARK_GRAFT_SCALE_SF1", // Bench
     "SPARK_GRAFT_DUMP", // RunQuery
-    "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_PLAN_TAG", "SPARK_GRAFT_PROFILE_RUNS", // ProfileQ
-    "SPARK_GRAFT_GRAPH_BCAST_MAX", // Graph
-    "SPARK_GRAFT_SCATTER_MAX_BYTES", "SPARK_GRAFT_SCATTER_MIN_BYTES") // Tables
+    "SPARK_GRAFT_PLAN_DIR", "SPARK_GRAFT_PLAN_TAG", "SPARK_GRAFT_PROFILE_RUNS") // ProfileQ
 
   test("src/main reads exactly the listed SPARK_GRAFT_* knobs") {
     val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
@@ -50,5 +48,14 @@ class SessionLintSpec extends AnyFunSuite {
     }
     assert(names.nonEmpty)
     assert(names.filterNot { case (_, n) => n.exists(knobs) }.isEmpty)
+  }
+
+  test("src/main uses no Structured Streaming API") {
+    val streaming = """\b(readStream|writeStream|GroupState|flatMapGroupsWithState|""" +
+      """withWatermark|dropDuplicatesWithinWatermark)\b"""
+    val hits = sources.flatMap { case (p, s) =>
+      streaming.r.findAllIn(s).map(h => s"$p: $h")
+    }
+    assert(hits.isEmpty)
   }
 }

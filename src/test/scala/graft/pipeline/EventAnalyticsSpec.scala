@@ -2052,4 +2052,16 @@ class EventAnalyticsSpec extends AnyFunSuite {
       if (r != null) assert(fromDriver(r), name)
     }
   }
+
+  // ---- time windows and sessions (sf0.001 events) ----
+
+  private val dir = "/root/testdata/sf0.001"
+  private lazy val events = graft.sources.Tables.table(spark, dir, "events").cache()
+
+  test("hopping counts: every non-null event in 4 overlapping windows") {
+    // membership invariant: Σ n over hopping windows = 4 × event count
+    // (duration/slide = 4 overlapping memberships per event)
+    val total = EventAnalytics.hoppingCounts(events).agg(sum(col("n"))).head().getLong(0)
+    assert(total == 4L * events.filter(col("ts").isNotNull).count())
+  }
 }
