@@ -3,7 +3,7 @@ package graft.api
 import graft.sql.functions.st_distance_euclidean
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GeohashCellNeighbors, GeohashEncode}
+import org.apache.spark.sql.graft.SqlFunctions
 
 /**
  * Spatial distance join: all pairs (a, b) with planar Euclidean distance
@@ -51,11 +51,11 @@ object SpatialJoin {
     val aPref = a.columns.map(n => col(n).as(s"a_$n")).toSeq
     val bPref = b.columns.map(n => col(n).as(s"b_$n")).toSeq
     val probe = a.select(aPref: _*)
-      .withColumn("__cell", explode(c(GeohashCellNeighbors(
-        e(col(s"a_$latCol")), e(col(s"a_$lonCol")), e(lit(p))))))
+      .withColumn("__cell", explode(
+        SqlFunctions.geohashCellNeighbors(col(s"a_$latCol"), col(s"a_$lonCol"), lit(p))))
     val build = b.select(bPref: _*)
-      .withColumn("__cell", c(GeohashEncode(
-        e(col(s"b_$latCol")), e(col(s"b_$lonCol")), e(lit(p)))))
+      .withColumn("__cell",
+        SqlFunctions.geohashEncode(col(s"b_$latCol"), col(s"b_$lonCol"), lit(p)))
     val d2 = (col(s"a_$lonCol") - col(s"b_$lonCol")) * (col(s"a_$lonCol") - col(s"b_$lonCol")) +
       (col(s"a_$latCol") - col(s"b_$latCol")) * (col(s"a_$latCol") - col(s"b_$latCol"))
     probe.join(build, "__cell")
@@ -101,18 +101,18 @@ object SpatialJoin {
   def knnJoinAgg(a: DataFrame, b: DataFrame, k: Int, radius: Double,
                  aKeyCol: String, bIdCol: String,
                  lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    import org.apache.spark.sql.graft.{DoubleSortableBits, SortableBitsToDouble, TopNByOrd}
+    import org.apache.spark.sql.graft.TopNByOrd
     val joined = distanceJoin(a, b.filter(col(bIdCol).isNotNull), radius, lonCol, latCol)
       .withColumn("distance", st_distance_euclidean(
         col(s"a_$lonCol"), col(s"a_$latCol"), col(s"b_$lonCol"), col(s"b_$latCol")))
     val agg = c(TopNByOrd(
-      DoubleSortableBits(e(col("distance"))),
+      SqlFunctions.doubleSortableBits.expr(e(col("distance"))),
       e(col(s"b_$bIdCol")), k).toAggregateExpression())
     joined.groupBy(col(s"a_$aKeyCol"))
       .agg(agg.as("__topn"))
       .select(col(s"a_$aKeyCol"), explode(col("__topn")).as("__p"))
       .select(col(s"a_$aKeyCol"),
         col("__p.id").as(s"b_$bIdCol"),
-        c(SortableBitsToDouble(e(col("__p.ord")))).as("distance"))
+        SqlFunctions.sortableBitsToDouble(col("__p.ord")).as("distance"))
   }
 }

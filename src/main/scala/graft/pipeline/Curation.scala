@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlFunctions
 
 /**
  * One-call corpus curation — the composition a production training-data
@@ -335,7 +336,7 @@ object Curation {
    * is_contaminated 0/1); the is_contaminated=1 ids are the anti-joinable
    * drop (or audit) list.
    *
-   * Grams are [[org.apache.spark.sql.graft.WordShingleHashes]] — the
+   * Grams are `word_shingle_hashes` — the
    * corpus-standard [a-z]+ lowercase tokens, n-word windows, whole-text
    * gram under n tokens — so the report replays in any engine from the
    * shared tokenizer. Plan shape: the benchmark side (eval-set-sized by
@@ -348,12 +349,8 @@ object Curation {
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String = "text",
                     ngramWords: Int = 13): DataFrame = {
-    import org.apache.spark.sql.graft.WordShingleHashes
-    import org.apache.spark.sql.GraftShims
     require(ngramWords >= 1, s"ngramWords must be >= 1, got $ngramWords")
-    def grams(t: Column): Column = GraftShims.column(
-      WordShingleHashes(GraftShims.expression(t),
-        GraftShims.expression(lit(ngramWords))))
+    def grams(t: Column): Column = SqlFunctions.wordShingleHashes(t, lit(ngramWords))
     val bg = benchmark
       .select(explode(grams(col(benchTextCol))).as("gram")).distinct()
     val hits = corpus

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{NgramJaccard, SimHash64}
+import org.apache.spark.sql.graft.SqlFunctions
 
 /**
  * Document deduplication for large-scale training-data pipelines.
@@ -20,10 +20,10 @@ object Dedup {
   private def e(col: Column) = GraftShims.expression(col)
 
   def simhash(text: Column, shingle: Int = 5): Column =
-    c(SimHash64(e(text), e(lit(shingle))))
+    SqlFunctions.simhash64(text, lit(shingle))
 
   def ngramJaccard(a: Column, b: Column, n: Int = 5): Column =
-    c(NgramJaccard(e(a), e(b), e(lit(n))))
+    SqlFunctions.ngramJaccard(a, b, lit(n))
 
   /**
    * Exact dedup: one representative row id per identical tuple of `cols`
@@ -149,9 +149,8 @@ object Dedup {
                       numHashes: Int = 64, bands: Int = 16, shingle: Int = 5,
                       threshold: Double = 0.8, maxBucket: Int = 1000,
                       metrics: Option[Observation] = None): DataFrame = {
-    import org.apache.spark.sql.graft.MinHashSig
     lshPairsImpl(df, idCol, textCol,
-      t => c(MinHashSig(e(t), e(lit(numHashes)), e(lit(shingle)))),
+      t => SqlFunctions.minhashSig(t, lit(numHashes), lit(shingle)),
       (a, b) => ngramJaccard(a, b, shingle),
       bands, threshold, maxBucket, metrics)
   }
@@ -173,10 +172,9 @@ object Dedup {
                            shingleWords: Int = 13,
                            threshold: Double = 0.8, maxBucket: Int = 1000,
                            metrics: Option[Observation] = None): DataFrame = {
-    import org.apache.spark.sql.graft.{MinHashSigWords, WordNgramJaccard}
     lshPairsImpl(df, idCol, textCol,
-      t => c(MinHashSigWords(e(t), e(lit(numHashes)), e(lit(shingleWords)))),
-      (a, b) => c(WordNgramJaccard(e(a), e(b), e(lit(shingleWords)))),
+      t => SqlFunctions.minhashSigWords(t, lit(numHashes), lit(shingleWords)),
+      (a, b) => SqlFunctions.wordNgramJaccard(a, b, lit(shingleWords)),
       bands, threshold, maxBucket, metrics)
   }
 
@@ -192,7 +190,6 @@ object Dedup {
     // default 64 hashes / 16 bands of 4: detection prob at s=0.8 is
     // 1-(1-0.8^4)^16 ≈ 0.9998 — same band width as 128/32 at half the
     // signature cost (the dominant term of corpus-scale dedup)
-    import org.apache.spark.sql.graft.{SigBands, SigJaccard}
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
 
     // 1. one signature pass per document (the only scan of the full text)
@@ -209,7 +206,7 @@ object Dedup {
     //    measured ~3× the cost of this whole pipeline.)
     //    maxBucket caps the quadratic term on skewed buckets.
     val grouped = sigs
-      .select(col("id"), col("sig"), posexplode(c(SigBands(e(col("sig")), e(lit(bands))))))
+      .select(col("id"), col("sig"), posexplode(SqlFunctions.sigBands(col("sig"), lit(bands))))
       .groupBy(col("pos"), col("col"))
       .agg(collect_list(struct(col("id"), col("sig"))).as("items"))
     val buckets = capBuckets(grouped, size(col("items")), maxBucket, metrics)
@@ -221,7 +218,7 @@ object Dedup {
       .select(explode(col("items")).as("a"), col("items"))
       .select(col("a"), explode(col("items")).as("b"))
       .filter(col("a.id") < col("b.id"))
-      .filter(c(SigJaccard(e(col("a.sig")), e(col("b.sig")))) >= threshold - 0.2)
+      .filter(SqlFunctions.sigJaccard(col("a.sig"), col("b.sig")) >= threshold - 0.2)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
@@ -289,9 +286,8 @@ object Dedup {
                        checkpointDir: Option[String] = None,
                        chainBands: Int = Int.MaxValue,
                        labelBroadcastMaxEntries: Long = 8000000L): DataFrame = {
-    import org.apache.spark.sql.graft.MinHashSig
     lshLabelsImpl(df, idCol, textCol,
-      t => c(MinHashSig(e(t), e(lit(numHashes)), e(lit(shingle)))),
+      t => SqlFunctions.minhashSig(t, lit(numHashes), lit(shingle)),
       (a, b) => ngramJaccard(a, b, shingle),
       bands, threshold, maxBucket, metrics, maxIter, checkpointDir, chainBands,
       labelBroadcastMaxEntries)
@@ -335,8 +331,7 @@ object Dedup {
       checkpointDir)
     val verify: (Column, Column) => Column =
       if (wordShingle > 0)
-        (a, b) => c(org.apache.spark.sql.graft.WordNgramJaccard(
-          e(a), e(b), e(lit(wordShingle))))
+        (a, b) => SqlFunctions.wordNgramJaccard(a, b, lit(wordShingle))
       else (a, b) => ngramJaccard(a, b, shingle)
     labelsFromBuckets(base, buckets, verify, threshold, maxIter,
       checkpointDir, chainBands, labelBroadcastMaxEntries)
@@ -355,7 +350,6 @@ object Dedup {
                             checkpointDir: Option[String],
                             chainBands: Int,
                             labelBroadcastMaxEntries: Long): DataFrame = {
-    import org.apache.spark.sql.graft.{SigBands, SigJaccard}
     val base = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     // id-sorted bucket arrays CARRYING the signatures (the [[lshPairsImpl]]
     // trade: the sig is the compact document sketch that lets the estimate
@@ -366,7 +360,7 @@ object Dedup {
     val buckets = Checkpoints.materialize(
       capBuckets(base
         .select(col("id"), sigOf(col("text")).as("sig"))
-        .select(col("id"), col("sig"), posexplode(c(SigBands(e(col("sig")), e(lit(bands))))))
+        .select(col("id"), col("sig"), posexplode(SqlFunctions.sigBands(col("sig"), lit(bands))))
         .groupBy(col("pos"), col("col"))
         .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("items")),
         size(col("items")), maxBucket, metrics),
@@ -387,9 +381,8 @@ object Dedup {
                                 checkpointDir: Option[String],
                                 chainBands: Int,
                                 labelBroadcastMaxEntries: Long): DataFrame = {
-    import org.apache.spark.sql.graft.SigJaccard
     val estOk = (a: Column, b: Column) =>
-      c(SigJaccard(e(a), e(b))) >= threshold - 0.2
+      SqlFunctions.sigJaccard(a, b) >= threshold - 0.2
     // exact verify on an estimate-surviving candidate set (text joins only;
     // the estimate prefilter is REQUIRED for exactness — its false
     // negatives are part of the graph contract — and always runs at the
@@ -568,18 +561,17 @@ object Dedup {
                         maxVerifyBytes: Long = 16L << 30): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.{ShingleHashes, SortedJaccardAtLeast}
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
     // ONE shingle pass: the gram table feeds FOUR column-pruned consumers
     // (the document-frequency aggregate, the prefix join, and both verify
     // sides ga/gb), each of which would otherwise re-scan the text and
     // re-hash every shingle — the dominant per-row cost of the operator
-    // (measured at the sf0.1 gate: 4 ShingleHashes passes → 1, q_dedup_ngram
+    // (measured at the sf0.1 gate: 4 shingle_hashes passes → 1, q_dedup_ngram
     // warm 3.6 s → 3.3 s). The materialized table is ~8 B per distinct gram
     // — the same order as the text it replaces — and spills serialized.
     val docGrams = Checkpoints.materialize(
       base.select(col("id"),
-        array_sort(c(ShingleHashes(e(col("text")), e(lit(shingle))))).as("grams")),
+        array_sort(SqlFunctions.shingleHashes(col("text"), lit(shingle))).as("grams")),
       None)
     val exploded = docGrams
       .select(col("id"), size(col("grams")).as("sz"), explode(col("grams")).as("gram"))
@@ -697,7 +689,7 @@ object Dedup {
         candidates.dropDuplicates("id_a", "id_b").join(ga, "id_a").join(gb, "id_b")
     verified
       .withColumn("jaccard",
-        c(SortedJaccardAtLeast(e(col("g_a")), e(col("g_b")), e(lit(threshold)))))
+        SqlFunctions.sortedJaccardAtLeast(col("g_a"), col("g_b"), lit(threshold)))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
       .dropDuplicates("id_a", "id_b")
@@ -721,7 +713,7 @@ object Dedup {
    * doc may be contained in any larger one, which is also why this join
    * is intrinsically heavier than the Jaccard one). Verification is one
    * early-abandon sorted-merge intersect
-   * ([[org.apache.spark.sql.graft.SortedIntersectAtLeast]]) per distinct
+   * (`sorted_intersect_at_least`) per distinct
    * candidate; everything after the threshold test is integer, so the
    * oracle replays the permille values exactly.
    *
@@ -769,7 +761,6 @@ object Dedup {
     require(thresholdPermille >= 1 && thresholdPermille <= 1000,
       s"thresholdPermille must be in [1, 1000], got $thresholdPermille")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.{ShingleHashes, SortedIntersectAtLeast}
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
     // ONE shingle pass for the FIVE column-pruned consumers (df-frequency,
     // prefix, the full-side index, and both verify sides) — the
@@ -777,7 +768,7 @@ object Dedup {
     // effect (q_dedup_containment warm 4.6 s → 3.3 s at sf0.1).
     val docGrams = Checkpoints.materialize(
       base.select(col("id"),
-        array_sort(c(ShingleHashes(e(col("text")), e(lit(shingle))))).as("grams"))
+        array_sort(SqlFunctions.shingleHashes(col("text"), lit(shingle))).as("grams"))
         .filter(size(col("grams")) > 0),
       None)
     val exploded = docGrams
@@ -925,7 +916,7 @@ object Dedup {
       .withColumn("__need",
         expr(s"($thresholdPermille * __min + 999) div 1000").cast("int"))
       .withColumn("__inter",
-        c(SortedIntersectAtLeast(e(col("g_a")), e(col("g_b")), e(col("__need")))))
+        SqlFunctions.sortedIntersectAtLeast(col("g_a"), col("g_b"), col("__need")))
       .filter(col("__inter") >= col("__need").cast("long"))
       .select(col("id_a"), col("id_b"),
         expr("(1000 * __inter) div __min").as("containment_permille"))
@@ -936,9 +927,8 @@ object Dedup {
     * broadcast gating. One tiny job (limit-scan, no full pass). */
   private def sampledDocGramBytes(df: DataFrame, textCol: String, shingle: Int,
                                   sampleN: Int = 256): Double = {
-    import org.apache.spark.sql.graft.ShingleHashes
     val sizes = df.select(col(textCol)).limit(sampleN)
-      .select(size(c(ShingleHashes(e(col(textCol)), e(lit(shingle))))).as("sz"))
+      .select(size(SqlFunctions.shingleHashes(col(textCol), lit(shingle))).as("sz"))
       .collect().map(_.getInt(0))
     if (sizes.isEmpty) 0.0 else sizes.map(_.toDouble * 8 + 48).sum / sizes.length
   }
@@ -948,9 +938,8 @@ object Dedup {
     * bitset path of [[ngramJaccardPairsFused]]. */
   private def sampleGramStats(df: DataFrame, textCol: String, shingle: Int,
                               sampleN: Int = 256): (Int, Double) = {
-    import org.apache.spark.sql.graft.ShingleHashes
     val arrs = df.select(col(textCol)).limit(sampleN)
-      .select(c(ShingleHashes(e(col(textCol)), e(lit(shingle)))).as("g"))
+      .select(SqlFunctions.shingleHashes(col(textCol), lit(shingle)).as("g"))
       .collect().map(_.getSeq[Long](0))
     if (arrs.isEmpty) (0, 0.0)
     else {
@@ -1025,11 +1014,11 @@ object Dedup {
                              suffixFilterDepth: Int = 0): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(Set("auto", "array", "bitset")(mode), s"unknown mode $mode")
-    import org.apache.spark.sql.graft.{CollectBucketCapped, JaccardBucketPairs, PrefixBucketRows, ShingleHashes}
+    import org.apache.spark.sql.graft.{CollectBucketCapped, JaccardBucketPairs, PrefixBucketRows}
     val spark = df.sparkSession
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
     val docGrams = base.select(col("id"),
-      array_sort(c(ShingleHashes(e(col("text")), e(lit(shingle))))).as("grams"))
+      array_sort(SqlFunctions.shingleHashes(col("text"), lit(shingle))).as("grams"))
 
     // ---- mode resolution (sample → maybe exact index) ----
     val (sampleVocab, sampleAvgSz) =
@@ -1862,7 +1851,6 @@ object Dedup {
                          metrics: Option[Observation] = None,
                          targetRecall: Double = 0.99,
                          corpusSizeHint: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.graft.{VecCosine, VecLshBands}
     val (autoB, autoR) = cosineLshParams(threshold, targetRecall, corpusSizeHint)
     val b = if (bands > 0) bands else autoB
     val r = if (planesPerBand > 0) planesPerBand else autoR
@@ -1872,7 +1860,7 @@ object Dedup {
     //    (single expression for all bands — codegen-safe at hundreds of bands)
     val grouped = base
       .select(col("id"), posexplode(
-        c(VecLshBands(e(col("vec")), e(lit(b)), e(lit(r)), e(lit(seed))))))
+        SqlFunctions.vecLshBands(col("vec"), lit(b), lit(r), lit(seed))))
       .groupBy(col("pos"), col("col"))
       .agg(collect_list(col("id")).as("ids"))
     // when the band cap binds (low threshold × large corpus) the delivered
@@ -1911,7 +1899,7 @@ object Dedup {
     val va = base.select(col("id").as("id_a"), col("vec").as("vec_a")).hint(vecJoinHint)
     val vb = base.select(col("id").as("id_b"), col("vec").as("vec_b")).hint(vecJoinHint)
     pairs.join(va, "id_a").join(vb, "id_b")
-      .withColumn("cosine", c(VecCosine(e(col("vec_a")), e(col("vec_b")))))
+      .withColumn("cosine", SqlFunctions.vecCosine(col("vec_a"), col("vec_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
       .dropDuplicates("id_a", "id_b")
@@ -1940,7 +1928,7 @@ object Dedup {
    * passage mass that drives a keep/trim/drop curation decision.
    *
    * Plan shape — ONE wide shuffle on the gram stream, total: grams are
-   * scan-local (one-pass native [[org.apache.spark.sql.graft.AlignedGramMd5s]]
+   * scan-local (one-pass native `aligned_gram_md5s`
    * + explode — composing per-position `substr` expressions instead would
    * rescan the string per offset, O(len²) per doc, measured 30× slower).
    * The naive shape (gram-frequency aggregate, then join the ≥2-doc gram
@@ -1961,9 +1949,8 @@ object Dedup {
                            textCol: String = "text",
                            minLen: Int = 40): DataFrame = {
     require(minLen >= 2, "minLen must be at least 2")
-    import org.apache.spark.sql.graft.AlignedGramMd5s
     val docGrams = df.select(col(idCol).as("doc_id"),
-      c(AlignedGramMd5s(e(col(textCol)), e(lit(minLen)))).as("gs"))
+      SqlFunctions.alignedGramMd5s(col(textCol), lit(minLen)).as("gs"))
     val totals = docGrams
       .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"))
       .filter(col("n_grams") > 0)
@@ -2021,9 +2008,8 @@ object Dedup {
                           minLen: Int): DataFrame = {
     require(minLen >= 2, "minLen must be at least 2")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.AlignedGramPosMd5s
     val pos = df.select(col(idCol).as("doc_id"),
-        explode(c(AlignedGramPosMd5s(e(col(textCol)), e(lit(minLen))))).as("pg"))
+        explode(SqlFunctions.alignedGramPosMd5s(col(textCol), lit(minLen))).as("pg"))
       .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
     val sharedGrams = pos.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -2314,16 +2300,15 @@ object Dedup {
                         bands: Int = 16, shingle: Int = 5,
                         wordShingle: Int = 0,
                         mode: String = "overwrite"): Unit = {
-    import org.apache.spark.sql.graft.{MinHashSig, MinHashSigWords, SigBands}
     val sig =
       if (wordShingle > 0)
-        c(MinHashSigWords(e(col(textCol)), e(lit(numHashes)), e(lit(wordShingle))))
-      else c(MinHashSig(e(col(textCol)), e(lit(numHashes)), e(lit(shingle))))
+        SqlFunctions.minhashSigWords(col(textCol), lit(numHashes), lit(wordShingle))
+      else SqlFunctions.minhashSig(col(textCol), lit(numHashes), lit(shingle))
     df.select(col(idCol).cast("long").as("id"), sig.as("sig"))
       .write.mode(mode).parquet(s"$path/sigs")
     df.sparkSession.read.parquet(s"$path/sigs")
       .select(col("id"),
-        posexplode(c(SigBands(e(col("sig")), e(lit(bands))))).as(Seq("band", "key")))
+        posexplode(SqlFunctions.sigBands(col("sig"), lit(bands))).as(Seq("band", "key")))
       .repartitionByRange(col("key"))
       .sortWithinPartitions(col("key"), col("band"))
       .write.mode(mode).parquet(s"$path/bands")
@@ -2374,18 +2359,18 @@ object Dedup {
                                    threshold: Double, maxPushdownKeys: Int,
                                    bloomPath: Option[String],
                                    wordShingle: Int): DataFrame = {
-    import org.apache.spark.sql.graft.{BloomKeyMightContain, MinHashSig, MinHashSigWords, SigBands, SigJaccard}
+    import org.apache.spark.sql.graft.BloomKeyMightContain
     val bandsIdx = spark.read.parquet(s"$indexPath/bands")
     val sigsIdx = spark.read.parquet(s"$indexPath/sigs")
     val bsig =
       if (wordShingle > 0)
-        c(MinHashSigWords(e(col(textCol)), e(lit(numHashes)), e(lit(wordShingle))))
-      else c(MinHashSig(e(col(textCol)), e(lit(numHashes)), e(lit(shingle))))
+        SqlFunctions.minhashSigWords(col(textCol), lit(numHashes), lit(wordShingle))
+      else SqlFunctions.minhashSig(col(textCol), lit(numHashes), lit(shingle))
     val bsigs = batch.select(col(idCol).as("new_id"), bsig.as("new_sig"))
     // SKINNY band rows on both join sides: the in-bucket row product pays
     // 24-byte rows, and signatures attach only to the DEDUPED candidates
     val bbandAll = bsigs.select(col("new_id"),
-      posexplode(c(SigBands(e(col("new_sig")), e(lit(bands))))).as(Seq("band", "key")))
+      posexplode(SqlFunctions.sigBands(col("new_sig"), lit(bands))).as(Seq("band", "key")))
     // optional Bloom pre-screen (see [[writeBloomIndex]]): a mostly-novel
     // batch drops most of its bucket keys SCAN-LOCALLY, before the key
     // collect and the index join — no false negatives, so results are
@@ -2410,7 +2395,7 @@ object Dedup {
       .dropDuplicates("new_id", "corpus_id")
       .join(sigsIdx.select(col("id").as("corpus_id"), col("sig")), "corpus_id")
       .join(bsigs, "new_id")
-      .filter(c(SigJaccard(e(col("sig")), e(col("new_sig")))) >= threshold - 0.2)
+      .filter(SqlFunctions.sigJaccard(col("sig"), col("new_sig")) >= threshold - 0.2)
       .select(col("new_id"), col("corpus_id"))
   }
 
@@ -2424,8 +2409,7 @@ object Dedup {
     val ct = corpus.select(col(idCol).as("corpus_id"), col(textCol).as("corpus_text"))
     val verify =
       if (wordShingle > 0)
-        c(org.apache.spark.sql.graft.WordNgramJaccard(
-          e(col("new_text")), e(col("corpus_text")), e(lit(wordShingle))))
+        SqlFunctions.wordNgramJaccard(col("new_text"), col("corpus_text"), lit(wordShingle))
       else ngramJaccard(col("new_text"), col("corpus_text"), shingle)
     cand.join(bt, "new_id").join(ct, "corpus_id")
       .withColumn("jaccard", verify)

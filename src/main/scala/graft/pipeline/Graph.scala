@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlFunctions
 
 /**
  * Distributed graph analytics over edge DataFrames.
@@ -1857,7 +1858,8 @@ object Graph {
    * frontier against the once-materialized id-sorted adjacency-ARRAY
    * table (current node's array + prev's array) and resolves the
    * weighted pick inside one codegen'd expression
-   * ([[org.apache.spark.sql.graft.Node2vecChoose]] — a two-pointer merge
+   * (the `node2vec_choose` row of [[org.apache.spark.sql.graft.SqlFunctions]],
+   * a two-pointer merge
    * over the two sorted arrays). The previous shape exploded the frontier
    * into per-neighbor rows, left-joined an edge-existence mark per
    * (prev, nbr), and ran a per-walk windowed cumsum: three shuffles of
@@ -1925,20 +1927,12 @@ object Graph {
         col("prev") === col("__p"))
       state = Checkpoints.materialize(
         withPrev.select(col("start"), col("walk"), col("cur").as("prev"),
-          colOf(org.apache.spark.sql.graft.Node2vecChoose(
-            exprOf(col("nbrs")), exprOf(col("prev_nbrs")),
-            exprOf(col("prev")), exprOf(walkPick(s)),
-            returnPermille.toLong, farPermille.toLong)).as("cur")),
+          SqlFunctions.node2vecChoose(col("nbrs"), col("prev_nbrs"), col("prev"),
+            walkPick(s), lit(returnPermille.toLong), lit(farPermille.toLong)).as("cur")),
         checkpointDir)
       steps += state.select(col("start"), col("walk"),
         lit(s.toLong).as("step"), col("cur").as("node"))
     }
     steps.reduce(_ union _)
   }
-
-  private def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.Column = org.apache.spark.sql.GraftShims.column(e)
-  private def exprOf(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftShims.expression(c)
 }

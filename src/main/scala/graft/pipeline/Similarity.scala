@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{VecCosineConst, VecLshBucket, VecNearestCentroid, VecOps}
+import org.apache.spark.sql.graft.{SqlFunctions, VecCosineConst, VecNearestCentroid, VecOps}
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
@@ -23,7 +23,7 @@ object Similarity {
     c(VecCosineConst(e(vec), query))
 
   def lshBucket(vec: Column, planes: Int = 12, seed: Long = 42L): Column =
-    c(VecLshBucket(e(vec), e(lit(planes)), e(lit(seed))))
+    SqlFunctions.vecLshBucket(vec, lit(planes), lit(seed))
 
   /** Exact brute-force cosine top-k. Deterministic order: (score desc, id). */
   def cosineTopK(df: DataFrame, query: Array[Float], k: Int,
@@ -454,19 +454,20 @@ object Similarity {
   def cosineTopKJoin(queries: DataFrame, corpus: DataFrame, k: Int,
                      qIdCol: String = "query_id", idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.{DoubleSortableBits, SortableBitsToDouble, TopNByOrd, VecCosine}
+    import org.apache.spark.sql.graft.TopNByOrd
     require(k >= 1, "k must be positive")
     val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
     val scored = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
       .join(broadcast(q))
-      .withColumn("__score", c(VecCosine(e(col("__cv")), e(col("__qv")))))
+      .withColumn("__score", SqlFunctions.vecCosine(col("__cv"), col("__qv")))
     val agg = c(TopNByOrd(
-      DoubleSortableBits(e(-col("__score"))), e(col("__cid")), k).toAggregateExpression())
+      SqlFunctions.doubleSortableBits.expr(e(-col("__score"))), e(col("__cid")), k)
+      .toAggregateExpression())
     scored.groupBy(col("query_id"))
       .agg(agg.as("__topn"))
       .select(col("query_id"), explode(col("__topn")).as("__p"))
       .select(col("query_id"), col("__p.id").as(idCol),
-        (-c(SortableBitsToDouble(e(col("__p.ord"))))).as("score"))
+        (-SqlFunctions.sortableBitsToDouble(col("__p.ord"))).as("score"))
   }
 
   /**
@@ -500,7 +501,7 @@ object Similarity {
                   centroids: Array[Array[Float]], k: Int, nProbe: Int = 2,
                   qIdCol: String = "query_id", idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.{DoubleSortableBits, SortableBitsToDouble, TopNByOrd, VecCosine, VecProbeCells}
+    import org.apache.spark.sql.graft.{TopNByOrd, VecProbeCells}
     require(k >= 1, "k must be positive")
     require(nProbe >= 1, "nProbe must be positive")
     val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
@@ -509,14 +510,15 @@ object Similarity {
     val corp = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
       .withColumn("__cell", c(VecNearestCentroid(e(col("__cv")), centroids)))
     val scored = corp.join(broadcast(q), Seq("__cell"))
-      .withColumn("__score", c(VecCosine(e(col("__cv")), e(col("__qv")))))
+      .withColumn("__score", SqlFunctions.vecCosine(col("__cv"), col("__qv")))
     val agg = c(TopNByOrd(
-      DoubleSortableBits(e(-col("__score"))), e(col("__cid")), k).toAggregateExpression())
+      SqlFunctions.doubleSortableBits.expr(e(-col("__score"))), e(col("__cid")), k)
+      .toAggregateExpression())
     scored.groupBy(col("query_id"))
       .agg(agg.as("__topn"))
       .select(col("query_id"), explode(col("__topn")).as("__p"))
       .select(col("query_id"), col("__p.id").as(idCol),
-        (-c(SortableBitsToDouble(e(col("__p.ord"))))).as("score"))
+        (-SqlFunctions.sortableBitsToDouble(col("__p.ord"))).as("score"))
   }
 
   /**
@@ -549,7 +551,7 @@ object Similarity {
                         k: Int, nProbe: Int = 2,
                         qIdCol: String = "query_id", idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.{DoubleSortableBits, SortableBitsToDouble, TopNByOrd, VecCosine, VecProbeCells}
+    import org.apache.spark.sql.graft.{TopNByOrd, VecProbeCells}
     require(k >= 1, "k must be positive")
     require(nProbe >= 1, "nProbe must be positive")
     val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
@@ -562,14 +564,15 @@ object Similarity {
       .select(col(idCol).as("__cid"), col(vecCol).as("__cv"),
         col("ivf_cell").as("__cell"))
     val scored = corp.join(broadcast(q), Seq("__cell"))
-      .withColumn("__score", c(VecCosine(e(col("__cv")), e(col("__qv")))))
+      .withColumn("__score", SqlFunctions.vecCosine(col("__cv"), col("__qv")))
     val agg = c(TopNByOrd(
-      DoubleSortableBits(e(-col("__score"))), e(col("__cid")), k).toAggregateExpression())
+      SqlFunctions.doubleSortableBits.expr(e(-col("__score"))), e(col("__cid")), k)
+      .toAggregateExpression())
     scored.groupBy(col("query_id"))
       .agg(agg.as("__topn"))
       .select(col("query_id"), explode(col("__topn")).as("__p"))
       .select(col("query_id"), col("__p.id").as(idCol),
-        (-c(SortableBitsToDouble(e(col("__p.ord"))))).as("score"))
+        (-SqlFunctions.sortableBitsToDouble(col("__p.ord"))).as("score"))
   }
 
   /**
@@ -598,7 +601,6 @@ object Similarity {
                            tau: Double = 0.5, maxCluster: Int = 100000,
                            metrics: Option[org.apache.spark.sql.Observation] = None)
       : DataFrame = {
-    import org.apache.spark.sql.graft.VecCosine
     require(nClusters >= 1, "nClusters must be positive")
     val cent = df.select(col(vecCol).as("v"),
         md5(col(idCol).cast("string")).as("h"), col(idCol).as("id"))
@@ -620,7 +622,7 @@ object Similarity {
       .select(explode(col("items")).as("a"), col("items"))
       .select(col("a"), explode(col("items")).as("b"))
       .filter(col("a.id") < col("b.id"))
-      .withColumn("cos", c(VecCosine(e(col("a.v")), e(col("b.v")))))
+      .withColumn("cos", SqlFunctions.vecCosine(col("a.v"), col("b.v")))
       .filter(col("cos") >= tau)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cos"))
   }
@@ -784,14 +786,13 @@ object Similarity {
   def hardNegatives(anchors: DataFrame, corpus: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.graft.VecCosine
     val a = anchors.select(col(idCol).as("anchor_id"), col(vecCol).as("__av"),
       col(labelCol).as("__albl"))
     val scored = corpus
       .join(broadcast(a), col(idCol) =!= col("anchor_id"))
       .select(col("anchor_id"), col("__albl"), col(idCol).as("cid"),
         col(labelCol).as("clbl"),
-        c(VecCosine(e(col(vecCol)), e(col("__av")))).as("s"))
+        SqlFunctions.vecCosine(col(vecCol), col("__av")).as("s"))
     scored.groupBy(col("anchor_id"))
       .agg(
         max(when(col("clbl") === col("__albl"),

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{LangId, WinnowFingerprint}
+import org.apache.spark.sql.graft.SqlFunctions
 
 /**
  * Text-quality operators for training-data curation: token counting,
@@ -468,14 +468,14 @@ object TextAnalysis {
     * starting token position) — the column form of
     * [[graft.text.TextCore.tokenNgramsAll]]. */
   def tokenNgramsAll(text: Column, n: Int): Column =
-    c(org.apache.spark.sql.graft.TokenNgramsAll(e(text), e(lit(n))))
+    SqlFunctions.tokenNgramsAll(text, lit(n))
 
-  def langId(text: Column): Column = c(LangId(e(text)))
+  def langId(text: Column): Column = SqlFunctions.langId(text)
 
   /** Winnowing fingerprint set (array<long>) — robust doc identity for
     * near-dup detection and leakage scans. */
   def fingerprint(text: Column, shingle: Int = 5, window: Int = 4): Column =
-    c(WinnowFingerprint(e(text), e(lit(shingle)), e(lit(window))))
+    SqlFunctions.winnowFingerprint(text, lit(shingle), lit(window))
 
   /** Canonical-text hash: lowercase, strip non-alphanumerics, md5. */
   def canonicalHash(text: Column): Column =
@@ -494,8 +494,7 @@ object TextAnalysis {
    * projection: no shuffle, streams unchanged.
    */
   def normalizeText(text: Column): Column = {
-    import org.apache.spark.sql.graft.NfcNormalize
-    trim(regexp_replace(lower(c(NfcNormalize(e(text)))), "[ \\t\\n\\r]+", " "))
+    trim(regexp_replace(lower(SqlFunctions.nfcNormalize(text)), "[ \\t\\n\\r]+", " "))
   }
 
   /**
@@ -600,7 +599,7 @@ object TextAnalysis {
   def tfidfTopTerms(df: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id", minTermLen: Int = 3,
                     topK: Int = 5): DataFrame = {
-    import org.apache.spark.sql.graft.{DoubleSortableBits, TopNByOrdStr}
+    import org.apache.spark.sql.graft.TopNByOrdStr
     val n = df.count()
     val tf = df.select(col(idCol).as("doc_id"),
         explode(split(lower(col(textCol)), "[^a-z]+")).as("term"))
@@ -613,7 +612,7 @@ object TextAnalysis {
         col("tf").cast("double") * lit(n.toDouble) / col("df").cast("double"))
     val sep = "\u001F"
     val agg = c(TopNByOrdStr(
-      org.apache.spark.sql.graft.DoubleSortableBits(e(-col("score"))),
+      SqlFunctions.doubleSortableBits.expr(e(-col("score"))),
       e(concat_ws(sep, col("term"), col("tf"), col("df"))),
       topK).toAggregateExpression())
     scored.groupBy(col("doc_id"))
@@ -1053,12 +1052,11 @@ object TextAnalysis {
                           textCol: String = "text",
                           idCol: String = "doc_id"): DataFrame = {
     require(n >= 1, "n must be positive")
-    import org.apache.spark.sql.graft.TokenNgrams
     // native one-pass tokenize+gram+distinct: the composed higher-order
     // expression (sequence → slice → concat_ws, then array_distinct) built
     // a per-gram expression tree whose eval dominated the whole scan —
     // measured 3.8 s → 0.6 s warm on the sf0.1 gate corpus
-    def ngrams(t: Column): Column = c(TokenNgrams(e(t), e(lit(n))))
+    def ngrams(t: Column): Column = SqlFunctions.tokenNgrams(t, lit(n))
     val evalGrams = evalDocs.select(explode(ngrams(col(textCol))).as("gram")).distinct()
     val docGrams = docs.select(col(idCol), explode(ngrams(col(textCol))).as("gram"))
     docGrams.join(broadcast(evalGrams), "gram")

@@ -4,91 +4,22 @@
 // in graft.sql.functions.
 package org.apache.spark.sql.graft
 
-import graft.geo.{Geohash, Geom}
-import org.apache.spark.sql.catalyst.InternalRow
+import graft.geo.Geom
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the spatial function surface.
+ * The spatial pushdown predicate as a native Catalyst expression.
  *
- * These replace the reference's storage-side extension points — the HBase
+ * It replaces the reference's storage-side extension point, the HBase
  * pushdown predicate (reference: src/main/java/tech/stackable/gis/hbase/
- * filter/WithinFilter.java:28-185) and geohash key derivation
- * (Ingest.java:75-77) — with expressions that participate in whole-stage
- * codegen, so the predicate runs inside the scan stage on executors exactly
- * where the reference ran it on region servers.
+ * filter/WithinFilter.java:28-185), with an expression that participates in
+ * whole-stage codegen, so the predicate runs inside the scan stage on
+ * executors exactly where the reference ran it on region servers. The
+ * geohash key derivation (Ingest.java:75-77) is the `geohash_encode` row of
+ * [[SqlFunctions]].
  */
-
-/** geohash_encode(lat, lon, precision) → base32 string. */
-case class GeohashEncode(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geohash_encode"
-
-  override protected def nullSafeEval(lat: Any, lon: Any, precision: Any): Any =
-    UTF8String.fromString(Geohash.encode(
-      lat.asInstanceOf[Double], lon.asInstanceOf[Double], precision.asInstanceOf[Int]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lat, lon, p) =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.geo.Geohash.encode($lat, $lon, $p))")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): GeohashEncode = copy(f, s, t)
-}
-
-/** geohash_decode(gh) → struct(lat double, lon double) — cell center. */
-case class GeohashDecode(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    StructType(Seq(StructField("lat", DoubleType), StructField("lon", DoubleType)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geohash_decode"
-
-  override protected def nullSafeEval(gh: Any): Any = {
-    val (lat, lon) = Geohash.decodeCenter(gh.asInstanceOf[UTF8String].toString)
-    InternalRow(lat, lon)
-  }
-  override protected def withNewChildInternal(c: Expression): GeohashDecode = copy(c)
-}
-
-/** geohash_neighbors(gh) → array of the up-to-8 adjacent cells. */
-case class GeohashNeighbors(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geohash_neighbors"
-
-  override protected def nullSafeEval(gh: Any): Any =
-    new GenericArrayData(
-      Geohash.neighbors(gh.asInstanceOf[UTF8String].toString)
-        .map(UTF8String.fromString).toArray[Any])
-  override protected def withNewChildInternal(c: Expression): GeohashNeighbors = copy(c)
-}
-
-/** geohash_cell_neighbors(lat, lon, precision) → array of the point's cell
-  * plus its 8 adjacent cells (the spatial-join probe key set). */
-case class GeohashCellNeighbors(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geohash_cell_neighbors"
-  override protected def nullSafeEval(lat: Any, lon: Any, precision: Any): Any =
-    new GenericArrayData(Geohash.cellAndNeighbors(
-      lat.asInstanceOf[Double], lon.asInstanceOf[Double], precision.asInstanceOf[Int])
-      .map(UTF8String.fromString).toArray[Any])
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): GeohashCellNeighbors = copy(f, s, t)
-}
 
 /**
  * st_covers_wkt(wktPolygon, lon, lat) → boolean; boundary-inclusive

@@ -54,26 +54,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "geohash_encode" -> (es => GeohashEncode(es(0), es(1), es(2))),
-    "geohash_decode" -> (es => GeohashDecode(es.head)),
-    "geohash_neighbors" -> (es => GeohashNeighbors(es.head)),
-    "st_covers_wkt" -> (es => STCoversWkt(es(0), es(1), es(2))),
-    "minhash_sig" -> (es => MinHashSig(es(0), es(1), es(2))),
-    "minhash_bands" -> (es => MinHashBands(es(0), es(1), es(2), es(3))),
-    "sig_bands" -> (es => SigBands(es(0), es(1))),
-    "sig_jaccard" -> (es => SigJaccard(es(0), es(1))),
-    "simhash64" -> (es => SimHash64(es(0), es(1))),
-    "ngram_jaccard" -> (es => NgramJaccard(es(0), es(1), es(2))),
-    "lang_id" -> (es => LangId(es.head)),
-    "winnow_fingerprint" -> (es => WinnowFingerprint(es(0), es(1), es(2))),
-    "explode_shingles" -> (es => ExplodeShingles(es(0), es(1))),
-    "shingle_hashes" -> (es => ShingleHashes(es(0), es(1))),
-    "sorted_jaccard" -> (es => SortedJaccard(es(0), es(1))),
-    "sorted_jaccard_at_least" -> (es => SortedJaccardAtLeast(es(0), es(1), es(2))),
-    "vec_cosine" -> (es => VecCosine(es(0), es(1))),
-    "vec_lsh_bucket" -> (es => VecLshBucket(es(0), es(1), es(2))),
-    "vec_lsh_bands" -> (es => VecLshBands(es(0), es(1), es(2), es(3))),
-    "double_sortable_bits" -> (es => DoubleSortableBits(es.head)),
-    "sortable_bits_to_double" -> (es => SortableBitsToDouble(es.head)))
+  /** Every [[SqlFunctions]] row, plus the hand-written predicate and generator. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] =
+    SqlFunctions.all.map(f => f.name -> ((es: Seq[Expression]) => f.expr(es: _*))) ++ Seq(
+      "st_covers_wkt" -> (es => STCoversWkt(es(0), es(1), es(2))),
+      "explode_shingles" -> (es => ExplodeShingles(es(0), es(1))))
 }

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, GraftShims, SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.graft.{GeohashDecode, GeohashEncode, GeohashNeighbors, STCoversWkt, VecCosineConst}
+import org.apache.spark.sql.graft.{STCoversWkt, SqlFunctions}
 
 /**
  * Public Column API + SQL registration for the graft spatial functions.
@@ -21,13 +21,13 @@ object functions {
 
   /** Base32 geohash of (lat, lon) at `precision` chars (reference rowkey: 12). */
   def geohash_encode(lat: Column, lon: Column, precision: Int): Column =
-    c(GeohashEncode(e(lat), e(lon), e(F.lit(precision))))
+    SqlFunctions.geohashEncode(lat, lon, F.lit(precision))
 
   /** Cell-center struct(lat, lon) of a geohash. */
-  def geohash_decode(gh: Column): Column = c(GeohashDecode(e(gh)))
+  def geohash_decode(gh: Column): Column = SqlFunctions.geohashDecode(gh)
 
   /** Up-to-8 adjacent cells of a geohash. */
-  def geohash_neighbors(gh: Column): Column = c(GeohashNeighbors(e(gh)))
+  def geohash_neighbors(gh: Column): Column = SqlFunctions.geohashNeighbors(gh)
 
   /** Boundary-inclusive point-in-polygon (JTS `covers` semantics). */
   def st_covers(wktPolygon: String, lon: Column, lat: Column): Column =

@@ -13,72 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native expressions for the training-data-pipeline operators (dedup,
- * similarity, text analysis). These are the hot inner loops of 100 TB-scale
- * jobs, so they are single-pass over the row's text/vector with no
- * per-row allocation beyond the output.
+ * similarity, text analysis) that hold state or emit rows: broadcast
+ * lookups, model and codebook holders, generators and aggregates, plus
+ * the `TextOps`/`VecOps` kernels. The stateless functions are rows of
+ * [[SqlFunctions]]. These are the hot inner loops of 100 TB-scale jobs, so
+ * they are single-pass over the row's text/vector with no per-row
+ * allocation beyond the output.
  */
-
-/** minhash_bands(text, numHashes, bands, shingleSize) → array<long> of band
-  * keys: the LSH bucketing value per band (band index is the array position).
-  * One pass: signature and band compression fused. */
-case class MinHashBands(first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_bands"
-
-  override protected def nullSafeEval(text: Any, numHashes: Any, bands: Any, shingle: Any): Any = {
-    val out = MinHashBands.compute(text.toString,
-      numHashes.asInstanceOf[Int], bands.asInstanceOf[Int], shingle.asInstanceOf[Int])
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, nh, b, sh) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"org.apache.spark.sql.graft.MinHashBands.compute($t.toString(), $nh, $b, $sh))")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): MinHashBands =
-    copy(f, s, t, q)
-}
-
-object MinHashBands {
-  /** Band key b = mix of the band's minhash slots, salted with band index so
-    * identical values in different bands never collide into one bucket. */
-  def compute(text: String, numHashes: Int, bands: Int, shingle: Int): Array[Long] =
-    TextCore.sigBands(TextCore.minhash(text, numHashes, shingle), bands)
-}
-
-/** sig_bands(sig, bands) → array<long> band keys from a precomputed
-  * minhash signature (so the signature is hashed once, not once per use). */
-case class SigBands(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sig_bands"
-  override protected def nullSafeEval(sig: Any, bands: Any): Any =
-    new GenericArrayData(TextCore.sigBands(
-      sig.asInstanceOf[ArrayData].toLongArray(), bands.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigBands = copy(l, r)
-}
-
-/** sig_jaccard(sigA, sigB) → double: estimated Jaccard from two equal-length
-  * minhash signatures (fraction of matching slots). */
-case class SigJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sig_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SigJaccard.estimate(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.SigJaccard.estimate($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigJaccard = copy(l, r)
-}
 
 /**
  * label_lookup(id) — broadcast-index component-label lookup: binary-search
@@ -177,7 +118,7 @@ case class CrossLabelPairs(items: Expression, minEst: Expression,
           val sigA = arr.getStruct(a, 2).getArray(1)
           gs(gj).foreach { b =>
             val sigB = arr.getStruct(b, 2).getArray(1)
-            if (SigJaccard.estimate(sigA, sigB) >= minEstV)
+            if (SqlKernels.sigJaccard(sigA, sigB) >= minEstV)
               out += InternalRow(math.min(ids(a), ids(b)), math.max(ids(a), ids(b)))
           }
         }
@@ -194,123 +135,6 @@ case class CrossLabelPairs(items: Expression, minEst: Expression,
       newChildren: IndexedSeq[Expression]): CrossLabelPairs =
     copy(items = newChildren(0), minEst = newChildren(1))
   override def prettyName: String = "cross_label_pairs"
-}
-
-object SigJaccard {
-  def estimate(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    if (n == 0) return 0.0
-    var eq = 0
-    var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-}
-
-/** minhash_sig(text, numHashes, shingleSize) → array<long> full signature. */
-case class MinHashSig(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(text: Any, numHashes: Any, shingle: Any): Any =
-    new GenericArrayData(TextCore.minhash(text.toString,
-      numHashes.asInstanceOf[Int], shingle.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): MinHashSig = copy(f, s, t)
-}
-
-/** simhash64(text, shingleSize) → long. */
-case class SimHash64(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(text: Any, shingle: Any): Any =
-    TextCore.simhash64(text.toString, shingle.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, sh) => s"graft.text.TextCore.simhash64($t.toString(), $sh)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SimHash64 = copy(l, r)
-}
-
-/** ngram_jaccard(a, b, n) → double: exact char-n-gram Jaccard similarity. */
-case class NgramJaccard(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ngram_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TextCore.ngramJaccard(a.toString, b.toString, n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) =>
-      s"graft.text.TextCore.ngramJaccard($a.toString(), $b.toString(), $n)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): NgramJaccard = copy(f, s, t)
-}
-
-/** minhash_sig_words(text, numHashes, nWords) → array<long>: MinHash
-  * signature over WORD shingles — the published near-dup unit
-  * (Gopher/MassiveText 13-word shingles), same affine construction as
-  * [[MinHashSig]] so bands/estimates share machinery. */
-case class MinHashSigWords(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sig_words"
-  override protected def nullSafeEval(text: Any, numHashes: Any, n: Any): Any =
-    new GenericArrayData(TextCore.minhashWords(text.toString,
-      numHashes.asInstanceOf[Int], n.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): MinHashSigWords = copy(f, s, t)
-}
-
-/** word_ngram_jaccard(a, b, nWords) → double: exact word-n-gram Jaccard. */
-case class WordNgramJaccard(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_ngram_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TextCore.wordNgramJaccard(a.toString, b.toString, n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) =>
-      s"graft.text.TextCore.wordNgramJaccard($a.toString(), $b.toString(), $n)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): WordNgramJaccard = copy(f, s, t)
-}
-
-/** lang_id(text) → string: heuristic language code (script + stopword vote). */
-case class LangId(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "lang_id"
-  override protected def nullSafeEval(text: Any): Any =
-    UTF8String.fromString(TextCore.langId(text.toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.text.TextCore.langId($t.toString()))")
-  override protected def withNewChildInternal(c: Expression): LangId = copy(c)
-}
-
-/** winnow_fingerprint(text, shingleSize, window) → array<long>: winnowing
-  * document fingerprint set (sorted). */
-case class WinnowFingerprint(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_fingerprint"
-  override protected def nullSafeEval(text: Any, sh: Any, w: Any): Any =
-    new GenericArrayData(TextCore.winnow(text.toString, sh.asInstanceOf[Int], w.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): WinnowFingerprint = copy(f, s, t)
 }
 
 /**
@@ -342,203 +166,6 @@ case class ExplodeShingles(text: Expression, n: Expression)
       newChildren: IndexedSeq[Expression]): ExplodeShingles =
     copy(text = newChildren(0), n = newChildren(1))
   override def prettyName: String = "explode_shingles"
-}
-
-/** nfc_normalize(text) → string: Unicode NFC (canonical composition) via
-  * `java.text.Normalizer` — the same Unicode algorithm DuckDB's
-  * nfc_normalize and Python's unicodedata implement, so normalized text
-  * (and anything hashed from it) is identical across engines. The
-  * already-normalized fast path (`isNormalized`, a scan without
-  * allocation) makes the common ASCII/NFC corpus essentially free. */
-case class NfcNormalize(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "nfc_normalize"
-  override protected def nullSafeEval(text: Any): Any =
-    NfcNormalize.nfc(text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"org.apache.spark.sql.graft.NfcNormalize.nfc($t)")
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(newChild)
-}
-
-object NfcNormalize {
-  import java.text.Normalizer
-  def nfc(s: UTF8String): UTF8String = {
-    val str = s.toString
-    if (Normalizer.isNormalized(str, Normalizer.Form.NFC)) s
-    else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
-  }
-}
-
-/** aligned_gram_md5s(text, minLen) → array<binary>: distinct raw md5
-  * digests of the word-aligned minLen-char grams (see
-  * [[graft.text.TextCore.alignedGramMd5s]]) — the one-pass unit of exact
-  * repeated-substring detection; 128-bit digests make digest-grouping
-  * equal to gram-grouping at any scale. */
-case class AlignedGramMd5s(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "aligned_gram_md5s"
-  override protected def nullSafeEval(text: Any, minLen: Any): Any =
-    new GenericArrayData(TextCore.alignedGramMd5s(
-      text.toString, minLen.asInstanceOf[Int]).asInstanceOf[Array[Any]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"(Object[]) graft.text.TextCore.alignedGramMd5s($t.toString(), $n))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AlignedGramMd5s =
-    copy(l, r)
-}
-
-/** token_ngrams(text, n) → array<string>: distinct lowercase-alphanumeric
-  * token n-grams joined by single spaces (see
-  * [[graft.text.TextCore.tokenNgrams]]) — string-exact with the SQL
-  * tokenize/slice/concat derivation, at one pass instead of a
-  * per-gram slice+concat expression tree. */
-case class TokenNgrams(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_ngrams"
-  override protected def nullSafeEval(text: Any, n: Any): Any =
-    new GenericArrayData(TextCore.tokenNgrams(
-      text.toString, n.asInstanceOf[Int]).map(UTF8String.fromString).asInstanceOf[Array[Any]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"(Object[]) org.apache.spark.sql.graft.TokenNgrams.toUtf8(" +
-        s"graft.text.TextCore.tokenNgrams($t.toString(), $n)))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TokenNgrams =
-    copy(l, r)
-}
-
-object TokenNgrams {
-  def toUtf8(a: Array[String]): Array[UTF8String] = a.map(UTF8String.fromString)
-}
-
-/** token_ngrams_all(text, n) → array<string>: ALL ordered token n-grams,
-  * duplicates preserved (posexplode index = starting token position; see
-  * [[graft.text.TextCore.tokenNgramsAll]]) — the repetition-counting
-  * sibling of [[TokenNgrams]]. */
-case class TokenNgramsAll(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_ngrams_all"
-  override protected def nullSafeEval(text: Any, n: Any): Any =
-    new GenericArrayData(TextCore.tokenNgramsAll(
-      text.toString, n.asInstanceOf[Int]).map(UTF8String.fromString).asInstanceOf[Array[Any]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"(Object[]) org.apache.spark.sql.graft.TokenNgrams.toUtf8(" +
-        s"graft.text.TextCore.tokenNgramsAll($t.toString(), $n)))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TokenNgramsAll =
-    copy(l, r)
-}
-
-/** aligned_gram_pos_md5s(text, minLen) → array<struct<pos:int, g:binary>>:
-  * one (start offset, md5) entry per word-aligned gram occurrence —
-  * duplicates KEPT (unlike [[AlignedGramMd5s]]), because span-coverage
-  * dedup needs every position a shared gram occupies, not the distinct
-  * gram set. Same one-pass rationale. */
-case class AlignedGramPosMd5s(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("g", BinaryType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "aligned_gram_pos_md5s"
-  override protected def nullSafeEval(text: Any, minLen: Any): Any = {
-    val s = text.toString
-    val l = minLen.asInstanceOf[Int]
-    val starts = TextCore.alignedGramStarts(s, l)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val rows = new Array[Any](starts.length)
-    var k = 0
-    while (k < starts.length) {
-      val i = starts(k)
-      val d = md.digest(s.substring(i, i + l)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      rows(k) = InternalRow(i, d)
-      k += 1
-    }
-    new GenericArrayData(rows)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AlignedGramPosMd5s =
-    copy(l, r)
-}
-
-/** shingle_hashes(text, n) → array<long>: the distinct hashed character
-  * n-grams of the text as one array value — the per-document gram SET for
-  * set-similarity pipelines that need it row-shaped (e.g. prefix-filtered
-  * exact Jaccard joins), complementing the row-exploding [[ExplodeShingles]]. */
-case class ShingleHashes(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-  override protected def nullSafeEval(text: Any, n: Any): Any =
-    new GenericArrayData(TextCore.shingleHashes(text.toString, n.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.text.TextCore.shingleHashes($t.toString(), $n))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleHashes =
-    copy(l, r)
-}
-
-/** word_shingle_hashes(text, n) → array<long>: the SORTED DISTINCT hashed
-  * word n-grams of the text ([a-z]+ lowercase tokens; texts shorter than n
-  * tokens contribute ONE whole-text gram — the shared short-text
-  * convention) — the word-unit twin of [[ShingleHashes]], for set
-  * pipelines on the published 13-word gram (decontamination, word-level
-  * containment). */
-case class WordShingleHashes(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_shingle_hashes"
-  override protected def nullSafeEval(text: Any, n: Any): Any =
-    new GenericArrayData(TextCore.wordShingleHashes(text.toString, n.asInstanceOf[Int]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.text.TextCore.wordShingleHashes($t.toString(), $n))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): WordShingleHashes =
-    copy(l, r)
-}
-
-/** sorted_jaccard(a, b) → double: exact Jaccard of two SORTED long-hash
-  * arrays (sort-merge intersection). Bit-identical to [[NgramJaccard]] on the
-  * texts the arrays were shingled from, without re-shingling per pair — the
-  * verify-stage primitive for candidate pipelines that carry gram sets. */
-case class SortedJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextCore.sortedJaccard(a.asInstanceOf[ArrayData].toLongArray(),
-      b.asInstanceOf[ArrayData].toLongArray())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.text.TextCore.sortedJaccard($a.toLongArray(), $b.toLongArray())")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccard =
-    copy(l, r)
 }
 
 /** ArrayData-direct text-set helpers: no `toLongArray()` — on a verify path
@@ -648,46 +275,6 @@ object TextOps {
     }
     inter.toDouble / (szA + szB - inter)
   }
-}
-
-/** sorted_jaccard_at_least(a, b, t) → double: exact Jaccard if ≥ t, else
-  * -1.0 via threshold-aware early abandon. The verify-stage workhorse when
-  * candidates vastly outnumber matches; reads ArrayData in place. */
-case class SortedJaccardAtLeast(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_jaccard_at_least"
-  override protected def nullSafeEval(a: Any, b: Any, t: Any): Any =
-    TextOps.sortedJaccardAtLeast(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], t.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, t) =>
-      s"org.apache.spark.sql.graft.TextOps.sortedJaccardAtLeast($a, $b, $t)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): SortedJaccardAtLeast = copy(f, s, t)
-}
-
-/** sorted_intersect_at_least(a, b, need) → long: exact |A ∩ B| if ≥ need,
-  * else -1 via the remaining-element early abandon. Containment-join
-  * verify kernel; reads ArrayData in place like [[SortedJaccardAtLeast]]. */
-case class SortedIntersectAtLeast(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_intersect_at_least"
-  override protected def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TextOps.sortedIntersectAtLeast(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) =>
-      s"org.apache.spark.sql.graft.TextOps.sortedIntersectAtLeast($a, $b, $n)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): SortedIntersectAtLeast = copy(f, s, t)
 }
 
 /**
@@ -1289,57 +876,6 @@ case class VecCosineConst(child: Expression, query: Array[Float])
     defineCodeGen(ctx, ev, a => s"org.apache.spark.sql.graft.VecOps.cosine($a, $q)")
   }
   override protected def withNewChildInternal(c: Expression): VecCosineConst = copy(child = c)
-}
-
-/** vec_cosine(a, b) → double cosine between two float-array columns. */
-case class VecCosine(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vec_cosine"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecOps.cosinePair(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.VecOps.cosinePair($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecCosine = copy(l, r)
-}
-
-/** vec_lsh_bands(vec, bands, planes, seed) → array<long>: one
-  * random-hyperplane bucket per band, independent planes per band. */
-case class VecLshBands(first: Expression, second: Expression, third: Expression,
-                       fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), IntegerType, IntegerType, LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vec_lsh_bands"
-  override protected def nullSafeEval(a: Any, b: Any, p: Any, s: Any): Any =
-    VecOps.signBands(a.asInstanceOf[ArrayData], b.asInstanceOf[Int],
-      p.asInstanceOf[Int], s.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, p, s) =>
-      s"org.apache.spark.sql.graft.VecOps.signBands($a, $b, $p, $s)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): VecLshBands =
-    copy(newFirst, newSecond, newThird, newFourth)
-}
-
-/** vec_lsh_bucket(vec, planes, seed) → long: random-hyperplane cosine-LSH bucket. */
-case class VecLshBucket(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), IntegerType, LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vec_lsh_bucket"
-  override protected def nullSafeEval(a: Any, planes: Any, seed: Any): Any =
-    VecOps.signBucket(a.asInstanceOf[ArrayData], planes.asInstanceOf[Int], seed.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, p, s) => s"org.apache.spark.sql.graft.VecOps.signBucket($a, $p, $s)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): VecLshBucket = copy(f, s, t)
 }
 
 /**

@@ -305,54 +305,6 @@ object DistinctBottomKBuffer {
 }
 
 /**
- * Total-order-preserving long encoding of ANY double, so a double ordering
- * key (a distance, a score — including negative scores) can ride the
- * long-typed [[TopNByOrd]] heap unchanged. Raw IEEE 754 bits already order
- * correctly for non-negative doubles and place negatives (sign bit set =
- * negative long) below them, but inverted among themselves; XOR-ing with
- * `(bits >> 63) & Long.MaxValue` flips the magnitude bits of negatives
- * only, restoring a total order (and -0.0 < +0.0). The transform is its
- * own inverse, which [[SortableBitsToDouble]] exploits.
- */
-case class DoubleSortableBits(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "double_sortable_bits"
-  override protected def nullSafeEval(d: Any): Any = {
-    val bits = java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double])
-    bits ^ ((bits >> 63) & Long.MaxValue)
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, d =>
-      s"(Double.doubleToRawLongBits($d) ^ ((Double.doubleToRawLongBits($d) >> 63) & Long.MAX_VALUE))")
-  override protected def withNewChildInternal(c: Expression): DoubleSortableBits = copy(c)
-}
-
-/** Inverse of [[DoubleSortableBits]] (the bit transform is an involution). */
-case class SortableBitsToDouble(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sortable_bits_to_double"
-  override protected def nullSafeEval(l: Any): Any = {
-    val s = l.asInstanceOf[Long]
-    java.lang.Double.longBitsToDouble(s ^ ((s >> 63) & Long.MaxValue))
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, l => s"Double.longBitsToDouble($l ^ (($l >> 63) & Long.MAX_VALUE))")
-  override protected def withNewChildInternal(c: Expression): SortableBitsToDouble = copy(c)
-}
-
-/**
  * [[TopNByOrd]] with a STRING payload: keeps the N lexicographically
  * smallest (ord, payload) pairs per group with the same partial/final
  * bounded-heap shape. For payloads that start with the logical tie-break

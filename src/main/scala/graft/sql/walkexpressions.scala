@@ -1,10 +1,7 @@
 // Same packaging rationale as expressions.scala: Catalyst-private types.
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /**
  * Native kernel for the node2vec biased neighbor choice: everything the
@@ -63,30 +60,4 @@ object WalkOps {
     }
     nbrs.getLong(n - 1) // unreachable: pick < tot == final cum
   }
-}
-
-/** node2vec_choose(nbrs, prev_nbrs, prev, hash) → long: the biased-walk
-  * neighbor pick over id-sorted adjacency arrays (weights return/near/far =
-  * `returnPermille`/1000/`farPermille`), codegen'd like the other verify
-  * kernels. The permille knobs are literals of the walk configuration, so
-  * they are constructor parameters rather than child expressions. */
-case class Node2vecChoose(first: Expression, second: Expression,
-                          third: Expression, fourth: Expression,
-                          returnPermille: Long, farPermille: Long)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "node2vec_choose"
-  override protected def nullSafeEval(a: Any, b: Any, p: Any, h: Any): Any =
-    WalkOps.node2vecChoose(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      p.asInstanceOf[Long], h.asInstanceOf[Long], returnPermille, farPermille)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, p, h) =>
-      s"org.apache.spark.sql.graft.WalkOps.node2vecChoose($a, $b, $p, $h, " +
-        s"${returnPermille}L, ${farPermille}L)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Node2vecChoose =
-    copy(f, s, t, q)
 }

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 /** Source lints over src/main. Every main and the tests build their
   * session through [[Session]]: a second `SparkSession.builder` would let
   * settings drift apart again. Every `SPARK_GRAFT_*` knob is one more
-  * configuration to cover, so adding one is a deliberate edit here. */
+  * configuration to cover, so adding one is a deliberate edit here. A
+  * stateless SQL function is one row of `SqlFunctions`, not a hand-written
+  * expression class. */
 class SessionLintSpec extends AnyFunSuite {
 
   /** (path relative to src/main/scala, contents) of every Scala source. */
@@ -57,5 +59,49 @@ class SessionLintSpec extends AnyFunSuite {
       streaming.r.findAllIn(s).map(h => s"$p: $h")
     }
     assert(hits.isEmpty)
+  }
+
+  /** (name, constructor parameters, declaration after them up to the body
+    * or the next blank line) of every case class. */
+  private lazy val caseClasses: Seq[(String, String, String)] = {
+    val head = """case class (\w+)(\[[^\]]*\])?\(""".r
+    sources.flatMap { case (_, s) =>
+      head.findAllMatchIn(s).map { m =>
+        var depth = 1
+        var i = m.end
+        while (depth > 0) {
+          if (s(i) == '(') depth += 1 else if (s(i) == ')') depth -= 1
+          i += 1
+        }
+        val end = Seq(s.indexOf('{', i), s.indexOf("\n\n", i), s.length).filter(_ >= 0).min
+        (m.group(1), s.substring(m.end, i - 1), s.substring(i, end))
+      }
+    }
+  }
+
+  test("every fixed-arity expression class carries state; stateless ones are SqlFunctions rows") {
+    // `st_covers_wkt` stays a class because SpatialPruningRule matches it
+    val fixedArity = """extends\s+(Unary|Binary|Ternary|Quaternary)Expression\b""".r
+    val stateless = caseClasses.collect {
+      case (name, params, rest) if fixedArity.findFirstIn(rest).isDefined &&
+          params.split(",").forall(_.split(":").last.trim == "Expression") =>
+        name
+    }.filterNot(_ == "STCoversWkt")
+    assert(stateless.isEmpty)
+  }
+
+  test("CodegenFallback is used only by generators and stateful expressions") {
+    val allowed = Set(
+      "CrossLabelPairs", "ExplodeShingles", "JaccardBucketPairs", "PrefixBucketRows", // generators
+      "BpeTokens", "BpeChunks", "BpeTokenIds", "BloomKeyMightContain") // broadcast state
+    val fallback = caseClasses.collect {
+      case (name, _, rest) if rest.contains("CodegenFallback") => name
+    }
+    assert(fallback.nonEmpty && fallback.toSet.subsetOf(allowed), fallback.filterNot(allowed))
+    // and no other declaration mixes it in
+    val mentions = sources.map { case (_, s) =>
+      s.linesIterator.count(l => l.contains("CodegenFallback") && !l.trim.startsWith("import"))
+    }.sum
+    assert(mentions == fallback.size)
   }
 }

@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import graft.{SparkEntry, SparkTestBase}
+import graft.SparkTestBase.withTempDir
 import graft.text.TextCore
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
@@ -695,52 +696,54 @@ class PipelineSpec extends AnyFunSuite {
     val embs01 = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val cents = Similarity.deterministicCentroids(embs01, nCells = 8)
     val cbs = Similarity.pqCodebooks(embs01, m = 8, nCodes = 16)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.writeEmbeddingsIvfPq(embs01, path, cents, cbs)
-    // the layout is cell-partitioned and stores codes, never vectors
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("ivf_cell=")).toSet
-    assert(dirs.size >= 4, s"expected multiple cell dirs, got $dirs")
-    assert(!spark.read.parquet(path).columns.contains("embedding"))
-    val q = embs01.filter($"vec_id" === 0L).select("embedding").head()
-      .getSeq[Float](0).toArray
-    // probe touches only the probed cells' files
-    val probed = Similarity.ivfPqTopK(spark, path, cents, cbs, q, 10, nProbe = 3)
-    val scan = probed.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-    }.get
-    val allFiles = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
-    val touched = scan.map(_.files.size).sum
-    assert(touched < allFiles, s"probe must prune: touched $touched of $allFiles")
-    // chain equals a brute Scala replica (assignment -> probe -> encode -> ADC)
-    val all = embs01.select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1 }
-      if (na == 0 || nb == 0) 0 else d / (math.sqrt(na) * math.sqrt(nb))
+    withTempDir("graft_ivfpq") { tmp =>
+      val path = tmp.toString
+      Similarity.writeEmbeddingsIvfPq(embs01, path, cents, cbs)
+      // the layout is cell-partitioned and stores codes, never vectors
+      val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
+        .map(_.getName).filter(_.startsWith("ivf_cell=")).toSet
+      assert(dirs.size >= 4, s"expected multiple cell dirs, got $dirs")
+      assert(!spark.read.parquet(path).columns.contains("embedding"))
+      val q = embs01.filter($"vec_id" === 0L).select("embedding").head()
+        .getSeq[Float](0).toArray
+      // probe touches only the probed cells' files
+      val probed = Similarity.ivfPqTopK(spark, path, cents, cbs, q, 10, nProbe = 3)
+      val scan = probed.queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+      }.get
+      val allFiles = new java.io.File(path).listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
+      val touched = scan.map(_.files.size).sum
+      assert(touched < allFiles, s"probe must prune: touched $touched of $allFiles")
+      // chain equals a brute Scala replica (assignment -> probe -> encode -> ADC)
+      val all = embs01.select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      def cos(a: Array[Float], b: Array[Float]): Double = {
+        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < a.length) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
+          nb += b(i).toDouble * b(i); i += 1 }
+        if (na == 0 || nb == 0) 0 else d / (math.sqrt(na) * math.sqrt(nb))
+      }
+      val sub = 8
+      def sq(a: Array[Float], off: Int, b: Array[Float]): Double = {
+        var d = 0.0; var j = 0
+        while (j < sub) { val x = a(off + j).toDouble - b(j).toDouble; d += x * x; j += 1 }
+        d
+      }
+      val probes = cents.indices.sortBy(ci => (-cos(q, cents(ci)), ci)).take(3).toSet
+      val table = Array.tabulate(8)(s => cbs(s).map(code => sq(q, s * sub, code)))
+      val brute = all
+        .filter { case (_, v) => probes(cents.indices.maxBy(ci => (cos(v, cents(ci)), -ci))) }
+        .map { case (id, v) =>
+          val adc = (0 until 8).foldLeft(0.0) { (acc, s) =>
+            acc + table(s)(cbs(s).zipWithIndex
+              .minBy { case (code, ci) => (sq(v, s * sub, code), ci) }._2)
+          }
+          (id, adc)
+        }.sortBy { case (id, adc) => (adc, id) }.take(10).map(_._1).toSeq
+      assert(probed.collect().map(_.getLong(0)).toSeq == brute)
     }
-    val sub = 8
-    def sq(a: Array[Float], off: Int, b: Array[Float]): Double = {
-      var d = 0.0; var j = 0
-      while (j < sub) { val x = a(off + j).toDouble - b(j).toDouble; d += x * x; j += 1 }
-      d
-    }
-    val probes = cents.indices.sortBy(ci => (-cos(q, cents(ci)), ci)).take(3).toSet
-    val table = Array.tabulate(8)(s => cbs(s).map(code => sq(q, s * sub, code)))
-    val brute = all
-      .filter { case (_, v) => probes(cents.indices.maxBy(ci => (cos(v, cents(ci)), -ci))) }
-      .map { case (id, v) =>
-        val adc = (0 until 8).foldLeft(0.0) { (acc, s) =>
-          acc + table(s)(cbs(s).zipWithIndex
-            .minBy { case (code, ci) => (sq(v, s * sub, code), ci) }._2)
-        }
-        (id, adc)
-      }.sortBy { case (id, adc) => (adc, id) }.take(10).map(_._1).toSeq
-    assert(probed.collect().map(_.getLong(0)).toSeq == brute)
   }
 
   test("cosineTopKJoin: per-query results == brute-force top-k") {
@@ -818,21 +821,23 @@ class PipelineSpec extends AnyFunSuite {
     val cents = Similarity.deterministicCentroids(embs, nCells = 4)
     val queries = embs.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_raw").toString + "/idx"
-    Similarity.writeEmbeddingsIvf(embs, dir, cents)
-    val stored = Similarity.ivfTopKJoinStored(spark, dir, queries, cents, k = 5, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, -t._3, t._2))
-    val mem = Similarity.ivfTopKJoin(queries, embs, cents, k = 5, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, -t._3, t._2))
-    assert(stored.toSeq == mem.toSeq)
-    // the layout is one directory per cell and a probe scan lists only
-    // the probed ones (partition pruning over the static isin filter)
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.forall(_.startsWith("ivf_cell=")), dirs.mkString(","))
-    val planned = Similarity.ivfTopKJoinStored(spark, dir, queries, cents, k = 5, nProbe = 1)
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*ivf_cell".r.findFirstIn(planned).isDefined,
-      s"probed-cell isin must survive as a partition filter:\n$planned")
+    withTempDir("graft_ivf_raw") { tmp =>
+      val dir = tmp.toString + "/idx"
+      Similarity.writeEmbeddingsIvf(embs, dir, cents)
+      val stored = Similarity.ivfTopKJoinStored(spark, dir, queries, cents, k = 5, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, -t._3, t._2))
+      val mem = Similarity.ivfTopKJoin(queries, embs, cents, k = 5, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, -t._3, t._2))
+      assert(stored.toSeq == mem.toSeq)
+      // the layout is one directory per cell and a probe scan lists only
+      // the probed ones (partition pruning over the static isin filter)
+      val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
+      assert(dirs.forall(_.startsWith("ivf_cell=")), dirs.mkString(","))
+      val planned = Similarity.ivfTopKJoinStored(spark, dir, queries, cents, k = 5, nProbe = 1)
+        .queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*ivf_cell".r.findFirstIn(planned).isDefined,
+        s"probed-cell isin must survive as a partition filter:\n$planned")
+    }
   }
 
   test("semanticNearDupPairs: within-cluster exact, subset of brute force") {
@@ -872,49 +877,52 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("dedupAgainstIndex: incremental pairs == brute-force cross-set pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidx").toString
-    val batch = planted.filter($"doc_id" % 3 === 0)
-      .select(($"doc_id" + 100000).as("doc_id"), $"text")
-    Dedup.writeMinhashIndex(planted, dir)
-    val got = Dedup.dedupAgainstIndex(spark, dir, batch, planted, threshold = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val corpusAll = planted.collect().map(r => (r.getLong(0), r.getString(1)))
-    val batchAll = batch.collect().map(r => (r.getLong(0), r.getString(1)))
-    val brute = (for {
-      (ib, tb) <- batchAll; (ic, tc) <- corpusAll
-      j = TextCore.ngramJaccard(tb, tc, 5)
-      if j >= 0.7
-    } yield (ib, ic)).toSet
-    val gotSet = got.map(p => (p._1, p._2)).toSet
-    assert(brute.nonEmpty, "fixture produced no cross-set pairs")
-    assert(gotSet.subsetOf(brute), "incremental emitted a below-threshold pair")
-    // batch docs are verbatim corpus copies -> their self-pairs are certain
-    // (identical sigs collide in every band); marginal ~0.7 pairs follow the
-    // usual LSH detection curve, so bound recall like the batch-path test
-    val selfPairs = batchAll.map { case (ib, _) => (ib, ib - 100000L) }.toSet
-    assert(selfPairs.subsetOf(gotSet), "a verbatim-copy self-pair was missed")
-    val recall = gotSet.intersect(brute).size.toDouble / brute.size
-    assert(recall >= 0.95, s"incremental recall $recall too low (${brute.size} true pairs)")
-    got.foreach { case (ib, ic, j) =>
-      val tb = batchAll.find(_._1 == ib).get._2
-      val tc = corpusAll.find(_._1 == ic).get._2
-      assert(j == TextCore.ngramJaccard(tb, tc, 5))
+    withTempDir("graft_mhidx") { tmp =>
+      val dir = tmp.toString
+      val batch = planted.filter($"doc_id" % 3 === 0)
+        .select(($"doc_id" + 100000).as("doc_id"), $"text")
+      Dedup.writeMinhashIndex(planted, dir)
+      val got = Dedup.dedupAgainstIndex(spark, dir, batch, planted, threshold = 0.7)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val corpusAll = planted.collect().map(r => (r.getLong(0), r.getString(1)))
+      val batchAll = batch.collect().map(r => (r.getLong(0), r.getString(1)))
+      val brute = (for {
+        (ib, tb) <- batchAll; (ic, tc) <- corpusAll
+        j = TextCore.ngramJaccard(tb, tc, 5)
+        if j >= 0.7
+      } yield (ib, ic)).toSet
+      val gotSet = got.map(p => (p._1, p._2)).toSet
+      assert(brute.nonEmpty, "fixture produced no cross-set pairs")
+      assert(gotSet.subsetOf(brute), "incremental emitted a below-threshold pair")
+      // batch docs are verbatim corpus copies -> their self-pairs are certain
+      // (identical sigs collide in every band); marginal ~0.7 pairs follow the
+      // usual LSH detection curve, so bound recall like the batch-path test
+      val selfPairs = batchAll.map { case (ib, _) => (ib, ib - 100000L) }.toSet
+      assert(selfPairs.subsetOf(gotSet), "a verbatim-copy self-pair was missed")
+      val recall = gotSet.intersect(brute).size.toDouble / brute.size
+      assert(recall >= 0.95, s"incremental recall $recall too low (${brute.size} true pairs)")
+      got.foreach { case (ib, ic, j) =>
+        val tb = batchAll.find(_._1 == ib).get._2
+        val tc = corpusAll.find(_._1 == ic).get._2
+        assert(j == TextCore.ngramJaccard(tb, tc, 5))
+      }
+      // Bloom pre-screen differential: no false negatives → identical rows
+      withTempDir("graft_bloom") { tmp =>
+        val bloom = tmp.resolve("keys.bloom").toString
+        Dedup.writeBloomIndex(spark, dir, bloom)
+        val screened = Dedup.dedupAgainstIndex(spark, dir, batch, planted,
+            threshold = 0.7, bloomPath = Some(bloom))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(screened == got.toSet, "Bloom screen changed results")
+        // a genuinely novel batch is screened down to (near) nothing: keys of
+        // unseen text should mostly miss the corpus-key filter
+        val novel = Seq((1L, "totally novel text the corpus never saw qqq www eee"))
+          .toDF("doc_id", "text")
+        val novelPairs = Dedup.dedupAgainstIndex(spark, dir, novel, planted,
+          threshold = 0.7, bloomPath = Some(bloom)).count()
+        assert(novelPairs == 0L)
+      }
     }
-    // Bloom pre-screen differential: no false negatives → identical rows
-    val bloom = java.nio.file.Files.createTempDirectory("graft_bloom")
-      .resolve("keys.bloom").toString
-    Dedup.writeBloomIndex(spark, dir, bloom)
-    val screened = Dedup.dedupAgainstIndex(spark, dir, batch, planted,
-        threshold = 0.7, bloomPath = Some(bloom))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(screened == got.toSet, "Bloom screen changed results")
-    // a genuinely novel batch is screened down to (near) nothing: keys of
-    // unseen text should mostly miss the corpus-key filter
-    val novel = Seq((1L, "totally novel text the corpus never saw qqq www eee"))
-      .toDF("doc_id", "text")
-    val novelPairs = Dedup.dedupAgainstIndex(spark, dir, novel, planted,
-      threshold = 0.7, bloomPath = Some(bloom)).count()
-    assert(novelPairs == 0L)
   }
 
   test("dedupLines: global first-occurrence line dedup with splice") {
@@ -997,20 +1005,22 @@ class PipelineSpec extends AnyFunSuite {
       (7L, null)).toDF("doc_id", "text")
     val corpus = fixture.filter(col("doc_id") <= 4)
     val batch = fixture.filter(col("doc_id") > 4)
-    val idx = java.nio.file.Files.createTempDirectory("graft-line-idx").toString
-    Dedup.writeLineIndex(corpus, idx)
-    val got = Dedup.dedupLinesAgainstIndex(spark, idx, batch).collect()
-      .map(r => r.getLong(0) -> ((Option(r.getString(1)), r.getLong(2)))).toMap
-    // every corpus id precedes every batch id, so the incremental result
-    // must equal the from-scratch batch pass restricted to batch docs
-    val full = Dedup.dedupLines(fixture).collect()
-      .map(r => r.getLong(0) -> ((Option(r.getString(1)), r.getLong(2)))).toMap
-    assert(got == full.filter(_._1 > 4), s"got=$got full=$full")
-    // spot semantics: doc 5 loses the corpus-owned header, keeps the first
-    // occurrence of the batch-only line; doc 6 loses it (doc 5 saw it first)
-    assert(got(5L) == ((Some("unique body of doc five\nbatch-only shared line"), 1L)))
-    assert(got(6L) == ((Some("unique body of doc six"), 1L)))
-    assert(got(7L) == ((None, 0L))) // NULL totality
+    withTempDir("graft-line-idx") { tmp =>
+      val idx = tmp.toString
+      Dedup.writeLineIndex(corpus, idx)
+      val got = Dedup.dedupLinesAgainstIndex(spark, idx, batch).collect()
+        .map(r => r.getLong(0) -> ((Option(r.getString(1)), r.getLong(2)))).toMap
+      // every corpus id precedes every batch id, so the incremental result
+      // must equal the from-scratch batch pass restricted to batch docs
+      val full = Dedup.dedupLines(fixture).collect()
+        .map(r => r.getLong(0) -> ((Option(r.getString(1)), r.getLong(2)))).toMap
+      assert(got == full.filter(_._1 > 4), s"got=$got full=$full")
+      // spot semantics: doc 5 loses the corpus-owned header, keeps the first
+      // occurrence of the batch-only line; doc 6 loses it (doc 5 saw it first)
+      assert(got(5L) == ((Some("unique body of doc five\nbatch-only shared line"), 1L)))
+      assert(got(6L) == ((Some("unique body of doc six"), 1L)))
+      assert(got(7L) == ((None, 0L))) // NULL totality
+    }
   }
 
   test("gopherRules: each rule trips on its planted violation only") {
@@ -1439,23 +1449,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bucketed embedding layout: stored LSH top-k == in-memory; directories pruned") {
-    val path = java.nio.file.Files.createTempDirectory("graft-emb-bucketed").toString
-    Similarity.writeEmbeddingsBucketed(embs, path, planes = 6)
-    val query = embs.filter($"vec_id" === 3L).select("embedding").head()
-      .getSeq[Float](0).toArray
-    val mem = Similarity.cosineTopKLsh(embs, query, 10, planes = 6)
-      .collect().map(_.getLong(0)).toSet
-    val stored = Similarity.cosineTopKLshStored(spark, path, query, 10, planes = 6)
-      .collect().map(_.getLong(0)).toSet
-    assert(stored == mem, "stored-layout ANN must equal the in-memory variant")
-    // directory pruning: a bucket predicate lists strictly fewer files
-    val all = spark.read.parquet(path)
-    val oneBucket = all.select("lsh_bucket").head().getAs[Number](0).longValue
-    val filesAll = all.select(input_file_name()).distinct().count()
-    val filesPruned = all.filter($"lsh_bucket" === oneBucket)
-      .select(input_file_name()).distinct().count()
-    assert(filesPruned < filesAll,
-      s"bucket filter must prune directories ($filesPruned vs $filesAll)")
+    withTempDir("graft-emb-bucketed") { tmp =>
+      val path = tmp.toString
+      Similarity.writeEmbeddingsBucketed(embs, path, planes = 6)
+      val query = embs.filter($"vec_id" === 3L).select("embedding").head()
+        .getSeq[Float](0).toArray
+      val mem = Similarity.cosineTopKLsh(embs, query, 10, planes = 6)
+        .collect().map(_.getLong(0)).toSet
+      val stored = Similarity.cosineTopKLshStored(spark, path, query, 10, planes = 6)
+        .collect().map(_.getLong(0)).toSet
+      assert(stored == mem, "stored-layout ANN must equal the in-memory variant")
+      // directory pruning: a bucket predicate lists strictly fewer files
+      val all = spark.read.parquet(path)
+      val oneBucket = all.select("lsh_bucket").head().getAs[Number](0).longValue
+      val filesAll = all.select(input_file_name()).distinct().count()
+      val filesPruned = all.filter($"lsh_bucket" === oneBucket)
+        .select(input_file_name()).distinct().count()
+      assert(filesPruned < filesAll,
+        s"bucket filter must prune directories ($filesPruned vs $filesAll)")
+    }
   }
 
   test("IVF top-k: trains, assigns, probes; high overlap with exact") {
@@ -1858,21 +1870,22 @@ class PipelineSpec extends AnyFunSuite {
     val corpus = hashes.filter(col("media_id") % 10 =!= 0)
     val batch = hashes.filter(col("media_id") % 10 === 0)
     for (radius <- Seq(3, 7)) {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-h64-idx-$radius").toString
-      Dedup.writeHash64Index(corpus, path, "media_id", "format", radius)
-      val got = Dedup.hash64AgainstIndex(spark, path, batch,
-        "media_id", "format", radius)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val full = Dedup.hash64Pairs(hashes, "media_id", "format", radius)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3))
-        .flatMap { case ((a, b), h) =>
-          if (a % 10 == 0 && b % 10 != 0) Some((a, b) -> h)
-          else if (b % 10 == 0 && a % 10 != 0) Some((b, a) -> h)
-          else None
-        }.toMap
-      assert(got == full, s"radius $radius probe diverged from the full cut")
-      assert(got.nonEmpty, s"radius $radius cut vacuous — fixture broken")
+      withTempDir(s"graft-h64-idx-$radius") { tmp =>
+        val path = tmp.toString
+        Dedup.writeHash64Index(corpus, path, "media_id", "format", radius)
+        val got = Dedup.hash64AgainstIndex(spark, path, batch,
+          "media_id", "format", radius)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+        val full = Dedup.hash64Pairs(hashes, "media_id", "format", radius)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3))
+          .flatMap { case ((a, b), h) =>
+            if (a % 10 == 0 && b % 10 != 0) Some((a, b) -> h)
+            else if (b % 10 == 0 && a % 10 != 0) Some((b, a) -> h)
+            else None
+          }.toMap
+        assert(got == full, s"radius $radius probe diverged from the full cut")
+        assert(got.nonEmpty, s"radius $radius cut vacuous — fixture broken")
+      }
     }
   }
 
@@ -1960,25 +1973,27 @@ class PipelineSpec extends AnyFunSuite {
           concat(lit("replica 2 "), col("text")).as("text"), col("n_chars")))
     val atRest = corpus.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val batch = corpus.filter(pmod(col("doc_id"), lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr_conn").toString + "/idx"
-    Dedup.writeMinhashIndex(atRest, dir)
-    val labels = Dedup.minhashLshLabelsFromIndex(spark, dir, atRest)
-    val cross = Dedup.dedupAgainstIndexConnective(spark, dir, batch, atRest, labels)
-      .select(col("new_id").as("id_a"), col("corpus_id").as("id_b"))
-    val internal = Dedup.minhashLshLabels(batch, "doc_id", "text")
-      .select(col("id").as("id_a"), col("cluster").as("id_b"))
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
-    val incr = asMap(Dedup.clusterKeepListIncremental(labels,
-      cross.unionByName(internal), corpus, "doc_id", "n_chars"))
-    val full = asMap(Dedup.textKeepList(corpus, "doc_id", "text", "n_chars"))
-    assert(incr == full,
-      s"connective incremental diverged: ${incr.toSeq.diff(full.toSeq).take(5)}")
-    // the probe must genuinely thin the edge set on this replica corpus
-    val pairEdges = Dedup.dedupAgainstIndex(spark, dir, batch, atRest).count()
-    val connEdges = cross.count()
-    assert(connEdges < pairEdges,
-      s"connective probe did not thin: $connEdges vs $pairEdges")
+    withTempDir("graft_incr_conn") { tmp =>
+      val dir = tmp.toString + "/idx"
+      Dedup.writeMinhashIndex(atRest, dir)
+      val labels = Dedup.minhashLshLabelsFromIndex(spark, dir, atRest)
+      val cross = Dedup.dedupAgainstIndexConnective(spark, dir, batch, atRest, labels)
+        .select(col("new_id").as("id_a"), col("corpus_id").as("id_b"))
+      val internal = Dedup.minhashLshLabels(batch, "doc_id", "text")
+        .select(col("id").as("id_a"), col("cluster").as("id_b"))
+      def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
+      val incr = asMap(Dedup.clusterKeepListIncremental(labels,
+        cross.unionByName(internal), corpus, "doc_id", "n_chars"))
+      val full = asMap(Dedup.textKeepList(corpus, "doc_id", "text", "n_chars"))
+      assert(incr == full,
+        s"connective incremental diverged: ${incr.toSeq.diff(full.toSeq).take(5)}")
+      // the probe must genuinely thin the edge set on this replica corpus
+      val pairEdges = Dedup.dedupAgainstIndex(spark, dir, batch, atRest).count()
+      val connEdges = cross.count()
+      assert(connEdges < pairEdges,
+        s"connective probe did not thin: $connEdges vs $pairEdges")
+    }
   }
 
   test("minhashLshLabelsFromIndex == minhashLshLabels (regrouped artifact, char + word units)") {
@@ -1991,16 +2006,18 @@ class PipelineSpec extends AnyFunSuite {
         concat(lit("replica 1 "), col("text")).as("text")))
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString
-    Dedup.writeMinhashIndex(corpus, s"$dir/char")
-    assert(asMap(Dedup.minhashLshLabelsFromIndex(spark, s"$dir/char", corpus)) ==
-      asMap(Dedup.minhashLshLabels(corpus, "doc_id", "text")), "char unit")
-    Dedup.writeMinhashIndex(corpus, s"$dir/word", wordShingle = 13)
-    assert(asMap(Dedup.minhashLshLabelsFromIndex(spark, s"$dir/word", corpus,
-        wordShingle = 13)) ==
-      asMap(Dedup.minhashLshPairsWords(corpus, "doc_id", "text")
-        .select(col("id_a"), col("id_b"))
-        .transform(Dedup.clusters(_))), "word unit vs pair path")
+    withTempDir("graft_mh_idx") { tmp =>
+      val dir = tmp.toString
+      Dedup.writeMinhashIndex(corpus, s"$dir/char")
+      assert(asMap(Dedup.minhashLshLabelsFromIndex(spark, s"$dir/char", corpus)) ==
+        asMap(Dedup.minhashLshLabels(corpus, "doc_id", "text")), "char unit")
+      Dedup.writeMinhashIndex(corpus, s"$dir/word", wordShingle = 13)
+      assert(asMap(Dedup.minhashLshLabelsFromIndex(spark, s"$dir/word", corpus,
+          wordShingle = 13)) ==
+        asMap(Dedup.minhashLshPairsWords(corpus, "doc_id", "text")
+          .select(col("id_a"), col("id_b"))
+          .transform(Dedup.clusters(_))), "word unit vs pair path")
+    }
   }
 
   test("textKeepList == uncollapsed clusterKeepList on a NEAR-dup replica corpus") {
