@@ -3,7 +3,6 @@ package graft.api
 import graft.geo.GeohashPruning
 import graft.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +17,10 @@ import org.apache.spark.sql.functions._
  * scan (prefix pruning = partition pruning on geohash-sorted parquet),
  * top-k plans as TakeOrderedAndProject (per-partition partial heap + driver
  * merge — exactly the reference's region-endpoint/client split), grouped
- * top-N is a shuffle-on-key window. Nothing materializes on the driver
- * except final `limit k` results.
+ * top-N is a shuffle-on-key window. Two things run on the driver: final
+ * `limit k` results, and [[knn]] over a stored parquet table, which reads
+ * the few row groups it needs there, up to a fixed row budget, the way the
+ * reference's KNN client scans from the client.
  */
 object Gis {
 
@@ -244,90 +245,67 @@ object Gis {
 
   /**
    * K-nearest-neighbors by planar Euclidean degree distance (reference
-   * KNNQuery.java:42-91 / KNNEndpoint.java:61-119). Plans as
-   * TakeOrderedAndProject: per-partition bounded top-k + driver merge —
-   * the same partial/final shape as the reference's region endpoints +
-   * client, including the final cross-region merge the reference's
-   * KNNClient never performs (KNNClient.java:55-57).
+   * KNNQuery.java:42-91 / KNNEndpoint.java:61-119), exact by default.
    *
-   * With a geohash column, each candidate scan ("ring") reads the 9-cell
-   * block around the origin at some precision, and on a
-   * [[writePointsPartitioned]] layout also skips every `gh_prefix`
-   * directory the block cannot touch, as [[within]] does.
+   * When `points` is a bare scan of a stored parquet table (such as a
+   * [[writePointsPartitioned]] layout read with `spark.read.parquet`) with
+   * double `lonCol`/`latCol`, a best-first search on the driver reads its
+   * row groups in order of their `lon`/`lat` bounding box's distance to the
+   * origin, from the footer statistics, and stops once the k-th distance so
+   * far is at most the next box's; the answer comes back as a local frame,
+   * and no Spark job runs. Any other frame, or a search that would read
+   * more than a fixed row budget, plans as TakeOrderedAndProject:
+   * per-partition bounded top-k + driver merge, the same partial/final
+   * shape as the reference's region endpoints + client, including the final
+   * cross-region merge the reference's KNNClient never performs
+   * (KNNClient.java:55-57).
    *
-   * strict=true reproduces the reference's 9-cell candidate bound: one ring
-   * at `precision`, which may miss true neighbors past the cell edges.
+   * strict=true reproduces the reference's 9-cell candidate bound: one scan
+   * of the cell at `precision` and its 8 neighbours (and, on a
+   * [[writePointsPartitioned]] layout, only the `gh_prefix` directories
+   * they touch), which may miss true neighbors past the cell edges.
    *
-   * The default is exact, by a search over widening rings, each one job:
-   *  - the first ring is at the coarsest precision whose block names the
-   *    same directories as the block at `precision` (read from the
-   *    relation's partition listing; `precision` without directories);
-   *  - a ring's top-k is the answer, returned as a local frame, when it has
-   *    k rows, its k-th distance is at most the distance from the origin to
-   *    the block's nearest edge, and its 9 cells tile a box (a block cut by
-   *    a pole or wrapped across the antimeridian proves nothing) — no point
-   *    outside the block can then be closer;
-   *  - otherwise the next ring is two precisions coarser when the ring held
-   *    fewer than k rows, else the finest precision whose cell side is at
-   *    least the k-th distance (that ring holds every candidate so far and
-   *    always passes the proof);
-   *  - after 3 rings the search falls back to a full-table top-k.
-   *
-   * k = 0 yields an empty frame with the result schema; k < 0 is an error.
+   * A point with a null coordinate is never a neighbour. k = 0 yields an
+   * empty frame with the result schema; k < 0 is an error.
    */
   def knn(points: DataFrame, lon: Double, lat: Double, k: Int,
           strict: Boolean = false, precision: Int = 7,
           lonCol: String = "lon", latCol: String = "lat",
           geohashCol: String = "geohash"): DataFrame = {
     require(k >= 0, s"k must be non-negative, got k = $k")
-    // a null coordinate has no distance and is never a neighbour (an
-    // ascending sort would otherwise put its null distance first)
-    def topK(base: DataFrame): DataFrame = base
-      .withColumn("distance",
-        st_distance_euclidean(col(lonCol), col(latCol), lit(lon), lit(lat)))
-      .filter(col("distance").isNotNull)
-      .orderBy(col("distance").asc)
-      .limit(k)
-    val hasDirs = points.columns.contains("gh_prefix")
-    def ring(prefixes: Seq[String]): DataFrame = {
+    if (k == 0) topK(points, lon, lat, k, lonCol, latCol)
+    else if (!strict) knnSearch(points, lon, lat, k, lonCol, latCol)._1
+    else if (points.columns.contains(geohashCol)) {
+      val prefixes = GeohashPruning.knnPrefixes(lon, lat, precision)
       val keyed = points.filter(prefixPredicate(col(geohashCol), prefixes))
-      topK(if (hasDirs) keyed.filter(partitionPrefixPredicate(prefixes)) else keyed)
-    }
-    // Each ring's top-k (≤ k rows, the final-limit materialization every
-    // KNN query pays) doubles as its own soundness probe: collect it once
-    // and return it directly when the proof holds.
-    @annotation.tailrec
-    def search(p: Int, ringsLeft: Int): DataFrame = {
-      val prefixes = GeohashPruning.knnPrefixes(lon, lat, p)
-      val candidate = ring(prefixes)
-      val rows = candidate.collect()
-      val kth = if (rows.length < k) Double.PositiveInfinity
-                else rows.last.getDouble(rows.last.fieldIndex("distance"))
-      if (GeohashPruning.knnMargin(lon, lat, prefixes).exists(kth <= _))
-        candidate.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), candidate.schema)
-      else GeohashPruning.nextRingPrecision(p, kth) match {
-        case Some(q) if ringsLeft > 1 => search(q, ringsLeft - 1)
-        case _ => topK(points)
-      }
-    }
-    if (k == 0 || !points.columns.contains(geohashCol)) topK(points)
-    else if (strict) ring(GeohashPruning.knnPrefixes(lon, lat, precision))
-    else search(GeohashPruning.firstRingPrecision(lon, lat, precision,
-      if (hasDirs) directoryPrefixLen(points) else None), ringsLeft = 3)
+      val ring = if (points.columns.contains("gh_prefix"))
+        keyed.filter(partitionPrefixPredicate(prefixes)) else keyed
+      topK(ring, lon, lat, k, lonCol, latCol)
+    } else topK(points, lon, lat, k, lonCol, latCol)
   }
 
-  /** Length of the `gh_prefix` directory names in the file listing of
-    * `points` (no job, no data read); None unless exactly one length is
-    * found, e.g. for a frame not read from a partitioned layout. */
-  private def directoryPrefixLen(points: DataFrame): Option[Int] = {
-    val lengths = points.inputFiles
-      .flatMap(_.split('/').find(_.startsWith("gh_prefix=")))
-      .map(_.stripPrefix("gh_prefix="))
-      .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-      .map(_.length).distinct
-    if (lengths.length == 1) lengths.headOption else None
+  /** The exact [[knn]] with what its search did: the row-group search of
+    * [[RowGroupKnn]] when it proves its answer within `rowBudget` rows,
+    * else the distributed top-k. */
+  private[graft] def knnSearch(points: DataFrame, lon: Double, lat: Double, k: Int,
+                               lonCol: String = "lon", latCol: String = "lat",
+                               rowBudget: Long = RowGroupKnn.RowBudget
+                              ): (DataFrame, RowGroupKnn.Record) = {
+    val (found, record) = RowGroupKnn.search(points, lon, lat, k, lonCol, latCol, rowBudget)
+    (found.getOrElse(topK(points, lon, lat, k, lonCol, latCol)), record)
   }
+
+  /** The k rows of `base` nearest to (lon, lat) with their `distance`, as a
+    * TakeOrderedAndProject plan. A null coordinate has no distance and is
+    * never a neighbour (an ascending sort would otherwise put its null
+    * distance first). */
+  private def topK(base: DataFrame, lon: Double, lat: Double, k: Int,
+                   lonCol: String, latCol: String): DataFrame = base
+    .withColumn("distance",
+      st_distance_euclidean(col(lonCol), col(latCol), lit(lon), lit(lat)))
+    .filter(col("distance").isNotNull)
+    .orderBy(col("distance").asc)
+    .limit(k)
 
   /**
    * Grouped top-N-earliest (reference TopXEndpoint.java:58-123: per-region

@@ -115,52 +115,4 @@ object GeohashPruning {
     * 8 neighbors (KNNQuery.java:31,84-88; default precision 7 ≈ ±0.7 km). */
   def knnPrefixes(lon: Double, lat: Double, precision: Int = 7): Seq[String] =
     Geohash.cellAndNeighbors(lat, lon, precision)
-
-  /** The shorter side, in degrees, of a geohash cell at `precision`
-    * (5 bits per character; longitude takes the odd bit). */
-  private def cellSide(precision: Int): Double = {
-    val bits = 5 * precision
-    math.min(180.0 / math.pow(2, bits / 2), 360.0 / math.pow(2, (bits + 1) / 2))
-  }
-
-  /**
-   * Radius of the disc around (lon, lat) that the KNN block `cells` is
-   * known to contain: the distance to the block's nearest edge. Only a full
-   * block of 9 cells that tiles a box bounds such a disc; a block cut by a
-   * pole or wrapped across the antimeridian yields None.
-   */
-  def knnMargin(lon: Double, lat: Double, cells: Seq[String]): Option[Double] =
-    if (cells.size != 9) None
-    else tiledBox(cells).map { case (y0, y1, x0, x1) =>
-      Seq(lon - x0, x1 - lon, lat - y0, y1 - lat).min
-    }
-
-  /**
-   * First ring of the exact KNN search on a layout whose directories are
-   * geohash prefixes of `dirLen` characters: the coarsest precision in
-   * [dirLen, precision] whose block, cut to `dirLen` characters, names the
-   * same directories as the block at `precision`. That ring opens no more
-   * directories than the finest one. Without directories it is `precision`.
-   */
-  def firstRingPrecision(lon: Double, lat: Double, precision: Int,
-                         dirLen: Option[Int]): Int = dirLen match {
-    case Some(d) if d < precision =>
-      def dirs(p: Int) = knnPrefixes(lon, lat, p).map(_.take(d)).toSet
-      val finest = dirs(precision)
-      (d until precision).find(p => dirs(p) == finest).getOrElse(precision)
-    case _ => precision
-  }
-
-  /**
-   * Precision of the KNN ring after one at `p` whose top-k failed the
-   * exactness proof. With fewer than k rows (`kth` infinite), two
-   * precisions coarser. Otherwise the finest coarser precision whose cell
-   * side is at least `kth`: that block holds every current candidate and
-   * its margin is at least one cell side, so it passes the proof. None
-   * when no coarser ring exists.
-   */
-  def nextRingPrecision(p: Int, kth: Double): Option[Int] =
-    if (p <= 1) None
-    else if (kth.isInfinite) Some(math.max(1, p - 2))
-    else (p - 1 to 1 by -1).find(q => cellSide(q) >= kth)
 }

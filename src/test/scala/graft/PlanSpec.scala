@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * refactor silently loses predicate pushdown, partial aggregation, broadcast
  * joins, or the top-k partial/final split.
  */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -26,7 +26,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("within on parquet-backed points pushes bbox ranges into the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pts").toString
+    val dir = tempDir("graft-pts").toString
     Gis.writePoints(Gis.bulkIngest(spark, 10000, -76, -75, 44, 45, seed = 3), dir, numFiles = 4)
     val pts = spark.read.parquet(dir)
     val q = Gis.within(pts, "POLYGON ((-75.6 44.2, -75.6 44.4, -75.4 44.4, -75.4 44.2, -75.6 44.2))")
@@ -43,7 +43,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("within on gh_prefix-partitioned layout prunes partitions (directory skip)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     Gis.writePointsPartitioned(
       Gis.bulkIngest(spark, 20000, -76, -74, 44, 46, seed = 5), dir, prefixLen = 3)
     val pts = spark.read.parquet(dir)
@@ -67,15 +67,17 @@ class PlanSpec extends AnyFunSuite {
     // seeded points dense enough that the origin's 10 nearest lie well
     // inside its 9-cell block
     val pts = Gis.bulkIngest(spark, 20000, -73.995, -73.945, 40.735, 40.785, seed = 9)
-    // strict mode keeps the plan lazy (the sound non-strict path returns its
-    // already-collected ≤k rows as a LocalTableScan — one scan, by design)
+    // an in-memory frame is no stored parquet table, so both the strict
+    // 9-cell scan and the exact search plan the bounded top-k (on a stored
+    // table the exact search runs on the driver instead: GisKnnRingSpec)
     val p = plan(Gis.knn(pts, -73.97, 40.76, 10, strict = true))
     assert(p.contains("TakeOrderedAndProject"), s"no bounded top-k operator:\n$p")
     // non-strict result agrees with the strict plan for this in-cells origin
     val strictRows = Gis.knn(pts, -73.97, 40.76, 10, strict = true)
       .select("geohash").collect().map(_.getString(0)).toSet
-    val soundRows = Gis.knn(pts, -73.97, 40.76, 10)
-      .select("geohash").collect().map(_.getString(0)).toSet
+    val sound = Gis.knn(pts, -73.97, 40.76, 10)
+    assert(plan(sound).contains("TakeOrderedAndProject"), s"no bounded top-k operator:\n${plan(sound)}")
+    val soundRows = sound.select("geohash").collect().map(_.getString(0)).toSet
     assert(strictRows == soundRows)
   }
 
@@ -118,7 +120,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("optimizer rule auto-prunes raw SQL st_covers_wkt (no Gis API involved)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sqlpts").toString
+    val dir = tempDir("graft-sqlpts").toString
     Gis.writePoints(Gis.bulkIngest(spark, 5000, -76, -75, 44, 45, seed = 9), dir, numFiles = 2)
     spark.read.parquet(dir).createOrReplaceTempView("sql_pts")
     val df = spark.sql(
@@ -167,7 +169,7 @@ class PlanSpec extends AnyFunSuite {
     val wifi = Gis.ingestTsv(spark, graft.gates.Fixtures.WifiTsv)
     val matches = Gis.within(wifi,
       "POLYGON ((-73.980844 40.758703, -73.987214 40.761369, -73.990839 40.7564, -73.984422 40.753642, -73.980844 40.758703))")
-    val path = java.nio.file.Files.createTempDirectory("geojson").resolve("out.geojson").toString
+    val path = tempDir("geojson").resolve("out.geojson").toString
     Gis.writeGeoJson(matches, path)
     val doc = spark.read.option("multiLine", "true").json(path)
     val row = doc.selectExpr("type", "size(features) as n",
@@ -556,7 +558,7 @@ class PlanSpec extends AnyFunSuite {
     // test-owned parquet (not the shared fixture) keeps the scan a real
     // FileScan regardless of what other suites cached.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-canon-plan").toString
+    val dir = tempDir("graft-canon-plan").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"n_chars", $"text")
       .write.mode("overwrite").parquet(dir)

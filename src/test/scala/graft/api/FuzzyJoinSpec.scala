@@ -1,10 +1,10 @@
 package graft.api
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class FuzzyJoinSpec extends AnyFunSuite {
+class FuzzyJoinSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -76,7 +76,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
     val df = rows.toDF("id", "text")
     val ref = df.filter($"id" % 2 === 0)
     val probe = df.filter($"id" % 2 === 1)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-edit-idx").toString
+    val idxDir = tempDir("graft-edit-idx").toString
     FuzzyJoin.writeEditIndex(ref, idxDir, tau = 2)
     val got = FuzzyJoin.editDistanceAgainstIndex(spark, idxDir, probe, tau = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -88,7 +88,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
     assert(got == want && want.nonEmpty)
     // streaming probe (stateless stream-static): per-signature duplicate
     // pairs collapse downstream to the same set
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-edit-stream")
+    val streamDir = tempDir("graft-edit-stream")
     probe.coalesce(1).write.mode("overwrite").parquet(streamDir.toString)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),

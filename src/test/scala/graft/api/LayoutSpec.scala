@@ -1,13 +1,13 @@
 package graft.api
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Z-order layout: interleave correctness, range guard, and the actual
   * row-group-skipping payoff measured from scan metrics. */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -50,8 +50,8 @@ class LayoutSpec extends AnyFunSuite {
     val rows = (0 until 300000).map(i =>
       (i.toLong, rnd.nextInt(4096).toLong, rnd.nextInt(4096).toLong))
     val df = rows.toDF("id", "x", "y")
-    val zPath = java.nio.file.Files.createTempDirectory("graft-zord").toString
-    val fPath = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    val zPath = tempDir("graft-zord").toString
+    val fPath = tempDir("graft-flat").toString
     Layout.writeZOrdered(df, zPath, "x", "y")
     // adversarial baseline: rows shuffled by id hash (no useful stats)
     df.repartition(32, hash(col("id"))).write.mode("overwrite").parquet(fPath)

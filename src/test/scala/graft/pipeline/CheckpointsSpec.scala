@@ -15,16 +15,8 @@ class CheckpointsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def withCheckpointDir[T](f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    try f(dir)
-    finally {
-      // restore session default so later suites keep localCheckpoint-only
-      // behavior regardless of run order
-      val deleted = new scala.reflect.io.Directory(new java.io.File(dir))
-      deleted.deleteRecursively()
-    }
-  }
+  private def withCheckpointDir[T](f: String => T): T =
+    SparkTestBase.withTempDir("graft_ckpt_")(dir => f(dir.toString))
 
   private def dirHasFiles(dir: String): Boolean = {
     val root = java.nio.file.Paths.get(dir)
@@ -80,18 +72,15 @@ class CheckpointsSpec extends AnyFunSuite {
     // was spuriously satisfied ("/…/ab/uuid".contains("/…/a")) and blocks
     // silently landed in the old location — the anchored comparison must
     // re-set and write into the requested dir
-    val parent = java.nio.file.Files.createTempDirectory("graft_ckpt_sib_")
-    val ab = parent.resolve("ab").toString
-    val a = parent.resolve("a").toString
-    try {
+    SparkTestBase.withTempDir("graft_ckpt_sib_") { parent =>
+      val ab = parent.resolve("ab").toString
+      val a = parent.resolve("a").toString
       val df = spark.range(64).toDF("x")
       Checkpoints.materialize(df, Some(ab)).count()
       assert(dirHasFiles(ab), "first dir got no blocks")
       Checkpoints.materialize(df, Some(a)).count()
       assert(dirHasFiles(a),
         "blocks must land in the REQUESTED sibling dir, not the substring-matching old one")
-    } finally {
-      new scala.reflect.io.Directory(parent.toFile).deleteRecursively()
     }
   }
 

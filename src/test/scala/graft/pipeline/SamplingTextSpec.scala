@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SamplingTextSpec extends AnyFunSuite {
+class SamplingTextSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -471,7 +471,7 @@ class SamplingTextSpec extends AnyFunSuite {
   }
 
   test("writeTokenShards: balanced shards, lossless round trip, shard pruning") {
-    val out = java.nio.file.Files.createTempDirectory("shards_").toString
+    val out = tempDir("shards_").toString
     val budget = 400L
     TextAnalysis.writeTokenShards(docs.filter($"text".isNotNull), out, budget)
     // partition-column inference reads pack_id back as int — normalize
@@ -500,7 +500,7 @@ class SamplingTextSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters"), plan)
     assert(one.count() > 0)
     // determinism: a rewrite produces the identical shard assignment
-    val out2 = java.nio.file.Files.createTempDirectory("shards_").toString
+    val out2 = tempDir("shards_").toString
     TextAnalysis.writeTokenShards(docs.filter($"text".isNotNull), out2, budget)
     val a = spark.read.parquet(out).select("doc_id", "source", "pack_id")
       .collect().map(_.toSeq).toSet
