@@ -52,7 +52,9 @@ object Session {
     * ContextCleaner's weak-reference GC let block-manager residue pile up
     * and slowed LATER memory-hungry queries 3-6× (q_dedup_ngram 24.0 s mid-
     * run vs 7.1 s in a fresh session, same corpus and plan). Each gate
-    * query is self-contained, so freeing between queries changes no result. */
+    * query is self-contained, so freeing between queries changes no result;
+    * that includes the gates' index directories under
+    * [[graft.gates.Fixtures.scratch]]. */
   def release(spark: SparkSession): Unit = {
     // localCheckpoint and persisted blocks
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -61,6 +63,7 @@ object Session {
     // references, so without a GC the cleaner queue drains only when the
     // heap happens to collect
     System.gc()
+    graft.gates.Fixtures.releaseScratch()
   }
 
   /** Idempotent session set-up: WARN logging, the two counted log mutes

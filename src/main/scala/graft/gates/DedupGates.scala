@@ -454,10 +454,7 @@ object DedupGates {
         graft.pipeline.Multimodal.perceptualHashes(s, media).toDF(), None)
       val corpus = hashes.filter(pmod(col("media_id"), lit(10)) =!= 0)
       val batch = hashes.filter(pmod(col("media_id"), lit(10)) === 0)
-      // per-invocation unique path: a fixed hashCode-keyed name let
-      // concurrent runs over the same sfDir (bench + verify, parallel
-      // suites) clobber the index between write and probe
-      val path = s"/tmp/graft_h64_index_${java.util.UUID.randomUUID().toString.take(12)}"
+      val path = Fixtures.scratch("h64_index")
       Dedup.writeHash64Index(corpus, path, "media_id", "format")
       Dedup.hash64AgainstIndex(s, path, batch, "media_id", "format")
     },
@@ -545,8 +542,7 @@ object DedupGates {
         .select(col("doc_id"), col("text"), col("n_chars"))
       val base = docs.filter(pmod(col("doc_id"), lit(100)) =!= 0)
       val batch = docs.filter(pmod(col("doc_id"), lit(100)) === 0)
-      // per-invocation unique path (the q_dedup_media_incr precedent)
-      val path = s"/tmp/graft_mh_index_${java.util.UUID.randomUUID().toString.take(12)}"
+      val path = Fixtures.scratch("mh_index")
       // the batch's INTERNAL labeling touches neither the index nor the
       // corpus labels — overlap its (many small) materialization jobs
       // with the index write + corpus chain on a second driver thread
@@ -758,7 +754,7 @@ object DedupGates {
       val docs = Tables.table(s, d, "documents")
       val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      val path = s"/tmp/graft_mh_index_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("mh_index")
       Dedup.writeMinhashIndex(docs, path)
       Dedup.dedupAgainstIndex(s, path, batch, docs)
         .select(col("new_id"), col("corpus_id"))
@@ -776,7 +772,7 @@ object DedupGates {
       val docs = Tables.table(s, d, "documents")
       val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      val path = s"/tmp/graft_mhw_index_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("mhw_index")
       Dedup.writeMinhashIndex(docs, path, wordShingle = 13)
       Dedup.dedupAgainstIndex(s, path, batch, docs, wordShingle = 13)
         .select(col("new_id"), col("corpus_id"))
@@ -804,8 +800,8 @@ object DedupGates {
       val docs = Tables.table(s, d, "documents")
       val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      val path = s"/tmp/graft_mh_index_${Integer.toHexString(d.hashCode)}"
-      val bloom = s"/tmp/graft_mh_bloom_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("mh_index")
+      val bloom = Fixtures.scratch("mh_bloom")
       Dedup.writeMinhashIndex(docs, path)
       Dedup.writeBloomIndex(s, path, bloom)
       Dedup.dedupAgainstIndex(s, path, batch, docs, bloomPath = Some(bloom))
@@ -959,7 +955,7 @@ object DedupGates {
         .withColumn("text", lineDedupFixtureText)
       val corpus = fx.filter(pmod(col("doc_id"), lit(4)) =!= 0)
       val batch = fx.filter(pmod(col("doc_id"), lit(4)) === 0)
-      val path = s"/tmp/graft_line_index_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("line_index")
       Dedup.writeLineIndex(corpus, path)
       Dedup.dedupLinesAgainstIndex(s, path, batch)
         .select(col("doc_id"), md5(col("cleaned")).as("clean_md5"),

@@ -19,6 +19,33 @@ object Fixtures {
   /** The reference's wifi hotspot points (TSV with X/Y columns, EPSG:4326). */
   val WifiTsv: String = s"$ReferenceDir/src/test/resources/wifi_4326.txt"
 
+  /** This JVM's root for gate scratch files, created on first use. */
+  private var scratchRoot: Option[java.nio.file.Path] = None
+  private var scratchCount = 0L
+  sys.addShutdownHook(releaseScratch())
+
+  /** A path no one else writes for a gate's index or other scratch
+    * output: `name` plus a counter, under this JVM's scratch root (a
+    * `graft_scratch_*` directory in `java.io.tmpdir`). Neither another
+    * call nor another JVM on the same sf directory gets it.
+    * [[graft.Session.release]] deletes the root between queries, and the
+    * JVM's exit deletes what is left. */
+  private[graft] def scratch(name: String): String = synchronized {
+    val root = scratchRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory("graft_scratch_")
+      scratchRoot = Some(r)
+      r
+    }
+    scratchCount += 1
+    root.resolve(s"${name}_$scratchCount").toString
+  }
+
+  /** Deletes the scratch root and everything under it. */
+  private[graft] def releaseScratch(): Unit = synchronized {
+    scratchRoot.foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+    scratchRoot = None
+  }
+
   /** Synthetic point cloud derived from lineitem (deterministic, mirrors the
     * oracle SQL exactly): lon ∈ [-180, 20), lat ∈ [-85, 85) on a 0.1° grid. */
   private[graft] def points(spark: SparkSession, dir: String): DataFrame =

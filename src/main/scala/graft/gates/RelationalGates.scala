@@ -131,7 +131,7 @@ object RelationalGates {
         .select(when(col("doc_id") % 13 === 0,
             expr("substring(__j, 1, length(__j) - 1)"))
           .otherwise(col("__j")).as("value"))
-      val path = s"/tmp/graft_jsonl_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("jsonl")
       lines.coalesce(4).write.mode("overwrite").text(path)
       val back = graft.sources.Jsonl.readQuarantined(s, path,
         "doc_id LONG, source STRING, n_chars LONG")
@@ -306,7 +306,7 @@ object RelationalGates {
       val names = Tables.table(s, d, "part")
         .groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
         .select(col("id"), col("p_name").as("text"))
-      val path = s"/tmp/graft_edit_index_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("edit_index")
       graft.api.FuzzyJoin.writeEditIndex(
         names.filter(pmod(col("id"), lit(2)) === 0), path, tau = 2)
       graft.api.FuzzyJoin.editDistanceAgainstIndex(

@@ -225,7 +225,7 @@ object VectorGates {
       val embs = Tables.table(s, d, "embeddings")
       val cents = Similarity.deterministicCentroids(embs, nCells = 8)
       val cbs = Similarity.pqCodebooks(embs, m = 8, nCodes = 16)
-      val path = s"/tmp/graft_ivfpq_${Integer.toHexString(d.hashCode)}"
+      val path = Fixtures.scratch("ivfpq")
       Similarity.writeEmbeddingsIvfPq(embs, path, cents, cbs)
       val q = firstVector(embs)
       Similarity.ivfPqTopK(s, path, cents, cbs, q, 10, nProbe = 3)

@@ -270,11 +270,8 @@ object Curation {
    * Scale shape: one shuffle of compact (id, group, score) triples on the
    * group key; the window sorts scores WITHIN a language, the same cost
    * class as CCNet's own per-language percentile cut. Heavily-skewed
-   * group sizes (one dominant language) sort more rows in one partition —
-   * at that point swap the NTILE for the two-pass approximate-threshold cut
-   * [[perplexityBucketsApprox]] (its frequency bounds are differential-tested
-   * in PipelineSpec); the exact NTILE is the oracle-checkable reference
-   * semantics.
+   * group sizes (one dominant language) sort more rows in one partition;
+   * the exact NTILE is the oracle-checkable reference semantics.
    */
   def perplexityBuckets(scored: DataFrame, groupCol: String = "lang",
                         scoreCol: String = "mean_centibits",
@@ -294,35 +291,6 @@ object Curation {
     when(bucket === 1, "head")
       .when(bucket === nBuckets, "tail")
       .otherwise("middle")
-
-  /**
-   * The SKEW-SCALE variant of [[perplexityBuckets]]: pass 1 computes
-   * per-group approximate bucket boundaries (`percentile_approx`, a
-   * mergeable sketch — map-side-combined, no per-group sort); pass 2
-   * assigns scan-locally against the broadcast boundary table, a score
-   * going to the first bucket whose boundary holds it. One dominant
-   * language no longer funnels its whole (id, score) stream through a
-   * single sort partition — the NTILE's only scale hazard. Bucket
-   * FREQUENCIES are approximate (sketch accuracy), assignment is still
-   * deterministic and monotone in the score; the exact NTILE remains the
-   * oracle-checkable reference semantics.
-   */
-  def perplexityBucketsApprox(scored: DataFrame, groupCol: String = "lang",
-                              scoreCol: String = "mean_centibits",
-                              nBuckets: Int = 3,
-                              accuracy: Int = 10000): DataFrame = {
-    require(nBuckets >= 2, "nBuckets must be at least 2")
-    val qs = (1 until nBuckets).map(_.toDouble / nBuckets)
-    val thresholds = scored.groupBy(col(groupCol))
-      .agg(percentile_approx(col(scoreCol),
-        array(qs.map(lit): _*), lit(accuracy)).as("bucket_his"))
-    scored.join(broadcast(thresholds), groupCol)
-      .withColumn("bucket",
-        least(lit(nBuckets.toLong),
-          size(filter(col("bucket_his"), h => h < col(scoreCol))).cast("long") + 1L))
-      .withColumn("bucket_label", bucketLabel(col("bucket"), nBuckets))
-      .drop("bucket_his")
-  }
 
   /**
    * Benchmark decontamination (Brown et al. NeurIPS'20 App. C — the

@@ -6,12 +6,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
- * The driver-side path of the iterative operators ([[Graph]]'s fixed-round
- * and converged min-fold and label-propagation operators, and
- * [[Dedup.clusters]]). Small inputs pay one Spark job per round in the
- * distributed loops, and scheduling, not work, sets their time. So once an
- * operator has materialized its cleaned edge table, [[collectUnder]]
- * counts it, and a table of at most the budget (default
+ * The driver-side path of the iterative operators ([[Graph]]'s min-fold
+ * operators, fixed-round and converged, its fixed-round label-propagation
+ * operators, and [[Dedup.clusters]]). Small inputs pay one Spark job per
+ * round in the distributed loops, and scheduling, not work, sets their
+ * time. So once an operator has materialized its cleaned edge table,
+ * [[collectUnder]] counts it, and a table of at most the budget (default
  * [[DriverMaxEdges]]) rows is collected as primitive long columns and
  * iterated here, on the driver, with the distributed rounds' exact
  * semantics. A larger table keeps the distributed loop, over the same
@@ -187,11 +187,10 @@ private[pipeline] object DriverPath {
     }
     private var label = g.ids.clone()
 
-    /** One round; returns how many labels changed. */
-    def round(): Long = {
+    /** One round. */
+    def round(): Unit = {
       val next = new Array[Long](n)
       val votes = new Array[Long](deg.foldLeft(0)(math.max) + 1)
-      var changed = 0L
       var v = 0
       while (v < n) {
         var k = 0
@@ -214,11 +213,9 @@ private[pipeline] object DriverPath {
           i = e
         }
         next(v) = best
-        if (best != label(v)) changed += 1
         v += 1
       }
       label = next
-      changed
     }
 
     /** (node, label) columns. */

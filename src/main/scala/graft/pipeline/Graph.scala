@@ -20,17 +20,17 @@ import org.apache.spark.sql.graft.SqlFunctions
  * partitioning and summation order.
  *
  * Small graphs run the round-based operators on the driver. The min-fold
- * family (components, BFS, weighted SSSP, temporal reach and their
- * converged twins) and the LPA family (labelPropagation and its
- * converged twin, communityStatsLpa, modularityPermilleLpa) each first
+ * family (components and its converged twin, BFS, weighted SSSP,
+ * temporal reach) and the LPA family (labelPropagation,
+ * communityStatsLpa, modularityPermilleLpa) each first
  * materialize a cleaned edge table: `e` in their setup, or the
  * canonical pairs for LPA. The gate counts that table right there. At
  * most [[DriverPath.DriverMaxEdges]] (2M) rows are collected and the
  * rounds run in primitive arrays ([[DriverPath.MinFold]],
  * [[DriverPath.Lpa]]), one job each for the count and the collect
  * instead of several per round. The results match the distributed
- * rounds exactly: fixed rounds stay fixed, converged twins stop and
- * throw at the same round, and long overflow throws as ANSI SQL does.
+ * rounds exactly: fixed rounds stay fixed, the converged twin stops and
+ * throws at the same round, and long overflow throws as ANSI SQL does.
  * Larger tables run the distributed rounds over the same materialized
  * table. There is no option for this; tests reach the distributed rounds
  * through the `private[pipeline]` overloads that take the budget first.
@@ -85,12 +85,12 @@ object Graph {
         p
     }
 
-  /** Loop-invariant tables shared by the fixed-iteration and convergence
-    * drivers: distinct nodes (carrying a 0/1 `seed` teleport flag — all-1
-    * when unseeded), the edge list joined with out-degrees (or out-weight
-    * totals), the dangling-node set (no out-edges), the node and seed
-    * counts, whether edges carry weights, and whether the per-round rank
-    * table fits the broadcast budget. */
+  /** Loop-invariant tables of the PageRank rounds: distinct nodes
+    * (carrying a 0/1 `seed` teleport flag — all-1 when unseeded), the edge
+    * list joined with out-degrees (or out-weight totals), the
+    * dangling-node set (no out-edges), the node and seed counts, whether
+    * edges carry weights, and whether the per-round rank table fits the
+    * broadcast budget. */
   private case class PrGraph(nodes: DataFrame, edgeDeg: DataFrame,
                              dangling: DataFrame, nNodes: Long,
                              nSeeds: Long, weighted: Boolean,
@@ -334,64 +334,6 @@ object Graph {
   }
 
   /**
-   * Convergence-mode PageRank: iterate until the L1 rank delta
-   * ‖r_{t+1} − r_t‖₁ ≤ `tolL1` (fixed-point units), capped at `maxIters`
-   * rounds — the production form when the iteration count isn't known up
-   * front. Returns (ranks, iterations run, final L1 delta).
-   *
-   * Damping contracts the rank map (‖Δ_{t+1}‖₁ ≲ d/1000·‖Δ_t‖₁ + n·ε_div
-   * where ε_div ≤ 1 is the integer-truncation noise per node), so the
-   * delta decays geometrically to an n-bounded floor; pick tolL1 ≳ a few
-   * × n for guaranteed termination (required: tolL1 ≥ 1). Throws if
-   * `maxIters` rounds pass without reaching `tolL1` — returning
-   * unconverged ranks silently would defeat the contract (same policy as
-   * [[Dedup.clusters]]).
-   *
-   * Each round is materialized ([[Checkpoints.materialize]] — the delta
-   * check is an action anyway, and truncation keeps plans constant-size)
-   * and the delta rides a second bounded aggregate over the joined
-   * old/new rank tables — one extra ≤n-row shuffle per round, the price
-   * of the stopping rule.
-   */
-  def pagerankIntConverged(edges: DataFrame, tolL1: Long, maxIters: Int = 50,
-                           dampingPermille: Int = 850,
-                           scale: Long = 1000000L,
-                           assumeDistinct: Boolean = false,
-                           redistributeDangling: Boolean = false,
-                           checkpointDir: Option[String] = None,
-                           weightCol: Option[String] = None,
-                           seeds: Option[DataFrame] = None)
-      : (DataFrame, Int, Long) = {
-    require(tolL1 >= 1, s"tolL1 must be >= 1, got $tolL1")
-    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille must be in [0,1000], got $dampingPermille")
-    val g = prepare(edges, assumeDistinct, redistributeDangling,
-      checkpointDir, weightCol, seeds)
-    var ranks = Checkpoints.materialize(
-      g.nodes.select(col("node"), expr(s"${scale}L * seed").as("rank")),
-      checkpointDir)
-    var iter = 0
-    var delta = Long.MaxValue
-    while (delta > tolL1 && iter < maxIters) {
-      val next = Checkpoints.materialize(
-        step(g, ranks, dampingPermille, scale, redistributeDangling),
-        checkpointDir)
-      delta = next.withColumnRenamed("rank", "__new")
-        .join(ranks.withColumnRenamed("rank", "__old"), "node")
-        .agg(coalesce(sum(abs(col("__new") - col("__old"))), lit(0L)))
-        .head().getLong(0)
-      ranks = next
-      iter += 1
-    }
-    if (delta > tolL1)
-      throw new IllegalStateException(
-        s"pagerankIntConverged: L1 delta $delta still above tolL1=$tolL1 " +
-          s"after $maxIters rounds — raise maxIters or tolL1")
-    (ranks, iter, delta)
-  }
-
-  /**
    * Per-node triangle counts over an undirected simple graph (edges in
    * either orientation; duplicates and self-loops collapse/drop) — the
    * local clustering signal link-graph curation thresholds on (a crawl
@@ -496,11 +438,11 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** The synchronous LPA vote table shared by the fixed-round and
-    * convergence drivers: adjacency = both orientations of the canonical
-    * simple graph PLUS a self-loop per node (the node's own current label
-    * votes — the standard damping that keeps bipartite structures from
-    * oscillating forever), materialized once since every round joins it. */
+  /** The synchronous LPA vote table of the distributed rounds: adjacency
+    * = both orientations of the canonical simple graph PLUS a self-loop
+    * per node (the node's own current label votes — the standard damping
+    * that keeps bipartite structures from oscillating forever),
+    * materialized once since every round joins it. */
   /** lpaAdjacency from a pre-computed [[canonDeg]] pair — split out so the
     * stats/modularity composites run ONE canonical pass for both the LPA
     * rounds and the per-community rollup instead of re-deriving the edge
@@ -680,59 +622,6 @@ object Graph {
         modularityFrom(g.canon, g.deg, lpaCommunities(g, iters, checkpointDir),
           checkpointDir, g.bcast)
     }
-  }
-
-  /**
-   * Convergence-mode LPA: iterate until NO node changes label, capped at
-   * `maxIters` rounds; throws if the cap passes first (returning
-   * unconverged communities silently would defeat the contract — same
-   * policy as [[pagerankIntConverged]] and [[Dedup.clusters]]). The
-   * deterministic min-label tie-break plus the self-vote make the common
-   * oscillators (bipartite cores) settle; genuinely cyclic label states
-   * hit the cap and throw. Returns (communities, rounds run).
-   *
-   * Each distributed round is materialized (the change-count check is an
-   * action anyway) and the change count is one ≤n-row join — the price
-   * of the stopping rule, same shape as the PageRank delta check.
-   */
-  def labelPropagationConverged(edges: DataFrame, maxIters: Int = 50,
-                                checkpointDir: Option[String] = None)
-      : (DataFrame, Int) =
-    labelPropagationConverged(DriverPath.DriverMaxEdges, edges, maxIters,
-      checkpointDir)
-
-  /** [[labelPropagationConverged]] with the driver path's row `budget`. */
-  private[pipeline] def labelPropagationConverged(budget: Long, edges: DataFrame,
-                                                  maxIters: Int,
-                                                  checkpointDir: Option[String])
-      : (DataFrame, Int) = {
-    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    var iter = 0
-    var changed = Long.MaxValue
-    val communities = lpaInput(edges, budget, checkpointDir) match {
-      case Right(k) =>
-        while (changed > 0 && iter < maxIters) { changed = k.round(); iter += 1 }
-        DriverPath.frame(edges.sparkSession, Seq("node", "community"), k.labels)
-      case Left(g) =>
-        var labels = Checkpoints.materialize(
-          g.adj.select(col("node")).distinct().withColumn("label", col("node")),
-          checkpointDir)
-        while (changed > 0 && iter < maxIters) {
-          val next = Checkpoints.materialize(lpaStep(g.adj, labels, g.bcast),
-            checkpointDir)
-          changed = next.withColumnRenamed("label", "__new")
-            .join(labels.withColumnRenamed("label", "__old"), "node")
-            .filter(col("__new") =!= col("__old")).count()
-          labels = next
-          iter += 1
-        }
-        labels.select(col("node"), col("label").as("community"))
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"labelPropagationConverged: $changed labels still changing after " +
-          s"$maxIters rounds — raise maxIters (oscillating label state)")
-    (communities, iter)
   }
 
   /**
@@ -1041,8 +930,8 @@ object Graph {
   /**
    * Convergence-mode k-core: peel until a round removes nothing, capped
    * at `maxIters` rounds; throws if the cap passes first (same policy as
-   * [[pagerankIntConverged]] / [[labelPropagationConverged]] — an
-   * unconverged core returned silently would defeat the ≥-k contract).
+   * [[componentLabelsConverged]] and [[Dedup.clusters]] — an unconverged
+   * core returned silently would defeat the ≥-k contract).
    * Termination is guaranteed in ≤ n rounds since alive only shrinks;
    * the change check is a count comparison (monotone shrinkage makes
    * count equality set equality). Returns (report, peel rounds run, the
@@ -1242,9 +1131,9 @@ object Graph {
    * Runs exactly `rounds` propagation rounds. Distances min-fold, so
    * rounds are IDEMPOTENT past the fixpoint (a no-op round stays a no-op)
    * and any `rounds` ≥ the true seed eccentricity returns exact
-   * distances — the oracle-replayable form, like [[kcore]];
-   * [[bfsDistancesConverged]] finds the depth. Nodes unreachable within
-   * `rounds` emit NO row. Seeds outside the graph's node set are ignored.
+   * distances — the oracle-replayable form, like [[kcore]]. Nodes
+   * unreachable within `rounds` emit NO row. Seeds outside the graph's
+   * node set are ignored.
    *
    * The dist plan references itself twice per round (offer + union), so
    * rounds checkpoint every 4 — the k-core doubling rate. At 100 TB each
@@ -1267,34 +1156,6 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     minFoldFixed(bfsSetup(edges, seeds, assumeDistinct, checkpointDir),
       rounds, budget, checkpointDir)
-  }
-
-  /**
-   * Convergence-mode BFS: propagate until a round changes nothing, capped
-   * at `maxRounds` (throws if the cap passes first — house policy, see
-   * [[kcoreConverged]]). The change check is (row count, Σ dist)
-   * equality: reached-set growth raises the count and any distance
-   * improvement strictly lowers the sum while min-folding can never raise
-   * one, so the pair is stable iff the table is. Termination ≤ n rounds.
-   * Returns (distances, rounds run — the last being the confirming no-op).
-   */
-  def bfsDistancesConverged(edges: DataFrame, seeds: DataFrame,
-                            maxRounds: Int = 50,
-                            assumeDistinct: Boolean = false,
-                            checkpointDir: Option[String] = None)
-      : (DataFrame, Int) =
-    bfsDistancesConverged(DriverPath.DriverMaxEdges, edges, seeds, maxRounds,
-      assumeDistinct, checkpointDir)
-
-  /** [[bfsDistancesConverged]] with the driver path's row `budget`. */
-  private[pipeline] def bfsDistancesConverged(budget: Long, edges: DataFrame,
-                                              seeds: DataFrame, maxRounds: Int,
-                                              assumeDistinct: Boolean,
-                                              checkpointDir: Option[String])
-      : (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    minFoldConverged(bfsSetup(edges, seeds, assumeDistinct, checkpointDir),
-      maxRounds, budget, checkpointDir, "bfsDistancesConverged: still propagating")
   }
 
   // -------------------------------------------- weighted shortest paths
@@ -1352,10 +1213,9 @@ object Graph {
    * oracle-replayable form ([[kcore]]/[[bfsDistances]] pattern); note a
    * weighted optimum can use MORE hops than the BFS depth (a long cheap
    * detour beats a short expensive hop), so probe the hop bound, not the
-   * unweighted eccentricity. [[ssspWeightedConverged]] finds the depth.
-   * Nodes unreachable within `rounds` emit NO row; seeds outside the node
-   * set are ignored; distance sums fault loudly on long overflow under
-   * ANSI rather than wrapping.
+   * unweighted eccentricity. Nodes unreachable within `rounds` emit NO
+   * row; seeds outside the node set are ignored; distance sums fault
+   * loudly on long overflow under ANSI rather than wrapping.
    *
    * The dist plan references itself twice per round (offer + union), so
    * rounds checkpoint every 4 — the BFS doubling rate. At 100 TB each
@@ -1380,38 +1240,6 @@ object Graph {
     minFoldFixed(
       ssspSetup(edges, seeds, weightCol, assumeMinFolded, checkpointDir),
       rounds, budget, checkpointDir)
-  }
-
-  /**
-   * Convergence-mode weighted SSSP: relax until a round changes nothing,
-   * capped at `maxRounds` (throws if the cap passes first — house
-   * policy). The change check is (row count, Σ dist) equality — sound for
-   * the same reason as [[bfsDistancesConverged]]: reached-set growth
-   * raises the count and any relaxation strictly lowers the sum while
-   * min-folding can never raise one. Positive weights bound termination
-   * at ≤ n rounds (every optimal path is simple). Returns (distances,
-   * rounds run — the last being the confirming no-op).
-   */
-  def ssspWeightedConverged(edges: DataFrame, seeds: DataFrame,
-                            weightCol: String = "w",
-                            maxRounds: Int = 50,
-                            assumeMinFolded: Boolean = false,
-                            checkpointDir: Option[String] = None)
-      : (DataFrame, Int) =
-    ssspWeightedConverged(DriverPath.DriverMaxEdges, edges, seeds, weightCol,
-      maxRounds, assumeMinFolded, checkpointDir)
-
-  /** [[ssspWeightedConverged]] with the driver path's row `budget`. */
-  private[pipeline] def ssspWeightedConverged(budget: Long, edges: DataFrame,
-                                              seeds: DataFrame, weightCol: String,
-                                              maxRounds: Int,
-                                              assumeMinFolded: Boolean,
-                                              checkpointDir: Option[String])
-      : (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    minFoldConverged(
-      ssspSetup(edges, seeds, weightCol, assumeMinFolded, checkpointDir),
-      maxRounds, budget, checkpointDir, "ssspWeightedConverged: still relaxing")
   }
 
   // -------------------------------------------- temporal reachability
@@ -1465,10 +1293,9 @@ object Graph {
    * networks). Arrival values live in the finite edge-time lattice and
    * min-folding is monotone, so rounds are idempotent past the fixpoint
    * and any `rounds` ≥ the longest minimal time-respecting path's hop
-   * count returns the exact fixpoint; [[temporalReachabilityConverged]]
-   * finds that depth. Seeds start at `startTime` (contacts before it
-   * are ignored for them). Nodes unreachable within `rounds` emit no
-   * row.
+   * count returns the exact fixpoint. Seeds start at `startTime`
+   * (contacts before it are ignored for them). Nodes unreachable within
+   * `rounds` emit no row.
    *
    * Per round: ONE join keyed on the current node with the eligibility
    * predicate evaluated inside it + ONE min shuffle; rows never wider
@@ -1497,41 +1324,6 @@ object Graph {
       temporalSetup(edges, seeds, timeCol, startTime, strict, assumeDistinct,
         checkpointDir),
       rounds, budget, checkpointDir)
-  }
-
-  /**
-   * Convergence-mode temporal reachability: propagate until a round
-   * changes nothing, capped at `maxRounds` (throws past the cap).
-   * Change check: (row count, Σ arrival) — reach growth raises the
-   * count, any improvement strictly lowers the sum, min-folding never
-   * raises one (the [[bfsDistancesConverged]] argument). Termination is
-   * bounded by the finite edge-time lattice. Returns (arrivals, rounds
-   * run — the last being the confirming no-op).
-   */
-  def temporalReachabilityConverged(edges: DataFrame, seeds: DataFrame,
-                                    timeCol: String = "t",
-                                    startTime: Long = 0L,
-                                    strict: Boolean = false,
-                                    maxRounds: Int = 100,
-                                    assumeDistinct: Boolean = false,
-                                    checkpointDir: Option[String] = None)
-      : (DataFrame, Int) =
-    temporalReachabilityConverged(DriverPath.DriverMaxEdges, edges, seeds,
-      timeCol, startTime, strict, maxRounds, assumeDistinct, checkpointDir)
-
-  /** [[temporalReachabilityConverged]] with the driver path's row
-    * `budget`. */
-  private[pipeline] def temporalReachabilityConverged(
-      budget: Long, edges: DataFrame, seeds: DataFrame, timeCol: String,
-      startTime: Long, strict: Boolean, maxRounds: Int,
-      assumeDistinct: Boolean, checkpointDir: Option[String])
-      : (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    minFoldConverged(
-      temporalSetup(edges, seeds, timeCol, startTime, strict, assumeDistinct,
-        checkpointDir),
-      maxRounds, budget, checkpointDir,
-      "temporalReachabilityConverged: still propagating")
   }
 
   // ---------------------------------------------- connected components

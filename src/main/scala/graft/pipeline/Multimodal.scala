@@ -5,21 +5,15 @@ import org.apache.spark.sql.functions._
 
 /**
  * Multimodal-column plumbing: image/audio/video as opaque `binary` content
- * plus typed metadata, with decode / feature-extract / frame-sample stages.
- *
- * The Spark-side machinery (schema, batched partition-wise processing,
- * deterministic outputs, column pruning of the heavy binary column) is real
- * and tested; the codec itself is STUBBED — this container has no image/
- * audio libraries, so `decodeStub` derives deterministic fake features from
- * the bytes. Swapping in a real decoder is a drop-in replacement of
- * `decodeStub` inside `mapPartitions` (the Scala analog of PySpark's
- * mapInPandas batch UDF: one JVM-side batch iterator per partition).
+ * plus typed metadata, with metadata, container-decode and perceptual-hash
+ * stages. Decoding is a batched partition-wise parse inside
+ * `mapPartitions` (the Scala analog of PySpark's mapInPandas batch UDF:
+ * one JVM-side batch iterator per partition) of two real container
+ * formats, WAV and BMP, in pure JVM code.
  */
 object Multimodal {
 
   case class MediaRow(media_id: Long, kind: String, content: Array[Byte])
-  case class MediaFeatures(media_id: Long, kind: String, byte_len: Int,
-                           sha: String, features: Array[Float])
 
   /** Demo media table derived from any (id, text) table: content = utf-8
     * bytes. At 100 TB the binary column arrives from parquet/lance as-is. */
@@ -29,59 +23,6 @@ object Multimodal {
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (pmod(col(idCol), lit(3)) + lit(1)).cast("int")).as("kind"),
       encode(col(textCol), "UTF-8").as("content"))
-
-  /**
-   * ======= STUB =======
-   * Deterministic fake "decode": a 16-bin byte histogram normalized to
-   * [0,1] stands in for decoded image/audio features. Replace the body
-   * with a real codec (e.g. JNI image lib) without touching the plan shape.
-   */
-  def decodeStub(content: Array[Byte], dim: Int): Array[Float] = {
-    val hist = new Array[Float](dim)
-    if (content == null || content.isEmpty) return hist
-    var i = 0
-    while (i < content.length) {
-      hist((content(i) & 0xff) % dim) += 1f
-      i += 1
-    }
-    var j = 0
-    while (j < dim) { hist(j) /= content.length; j += 1 }
-    hist
-  }
-
-  /**
-   * Batched feature extraction over partitions. Binary-heavy work stays on
-   * executors; output drops the content column so downstream stages never
-   * re-shuffle the raw bytes.
-   */
-  def extractFeatures(spark: SparkSession, media: DataFrame, dim: Int = 16): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select("media_id", "kind", "content").as[MediaRow]
-      .mapPartitions { rows =>
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-        rows.map { r =>
-          digest.reset()
-          val sha = digest.digest(r.content).map("%02x".format(_)).mkString
-          MediaFeatures(r.media_id, r.kind, r.content.length, sha,
-            decodeStub(r.content, dim))
-        }
-      }
-  }
-
-  /**
-   * Frame sampling: split content into `n` fixed-stride byte windows
-   * ("frames") as array<binary> — pure built-ins, no data leaves the row.
-   * For real video this becomes keyframe extraction inside the same shape.
-   */
-  def frameSample(media: DataFrame, n: Int, frameBytes: Int = 64): DataFrame = {
-    val len = length(col("content"))
-    val stride = greatest((len / n).cast("int"), lit(1))
-    media.withColumn("frames",
-      filter(
-        transform(sequence(lit(0), lit(n - 1)),
-          i => substring(col("content"), (i * stride + 1).cast("int"), lit(frameBytes))),
-        f => length(f) > 0))
-  }
 
   /** Lightweight metadata projection (no decode): byte length + sha256. */
   def withMediaMeta(media: DataFrame): DataFrame =
@@ -331,10 +272,9 @@ object Multimodal {
       media.select(col("media_id"), length(col("content")).as("__blen")),
       "media_id", "__blen", maxHamming, maxBucket)
 
-  /** REAL decode: batched partition-wise parse of the container headers —
-    * the formerly-stubbed step of [[extractFeatures]], now an actual
-    * byte-level WAV/BMP parse. Same plan shape (mapPartitions, binary
-    * column dropped from the output). */
+  /** Decode: batched partition-wise byte-level parse of the WAV/BMP
+    * container headers (mapPartitions; the binary column is dropped from
+    * the output). */
   def decodeContainers(spark: SparkSession, media: DataFrame): Dataset[MediaDecoded] = {
     import spark.implicits._
     media.select("media_id", "kind", "content").as[MediaRow]

@@ -522,60 +522,6 @@ object Similarity {
   }
 
   /**
-   * Write the RAW-vector IVF layout: (id, embedding) rows
-   * directory-partitioned by coarse cell — the exact-rerank sibling of
-   * [[writeEmbeddingsIvfPq]] (which stores only PQ codes). The artifact
-   * a recurring batch-ANN workload probes: each [[ivfTopKJoinStored]]
-   * call reads ONLY the cell directories the query batch probes
-   * (partition pruning — no file of any other cell is opened), so the
-   * per-batch cost scales with the probed fraction, not the corpus.
-   */
-  def writeEmbeddingsIvf(df: DataFrame, path: String,
-                         centroids: Array[Array[Float]],
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit =
-    ivfAssign(df, centroids, vecCol)
-      .select(col(idCol), col("ivf_cell"), col(vecCol))
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-
-  /**
-   * [[ivfTopKJoin]] against a persisted [[writeEmbeddingsIvf]] layout.
-   * The probed-cell set is bounded by the codebook size (≤ nCells
-   * values), so it always collects driver-side and pushes down as a
-   * static partition filter — results are identical to the in-memory
-   * join over the same corpus (differential-tested); only the I/O
-   * changes, from a full corpus scan to the probed directories.
-   */
-  def ivfTopKJoinStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                        queries: DataFrame, centroids: Array[Array[Float]],
-                        k: Int, nProbe: Int = 2,
-                        qIdCol: String = "query_id", idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.{TopNByOrd, VecProbeCells}
-    require(k >= 1, "k must be positive")
-    require(nProbe >= 1, "nProbe must be positive")
-    val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__cell",
-        explode(c(VecProbeCells(e(col("__qv")), centroids, nProbe))))
-    // ≤ nCells rows by construction — the cell domain is the codebook
-    val cells = q.select(col("__cell")).distinct().collect().map(_.getInt(0))
-    val corp = spark.read.parquet(path)
-      .filter(col("ivf_cell").isin(cells.map(Integer.valueOf): _*))
-      .select(col(idCol).as("__cid"), col(vecCol).as("__cv"),
-        col("ivf_cell").as("__cell"))
-    val scored = corp.join(broadcast(q), Seq("__cell"))
-      .withColumn("__score", SqlFunctions.vecCosine(col("__cv"), col("__qv")))
-    val agg = c(TopNByOrd(
-      SqlFunctions.doubleSortableBits.expr(e(-col("__score"))), e(col("__cid")), k)
-      .toAggregateExpression())
-    scored.groupBy(col("query_id"))
-      .agg(agg.as("__topn"))
-      .select(col("query_id"), explode(col("__topn")).as("__p"))
-      .select(col("query_id"), col("__p.id").as(idCol),
-        (-SqlFunctions.sortableBitsToDouble(col("__p.ord"))).as("score"))
-  }
-
-  /**
    * SemDeDup-style semantic near-duplicate pairs (Abbas et al.,
    * arXiv:2303.09540): cluster embeddings by nearest centroid, then
    * compare ONLY within a cluster — the blocking step that turns a

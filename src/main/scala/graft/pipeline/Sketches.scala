@@ -154,8 +154,9 @@ object Sketches {
    * — total order, deterministic cross-engine.
    *
    * Mergeable: [[quantileSample]] exposes the (group, hv, v) bottom-k
-   * rows; union shard tables and re-sketch — min-k by hash commutes, so
-   * merge-then-quantile equals quantile-over-union exactly (spec-pinned).
+   * rows; union shard tables and keep the k smallest (hv, v) per group —
+   * min-k by hash commutes, so merge-then-quantile equals
+   * quantile-over-union exactly (spec-pinned).
    *
    * Scale shape: rows hash AT THE SCAN; the bounded [[TopNByOrd]] heaps
    * combine map-side to ≤ k rows per task × group, so the shuffle carries
@@ -183,10 +184,10 @@ object Sketches {
   /**
    * The mergeable state behind [[quantileSketch]]: per group, the k rows
    * with the smallest `hv = md5₃₂(rowId)` (0→1, as everywhere), as
-   * (groupCol, `hv`, `v`) rows. Persist per shard; union any set of shard
-   * tables and feed back through this function (idempotent — min-k of a
-   * union of min-k's is the global min-k) or into [[quantileSketch]]'s
-   * aggregation via the same path.
+   * (groupCol, `hv`, `v`) rows. Persist per shard; the k smallest
+   * (hv, v) rows per group of any union of shard tables are exactly the
+   * sample of the concatenated data (min-k of a union of min-k's is the
+   * global min-k).
    */
   def quantileSample(df: DataFrame, groupCol: String, idCol: String,
                      valueCol: String, k: Int): DataFrame = {
@@ -198,14 +199,6 @@ object Sketches {
       .select(col(groupCol), h.as("__h"),
         col(valueCol).cast("long").as("__v")), groupCol, k)
   }
-
-  /** Merge [[quantileSample]] shard tables: min-k of a union of min-k's
-    * is the global min-k, so this returns exactly the sample the whole
-    * concatenated corpus would have produced. `k` must match the shards'. */
-  def quantileSampleMerge(shards: DataFrame, groupCol: String,
-                          k: Int): DataFrame =
-    bottomK(shards.select(col(groupCol), col("hv").as("__h"),
-      col("v").as("__v")), groupCol, k)
 
   private def bottomK(rows: DataFrame, groupCol: String, k: Int): DataFrame = {
     require(k >= 2 && k <= (1 << 20), s"k must be in [2, 2^20], got $k")
@@ -337,7 +330,7 @@ object Sketches {
    * often does THIS value occur" for any value, from bounded state).
    *
    * State: (groupCol, `r`, `c`, `cnt`) — at most d·w rows per group, and
-   * MERGEABLE by summing `cnt` cell-wise ([[cmsMerge]]): shard tables
+   * MERGEABLE by summing `cnt` per (group, r, c) cell: shard tables
    * concatenate, so 100 TB frequency tracking is a per-shard sketch + a
    * bounded merge, never a global value shuffle. The d·w cell updates
    * combine map-side (one partial row per task × group × cell).
@@ -366,13 +359,6 @@ object Sketches {
         (conv(substring(md5(concat(lit(s"$r:"), value.cast("string"))), 1, 8),
           16, 10).cast("long") % w).as("c"))
     }
-
-  /** Merge [[cmsSketch]] shard tables (same d/w): counters add cell-wise,
-    * so the merged sketch equals the sketch of the concatenated raw data
-    * exactly. */
-  def cmsMerge(shards: DataFrame, groupCol: String): DataFrame =
-    shards.groupBy(col(groupCol), col("r"), col("c"))
-      .agg(sum(col("cnt")).as("cnt"))
 
   /**
    * Point-frequency lookups against a [[cmsSketch]]: for every group in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Skew-resilient aggregation: two-stage salted aggregates for hot keys.
+ * Skew-resilient aggregation: the two-stage salted aggregate for hot keys.
  *
  * Scope note (what salting does and does NOT buy): for ALGEBRAIC aggregates
  * (count/sum/avg/min/max) Spark's map-side partial aggregation already
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
  * plain groupBy. Salting earns its keep for HOLISTIC aggregates whose
  * partial state grows with group size — collect_set/collect_list, exact
  * distinct sets — where one dominant key (a boilerplate domain, the "und"
- * language bucket) concentrates gigabytes of state on one reducer:
- * saltedCollectSet splits that state `salt` ways. (AQE skew-join handles
+ * language bucket) concentrates gigabytes of state on one reducer; the
+ * same two stages split that state `salt` ways. (AQE skew-join handles
  * the join case; this covers aggregation.)
  */
 object Skew {
@@ -30,16 +30,4 @@ object Skew {
       .agg(count(lit(1)).as("__partial"))
       .groupBy(col(keyCol))
       .agg(sum(col("__partial")).as("n"))
-
-  /** Salted distinct-collection — the aggregate where salting genuinely
-    * matters: per-(key, salt) partial sets stay bounded, the final merge
-    * only unions `salt` already-deduplicated arrays per key. */
-  def saltedCollectSet(df: DataFrame, keyCol: String, valueCol: String,
-                       saltFrom: String, salt: Int = 16): DataFrame =
-    df.withColumn("__salt", saltOf(col(saltFrom), salt))
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(collect_set(col(valueCol)).as("__partial"))
-      .groupBy(col(keyCol))
-      .agg(array_sort(array_distinct(flatten(collect_list(col("__partial")))))
-        .as("values"))
 }

@@ -334,19 +334,6 @@ object TextAnalysis {
       spark.sparkContext.broadcast(weights), bias)
   }
 
-  /** [[classifierState]] from a lake-resident (bucket, weight) table —
-    * absent buckets weigh 0. Driver-collects (bucket-bounded by
-    * construction: the table is a model artifact, not data). */
-  def classifierStateFromDf(df: DataFrame, numBuckets: Int, bias: Long,
-                            bucketCol: String = "bucket",
-                            weightCol: String = "weight")
-      : org.apache.spark.sql.graft.HashedLinearState = {
-    val w = new Array[Long](numBuckets)
-    df.select(col(bucketCol).cast("long"), col(weightCol).cast("long"))
-      .collect().foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
-    classifierState(df.sparkSession, w, bias)
-  }
-
   /** Integer linear-classifier score of a token array under a broadcast
     * hashed weight table (unigrams + adjacent bigrams; see
     * [[org.apache.spark.sql.graft.HashedLinearState]]) — scan-local,

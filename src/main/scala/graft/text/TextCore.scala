@@ -298,8 +298,6 @@ object TextCore {
     inter.toDouble / (la + lb - inter)
   }
 
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /**
    * Winnowing document fingerprint (Schleimer, Wilkerson, Aiken — SIGMOD'03
    * "Winnowing: Local Algorithms for Document Fingerprinting"): min shingle

@@ -1,6 +1,6 @@
 package graft
 
-import graft.gates.Gate
+import graft.gates.{Fixtures, Gate}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,5 +50,29 @@ class GateRegistrySpec extends AnyFunSuite {
     // control characters and quotes survive the hand-written escaper
     val tricky = Map("q\"x" -> "SELECT '\t' || chr(1) -- \u0001\r\n\\")
     assert(decode(Verify.oracleJson(tricky)) == tricky)
+  }
+
+  test("gate scratch paths are fresh per call, and Session.release deletes them") {
+    val spark = SparkTestBase.spark
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries = Option(tmp.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith("graft_")).toSet
+    val before = graftEntries
+    // the same gate asks twice, as two runs over one sf directory would
+    val a = Fixtures.scratch("ivfpq")
+    val b = Fixtures.scratch("ivfpq")
+    assert(a != b)
+    val root = java.nio.file.Paths.get(a).getParent
+    assert(root.getParent.toFile == tmp && root.getFileName.toString.startsWith("graft_scratch_"))
+    // a gate writes its index there and reads it back
+    spark.range(10).write.parquet(a)
+    assert(spark.read.parquet(a).count() == 10L)
+    Session.release(spark)
+    assert(!root.toFile.exists())
+    assert(graftEntries.diff(before).isEmpty)
+    // the next path lies under a new root
+    assert(!java.nio.file.Paths.get(Fixtures.scratch("ivfpq")).startsWith(root))
+    Session.release(spark)
+    assert(!graftEntries.exists(_.startsWith("graft_scratch_")))
   }
 }

@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * settings drift apart again. Every `SPARK_GRAFT_*` knob is one more
   * configuration to cover, so adding one is a deliberate edit here. A
   * stateless SQL function is one row of `SqlFunctions`, not a hand-written
-  * expression class. */
+  * expression class. A public def of the library packages has a caller in
+  * src/main, or is a listed reference or piece of the reference toolkit's
+  * API. */
 class SessionLintSpec extends AnyFunSuite {
 
   /** (path relative to src/main/scala, contents) of every Scala source. */
@@ -88,6 +90,97 @@ class SessionLintSpec extends AnyFunSuite {
         name
     }.filterNot(_ == "STCoversWkt")
     assert(stateless.isEmpty)
+  }
+
+  /** `s` with its comments blanked, line breaks kept: a name in a string
+    * literal still counts as a use, one in a comment does not. */
+  private def stripComments(s: String): String = {
+    val out = new StringBuilder(s.length)
+    var i = 0
+    var depth = 0 // nested block-comment depth
+    var quote = "" // the open string literal's delimiter
+    while (i < s.length) {
+      val c = s(i)
+      def at(t: String) = s.startsWith(t, i)
+      if (depth > 0) {
+        if (at("*/")) { depth -= 1; i += 2 }
+        else if (at("/*")) { depth += 1; i += 2 }
+        else { if (c == '\n') out += '\n'; i += 1 }
+      } else if (quote.nonEmpty) {
+        if (quote == "\"" && c == '\\') { out ++= s.slice(i, i + 2); i += 2 }
+        else if (at(quote)) { out ++= quote; i += quote.length; quote = "" }
+        else { out += c; i += 1 }
+      } else if (at("//")) {
+        while (i < s.length && s(i) != '\n') i += 1
+      } else if (at("/*")) { depth = 1; i += 2 }
+      else if (at("\"\"\"")) { quote = "\"\"\""; out ++= quote; i += 3 }
+      else if (c == '"') { quote = "\""; out += c; i += 1 }
+      else if (at("'\"'")) { out ++= "'\"'"; i += 3 }
+      else { out += c; i += 1 }
+    }
+    out.result()
+  }
+
+  /** [[sources]] with comments stripped. */
+  private lazy val code: Seq[(String, String)] =
+    sources.map { case (p, s) => p -> stripComments(s) }
+
+  /** Public defs that no other src/main code calls, each with the reason
+    * it stays: tests compare a served def against it, or it is the
+    * reference toolkit's own API. */
+  private val unservedAllowed = Map(
+    "SpatialJoin.knnJoin" -> "window reference for the served knnJoinAgg heap",
+    "EventAnalytics.twapPlain" -> "unsalted reference for the served twapSalted",
+    "Dedup.clusterKeepList" -> "uncollapsed reference for hash64KeepList and textKeepList",
+    "Dedup.ngramJaccardPairs" -> "flat reference for the served ngramJaccardPairsFused",
+    "TextAnalysis.importanceState" -> "two-scan reference for the served importanceStateFused",
+    "Graph.modularityPermille" -> "its negative-Q fixture checks modularityFrom's truncation",
+    "Gis.writeGeoJson" -> "the reference's GeoJSON figures output (SURVEY S8)",
+    "GeohashPruning.hullOfCells" -> "the reference's hull of cell corners (WithinQuery.java:70-77)",
+    "Polygon.coversPolygon" -> "the reference's polygon-in-hull test (WithinQuery.java:89, :94)",
+    "Geom.parseWktPolygon" -> "the reference's WKT polygon query argument",
+    "Geom.toWkt" -> "the reference's WKT filter round trip (WithinFilter, Filter.proto:12-17)")
+
+  /** Owner.name of every public def in graft.api, .pipeline, .geo and
+    * .text whose name appears nowhere else in src/main: not in another
+    * file, and not in its own file outside its declaration and body. A
+    * def counts as public when it has no access modifier and its
+    * enclosing declaration (the nearest earlier line indented less) is a
+    * non-private object, class or trait; nested defs are local. */
+  private lazy val unserved: Seq[String] = {
+    val decl = """^( *)((?:(?:final|implicit|override|private|protected)(?:\[\w+\])? +)*)def +(\w+)""".r
+    val owner = """\b(?:object|class|trait) +(\w+)""".r
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    code.filter { case (p, _) =>
+      Seq("api", "pipeline", "geo", "text").exists(d => p.startsWith(s"graft/$d/"))
+    }.flatMap { case (p, s) =>
+      val lines = s.split("\n", -1).toIndexedSeq
+      lines.indices.flatMap { i =>
+        for {
+          m <- decl.findFirstMatchIn(lines(i)).toSeq
+          if !Seq("private", "protected", "override").exists(m.group(2).contains)
+          n = m.group(1).length
+          enclosing <- (i - 1 to 0 by -1).map(lines).find(l => l.trim.nonEmpty && indent(l) < n)
+          if !enclosing.contains("private")
+          o <- owner.findFirstMatchIn(enclosing)
+          name = m.group(3)
+          word = s"\\b$name\\b".r
+          end = (i + 1 until lines.length)
+            .find(j => lines(j).trim.nonEmpty && indent(lines(j)) <= n).getOrElse(lines.length)
+          own = (lines.take(i) ++ lines.drop(end))
+            .map(s"\\bdef +$name\\b".r.replaceAllIn(_, ""))
+          if !own.exists(word.findFirstIn(_).isDefined)
+          if !code.exists { case (q, t) => q != p && word.findFirstIn(t).isDefined }
+        } yield s"${o.group(1)}.$name"
+      }
+    }.distinct
+  }
+
+  test("every public def of api, pipeline, geo and text is called from src/main or allow-listed") {
+    assert(unserved.nonEmpty, "the scan found no def at all")
+    assert(unserved.filterNot(unservedAllowed.contains).isEmpty)
+    // an entry that gains a caller or goes away leaves the list
+    assert(unservedAllowed.keySet.diff(unserved.toSet).isEmpty)
   }
 
   test("CodegenFallback is used only by generators and stateful expressions") {

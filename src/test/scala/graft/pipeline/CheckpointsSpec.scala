@@ -37,20 +37,6 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
-  test("pagerankIntConverged honors checkpointDir") {
-    val rnd = new scala.util.Random(13)
-    val edges = (0 until 90).map(_ =>
-      (rnd.nextInt(12).toLong, rnd.nextInt(12).toLong)).toDF("src", "dst")
-    val (a, itA, _) = Graph.pagerankIntConverged(edges, tolL1 = 50000L)
-    withCheckpointDir { dir =>
-      val (b, itB, _) = Graph.pagerankIntConverged(edges, tolL1 = 50000L,
-        checkpointDir = Some(dir))
-      assert(itA == itB)
-      assert(a.collect().map(_.toSeq).toSet == b.collect().map(_.toSeq).toSet)
-      assert(dirHasFiles(dir))
-    }
-  }
-
   test("clusters (distributed path): reliable checkpoint == local, blocks on disk") {
     // driverMaxEdges = 0 forces the iterative distributed loop, whose
     // per-round checkpoints are the blocks at risk on executor loss

@@ -764,50 +764,6 @@ class EventAnalyticsSpec extends AnyFunSuite {
     assert(lpaQ == 500L, s"two disjoint triangles under their own labels: Q = 1/2, got $lpaQ")
   }
 
-  test("labelPropagationConverged: fixed point matches brute; oscillators throw at cap") {
-    val twoTri = Seq((0L, 1L), (1L, 2L), (0L, 2L), (10L, 11L), (11L, 12L), (10L, 12L))
-    val (df, rounds) = Graph.labelPropagationConverged(twoTri.toDF("src", "dst"))
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == bruteLpa(twoTri, rounds))
-    // the converged state is a fixed point: one more brute round = same labels
-    assert(bruteLpa(twoTri, rounds + 1) == got)
-    // a path graph converges too (self-vote damps the end-swap oscillation)
-    val path = (0L until 8L).map(i => (i, i + 1))
-    val (pdf, prounds) = Graph.labelPropagationConverged(path.toDF("src", "dst"))
-    assert(pdf.count() == 9 && prounds >= 1)
-    // cap smaller than the rounds needed throws rather than returning
-    // unconverged labels
-    intercept[IllegalStateException] {
-      Graph.labelPropagationConverged(path.toDF("src", "dst"), maxIters = 1)
-    }
-  }
-
-  test("pagerankIntConverged stops within tolerance; ranks stable under +1 iteration") {
-    val rnd = new scala.util.Random(7)
-    val edges = (0 until 150).map(_ =>
-      (rnd.nextInt(18).toLong, rnd.nextInt(18).toLong))
-    val df = edges.toDF("src", "dst")
-    val n = (edges.map(_._1) ++ edges.map(_._2)).distinct.size.toLong
-    val tol = 40000L
-    val (ranksDf, iters, delta) = Graph.pagerankIntConverged(df, tolL1 = tol)
-    assert(delta <= tol && iters >= 1)
-    val ranks = ranksDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // consistency: the converged result IS the fixed-iteration result at t
-    assert(ranks == brutePagerank(edges, iters, 850, 1000000L))
-    // stability: one more round moves the ranks by at most ~d·tol/1000
-    // plus the n-bounded integer-truncation floor
-    val next = brutePagerank(edges, iters + 1, 850, 1000000L)
-    val deltaNext = ranks.map { case (k, v) => math.abs(next(k) - v) }.sum
-    assert(deltaNext <= tol * 850 / 1000 + 2 * n,
-      s"post-convergence delta $deltaNext vs tol $tol (n=$n)")
-    // unreachable tolerance within 1 round throws rather than returning
-    // unconverged ranks
-    intercept[IllegalStateException](
-      Graph.pagerankIntConverged(df, tolL1 = 1L, maxIters = 1))
-    intercept[IllegalArgumentException](
-      Graph.pagerankIntConverged(df, tolL1 = 0L))
-  }
-
   // ---- HITS ----
 
   private def bruteHits(edges: Seq[(Long, Long)], iters: Int,
@@ -1051,31 +1007,11 @@ class EventAnalyticsSpec extends AnyFunSuite {
     val gotSym = Graph.bfsDistances(sym, seedsDf(Set(2L)), rounds = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotSym == Map(0L -> 2L, 1L -> 1L, 2L -> 0L, 3L -> 1L, 4L -> 2L))
-  }
-
-  test("bfsDistancesConverged == fixed rounds past depth; caps; edge cases") {
-    val path = (0L until 6L).map(i => (i, i + 1))
-    val sym = path ++ path.map(_.swap)
-    val df = sym.toDF("src", "dst")
-    // seed 99 is outside the graph's node set — ignored
-    val (dist, rounds) = Graph.bfsDistancesConverged(df, seedsDf(Set(0L, 99L)))
-    val m = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m == (0L to 6L).map(i => i -> i).toMap)
-    assert(rounds === 7) // 6 improving rounds + the confirming no-op
-    // fixed rounds far past the depth (crosses the cadence-4 checkpoint
-    // boundary) return the identical fixpoint
-    val fixed = Graph.bfsDistances(df, seedsDf(Set(0L)), rounds = 9)
+    // rounds past the depth (crossing the cadence-4 checkpoint boundary)
+    // are idempotent and partition-invariant
+    val far = Graph.bfsDistances(sym.repartition(7), seedsDf(Set(2L)), rounds = 9)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fixed == m)
-    // partition invariance
-    val rep = Graph.bfsDistances(df.repartition(7), seedsDf(Set(0L)), rounds = 9)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rep == m)
-    intercept[IllegalStateException](
-      Graph.bfsDistancesConverged(df, seedsDf(Set(0L)), maxRounds = 3))
-    // no seeds inside the graph → empty result, converges on the first no-op
-    val (e0, r0) = Graph.bfsDistancesConverged(df, seedsDf(Set(999L)))
-    assert(e0.count() === 0L && r0 === 1)
+    assert(far == gotSym)
     // null endpoints carry no edge; null seeds drop
     val withNull = Seq((Some(0L), Some(1L)), (None, Some(5L)), (Some(4L), None))
       .toDF("src", "dst")
@@ -1083,7 +1019,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
       rounds = 3).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gn == Map(0L -> 0L, 1L -> 1L))
     intercept[IllegalArgumentException](
-      Graph.bfsDistances(df, seedsDf(Set(0L)), rounds = 0))
+      Graph.bfsDistances(path, seedsDf(Set(2L)), rounds = 0))
   }
 
   // -------------------------------------------- temporal reachability
@@ -1148,17 +1084,18 @@ class EventAnalyticsSpec extends AnyFunSuite {
       .count() === 3L)
     assert(Graph.temporalReachability(same, seedsDf(Set(0L)), rounds = 4,
       strict = true).count() === 2L)
-    // converged == fixed rounds past depth; idempotence across checkpoints
+    // converged: 19 rounds reach the fixpoint of a 20-node graph (an
+    // earliest-arrival path need not revisit a node), and rounds past it
+    // (across the cadence-4 checkpoints) are idempotent
     val rnd = new scala.util.Random(5)
     val edges = (0 until 120).map(_ =>
       (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong, rnd.nextInt(40).toLong))
     val df = edges.toDF("src", "dst", "t")
-    val (arr, rounds) = Graph.temporalReachabilityConverged(df, seedsDf(Set(0L)))
-    val m = arr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fixed = Graph.temporalReachability(df, seedsDf(Set(0L)),
-      rounds = rounds + 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fixed == m)
+    def reach(rounds: Int) = Graph.temporalReachability(df, seedsDf(Set(0L)),
+      rounds = rounds).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m = reach(19)
+    assert(m == bruteTemporal(edges, Set(0L), 40, strict = false))
+    assert(reach(22) == m)
     // startTime filters early contacts for seeds; null times drop
     val late = Graph.temporalReachability(open, seedsDf(Set(0L)), rounds = 4,
       startTime = 4L).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1277,6 +1214,9 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("ssspWeighted == brute min-plus replica on random weighted graphs") {
+    intercept[IllegalArgumentException](
+      Graph.ssspWeighted(Seq((0L, 1L, 1L)).toDF("src", "dst", "w"),
+        seedsDf(Set(0L)), rounds = 0))
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed * 77)
       // parallel edges with different weights exercise the min-fold
@@ -1327,36 +1267,6 @@ class EventAnalyticsSpec extends AnyFunSuite {
     val got = Graph.ssspWeighted(e, seedsDf(Set(0L)), rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 2L -> 3L))
-  }
-
-  test("ssspWeightedConverged == fixed rounds; idempotence; cap; invariance") {
-    val rnd = new scala.util.Random(99)
-    val edges = (0 until 120).map(_ =>
-      (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong,
-        (rnd.nextInt(5) + 1).toLong))
-    val df = edges.toDF("src", "dst", "w")
-    val (dist, rounds) = Graph.ssspWeightedConverged(df, seedsDf(Set(0L)))
-    val m = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m == bruteSssp(edges, Set(0L), 30))
-    // fixed rounds past the depth (crossing the cadence-4 checkpoint
-    // boundary) return the identical fixpoint — idempotence
-    val fixed = Graph.ssspWeighted(df, seedsDf(Set(0L)), rounds = rounds + 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fixed == m)
-    val rep = Graph.ssspWeighted(df.repartition(7), seedsDf(Set(0L)),
-      rounds = rounds + 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rep == m)
-    // a long chain with improving detours forces many relaxation rounds;
-    // a tight cap throws
-    val chain = (0L until 12L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "w")
-    intercept[IllegalStateException](
-      Graph.ssspWeightedConverged(chain, seedsDf(Set(0L)), maxRounds = 3))
-    // no seeds inside the graph → empty, converges on the first no-op
-    val (e0, r0) = Graph.ssspWeightedConverged(df, seedsDf(Set(999L)))
-    assert(e0.count() === 0L && r0 === 1)
-    intercept[IllegalArgumentException](
-      Graph.ssspWeighted(df, seedsDf(Set(0L)), rounds = 0))
   }
 
   // -------------------------------------------------- common neighbors
@@ -1888,17 +1798,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
       "communityStatsLpa" -> (b => fixed(Graph.communityStatsLpa(b, e, 2, None))),
       "modularityPermilleLpa" -> (b => fixed(Graph.modularityPermilleLpa(b, e, 2, None))),
       "componentLabelsConverged" -> (b => conv(
-        Graph.componentLabelsConverged(b, e, 50, false, None))),
-      "bfsDistancesConverged" -> (b => conv(
-        Graph.bfsDistancesConverged(b, e, seeds, 50, false, None))),
-      "ssspWeightedConverged" -> (b => conv(
-        Graph.ssspWeightedConverged(b, e, seeds, "w", 50, false, None))),
-      "temporalReachabilityConverged" -> (b => conv(
-        Graph.temporalReachabilityConverged(b, e, seeds, "t", 2L, false, 50, false, None))),
-      "temporalReachabilityConverged strict" -> (b => conv(
-        Graph.temporalReachabilityConverged(b, e, seeds, "t", 2L, true, 50, false, None))),
-      "labelPropagationConverged" -> (b => conv(
-        Graph.labelPropagationConverged(b, e, 50, None))))
+        Graph.componentLabelsConverged(b, e, 50, false, None))))
   }
 
   /** An entry point's outcome: its column names and types, sorted rows
@@ -1959,8 +1859,8 @@ class EventAnalyticsSpec extends AnyFunSuite {
     val seeds = Seq(Some(1L), Some(6L), Some(42L), None).toDF("node")
     assertPathsAgree(gEdges(fixture), seeds, "fixture")
     val none = assertPathsAgree(gEdges(Seq.empty), seeds, "empty")
-    // the empty graph: every result empty, converged twins stop after the
-    // confirming round, modularity is (0, 0)
+    // the empty graph: every result empty, the converged twin stops after
+    // the confirming round, modularity is (0, 0)
     assert(none.forall(_.isRight))
     val m = graphEntryPoints(gEdges(Seq.empty), seeds).toMap
     assert(m("modularityPermilleLpa")(DriverPath.DriverMaxEdges)._1.collect()
@@ -1986,21 +1886,14 @@ class EventAnalyticsSpec extends AnyFunSuite {
     val overflow = "org.apache.spark.SparkArithmeticException"
     for ((name, run) <- Seq[(String, Long => Any)](
       "sssp offer" -> (b => Graph.ssspWeighted(b, big, one, 2, "w", false, None)),
-      "sssp converged offer" -> (b => Graph.ssspWeightedConverged(b, big, one, "w", 5, false, None)),
       "components Σ label" -> (b => Graph.componentLabelsConverged(b,
         Seq((Long.MaxValue, Long.MaxValue - 1)).toDF("src", "dst"), 5, false, None)),
-      "temporal Σ arrival" -> (b => Graph.temporalReachabilityConverged(b,
-        Seq((1L, 2L, 1L)).toDF("src", "dst", "t"), Seq(1L, 2L).toDF("node"), "t",
-        Long.MaxValue / 2 + 1, false, 5, false, None)),
       "lpa negated label" -> (b => Graph.labelPropagation(b,
         Seq((Long.MinValue, 2L)).toDF("src", "dst"), 1, None))))
       assert(bothThrow(name, run) == overflow, name)
     val chain = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
     for ((name, run) <- Seq[(String, Long => Any)](
-      "components cap" -> (b => Graph.componentLabelsConverged(b, chain, 2, false, None)),
-      "bfs cap" -> (b => Graph.bfsDistancesConverged(b, chain, Seq(0L).toDF("node"), 2, false, None)),
-      "lpa cap" -> (b => Graph.labelPropagationConverged(b,
-        Seq((1L, 2L)).toDF("src", "dst"), 1, None))))
+      "components cap" -> (b => Graph.componentLabelsConverged(b, chain, 2, false, None))))
       assert(bothThrow(name, run) == "java.lang.IllegalStateException", name)
   }
 

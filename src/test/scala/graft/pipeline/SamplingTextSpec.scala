@@ -344,7 +344,7 @@ class SamplingTextSpec extends AnyFunSuite with TempDirs {
     assert(plan.contains("*(1) Project"), plan) // codegen'd projection
   }
 
-  test("classifierScore: independent md5 replay, DF import path, totality") {
+  test("classifierScore: independent md5 replay, totality") {
     // independent replay: rebuild every feature's bucket/weight with raw
     // MessageDigest arithmetic (shares no code with HashedLinearState)
     val b = 64
@@ -375,15 +375,6 @@ class SamplingTextSpec extends AnyFunSuite with TempDirs {
     assert(got(2L) == Some(expected("single", 2L)))
     assert(got(3L) == Some(expected("", 2L)), "empty text scores, not nulls")
     assert(got(4L) == None, "NULL in, NULL out")
-    // lake-resident import path: sparse (bucket, weight) rows, absent = 0
-    val sparse = weights.zipWithIndex.collect { case (w, i) if w != 0 => (i.toLong, w) }
-      .toSeq.toDF("bucket", "weight")
-    val st2 = TextAnalysis.classifierStateFromDf(sparse, b, bias = 2L)
-    val again = fixture.filter(col("text").isNotNull)
-      .select(TextAnalysis.classifierScore(split(trim(col("text")), "\\s+"), st2))
-      .collect().map(_.getLong(0)).toSeq
-    assert(again == Seq(expected("the quick brown fox", 2L),
-      expected("single", 2L), expected("", 2L)))
   }
 
   test("spanCorrupt: independent mask replay, sentinel ordinals, totality") {

