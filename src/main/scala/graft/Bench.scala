@@ -135,7 +135,9 @@ object Bench {
       }),
       // the scan-avoidance lever: one within() polygon over gh_prefix
       // directory-partitioned vs naive parquet of the same points; the gap
-      // in files and bytes is what partition pruning buys
+      // in files and bytes is what partition pruning buys on the
+      // distributed path, and the driver search's record what row-group
+      // statistics buy on the partitioned layout
       Entry("ev_storage", () => {
         val rows = 2000000L
         val pts = graft.api.Gis.bulkIngest(spark, rows, -76.0, -75.0, 44.0, 45.0)
@@ -145,23 +147,33 @@ object Bench {
         graft.api.Gis.writePointsPartitioned(pts, under("store_part"), prefixLen = 4)
         pts.write.mode("overwrite").parquet(under("store_flat"))
         val poly = "POLYGON ((-75.52 44.42, -75.44 44.42, -75.44 44.36, -75.52 44.36, -75.52 44.42))"
-        // count through an aggregate whose QueryExecution we keep, so the
-        // pruned scan's planning-time listing gives the files/bytes touched
-        def within(path: String): (Long, Long, Long) = {
-          val agg = graft.api.Gis.within(spark.read.parquet(path), poly).groupBy().count()
+        // the distributed plan (a zero row budget forces it): count through
+        // an aggregate whose QueryExecution we keep, so the pruned scan's
+        // planning-time listing gives the files/bytes touched
+        def distributed(path: String): (Long, Long, Long) = {
+          val agg = graft.api.Gis.withinSearch(spark.read.parquet(path), poly, rowBudget = 0)
+            ._1.groupBy().count()
           val matched = agg.head().getLong(0)
           val (files, bytes) = agg.queryExecution.sparkPlan.collectLeaves().collectFirst {
             case f: org.apache.spark.sql.execution.FileSourceScanExec =>
               val sel = f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
               (sel.map(_.files.size).sum.toLong, sel.flatMap(_.files).map(_.getLen).sum)
-          }.getOrElse((-1L, -1L))
+          }.getOrElse(throw new IllegalStateException(
+            s"ev_storage: the distributed within over $path planned no file scan"))
           (matched, files, bytes)
         }
-        val (mPart, fPart, bPart) = within(under("store_part"))
-        val (mFlat, fFlat, bFlat) = within(under("store_flat"))
-        require(mPart == mFlat, s"layout changed results: $mPart vs $mFlat")
+        val (mPart, fPart, bPart) = distributed(under("store_part"))
+        val (mFlat, fFlat, bFlat) = distributed(under("store_flat"))
+        val (local, rec) = graft.api.Gis.withinSearch(spark.read.parquet(under("store_part")), poly)
+        require(rec.proved, s"ev_storage: the driver within fell back to the distributed plan: $rec")
+        val mDriver = local.count()
+        require(mPart == mFlat && mDriver == mPart,
+          s"layout or path changed results: partitioned $mPart, flat $mFlat, driver $mDriver")
         ("rows" -> rows) ~ ("files_part" -> fPart) ~ ("files_flat" -> fFlat) ~
-          ("bytes_part" -> bPart) ~ ("bytes_flat" -> bFlat) ~ ("matched" -> mPart)
+          ("bytes_part" -> bPart) ~ ("bytes_flat" -> bFlat) ~ ("matched" -> mPart) ~
+          ("driver_row_groups" -> rec.rowGroups) ~
+          ("driver_row_groups_read" -> rec.rowGroupsRead) ~
+          ("driver_rows_read" -> rec.rowsRead)
       }),
       // the embedding analog of ev_storage: the same top-k through the
       // lsh_bucket-partitioned layout vs a flat scan, with the files a

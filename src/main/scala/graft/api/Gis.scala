@@ -17,10 +17,11 @@ import org.apache.spark.sql.functions._
  * scan (prefix pruning = partition pruning on geohash-sorted parquet),
  * top-k plans as TakeOrderedAndProject (per-partition partial heap + driver
  * merge — exactly the reference's region-endpoint/client split), grouped
- * top-N is a shuffle-on-key window. Two things run on the driver: final
- * `limit k` results, and [[knn]] over a stored parquet table, which reads
- * the few row groups it needs there, up to a fixed row budget, the way the
- * reference's KNN client scans from the client.
+ * top-N is a shuffle-on-key window. Three things run on the driver: final
+ * `limit k` results, and [[knn]] and [[within]] over a stored parquet
+ * table, which read the few row groups they need there, up to a fixed row
+ * budget, the way the reference's KNN client and "local" WithinQuery scan
+ * from the client.
  */
 object Gis {
 
@@ -203,44 +204,67 @@ object Gis {
 
   /**
    * Polygon containment query (reference WithinQuery.java:104-174, both
-   * "local" and "remote" modes — in Spark the filter-and-refine split
-   * collapses into one scan-stage filter):
-   * candidate pruning by minimum-bounding geohash prefixes (WithinQuery.java:
-   * 79-102), then exact boundary-inclusive `covers` refinement.
-   * Falls back to a full scan when no prefix set covers the polygon (the
-   * reference throws instead — WithinQuery.java:100-101).
+   * "local" and "remote" modes): candidate pruning by the geometry's bbox
+   * and its minimum-bounding geohash prefixes (WithinQuery.java:79-102),
+   * then exact boundary-inclusive `covers` refinement. Falls back to no
+   * prefix pruning when no prefix set covers the geometry (the reference
+   * throws instead — WithinQuery.java:100-101).
+   *
+   * When `points` is a bare scan of a stored parquet table (such as a
+   * [[writePointsPartitioned]] layout read with `spark.read.parquet`) with
+   * double `lonCol`/`latCol`, the query runs on the driver, as the
+   * reference's "local" mode runs in its client: only the row groups whose
+   * footer statistics (the `lon`/`lat` box and the `geohashCol` min/max)
+   * can hold a match are read, each row is kept when the distributed plan's
+   * own filter condition holds for it, and the rows come back as a local
+   * frame. They are read when `within` is called, and no Spark job runs.
+   * Any other frame, or a selection of more than a fixed row budget, plans
+   * as one scan-stage filter: the bbox ranges and prefix predicates push
+   * to the parquet scan, and a `gh_prefix` column prunes directories.
+   * `prune = false` is the unpruned scan with the `covers` filter alone.
    */
   def within(points: DataFrame, wktPolygon: String,
              lonCol: String = "lon", latCol: String = "lat",
-             geohashCol: String = "geohash", prune: Boolean = true): DataFrame = {
+             geohashCol: String = "geohash", prune: Boolean = true): DataFrame =
+    withinSearch(points, wktPolygon, lonCol, latCol, geohashCol, prune)._1
+
+  /** [[within]] with what its search did: the driver read of [[RowGroups]]
+    * when the row groups it selects hold at most `rowBudget` rows, else the
+    * distributed filter (and, for `prune = false`, no search at all). */
+  private[graft] def withinSearch(points: DataFrame, wktPolygon: String,
+                                  lonCol: String = "lon", latCol: String = "lat",
+                                  geohashCol: String = "geohash", prune: Boolean = true,
+                                  rowBudget: Long = RowGroups.WithinRowBudget
+                                 ): (DataFrame, RowGroups.Record) = {
     val covers = st_covers(wktPolygon, col(lonCol), col(latCol))
-    val pruned =
-      if (prune) {
-        // Candidate stage 1: polygon bbox as plain numeric ranges — these
-        // push down to parquet row-group min/max stats on ANY storage layout
-        // (the reference can only key-range prune; we get both).
-        val query = graft.geo.Geom.parseWkt(wktPolygon)
-        val (xMin, xMax, yMin, yMax) = query.bbox
-        val bboxed = points.filter(
-          col(lonCol) >= xMin && col(lonCol) <= xMax &&
-            col(latCol) >= yMin && col(latCol) <= yMax)
-        // Candidate stage 2: geohash key-prefix pruning when the key column
-        // exists — on geohash-sorted parquet this is partition pruning,
-        // reproducing the reference's HBase start-row scans.
-        if (points.columns.contains(geohashCol)) {
-          GeohashPruning.minimumBoundingPrefixes(query) match {
-            case Some(prefixes) =>
-              val keyed = bboxed.filter(prefixPredicate(col(geohashCol), prefixes))
-              // gh_prefix directory column present → add the partition-pruning
-              // predicate too (length-agnostic)
-              if (points.columns.contains("gh_prefix"))
-                keyed.filter(partitionPrefixPredicate(prefixes))
-              else keyed
-            case None => bboxed
-          }
-        } else bboxed
-      } else points
-    pruned.filter(covers)
+    if (!prune) (points.filter(covers), RowGroups.Record(0, 0, 0L, proved = false))
+    else {
+      // Candidate stage 1: the geometry's bbox as plain numeric ranges —
+      // these push down to parquet row-group min/max stats on ANY storage
+      // layout (the reference can only key-range prune; we get both).
+      val query = graft.geo.Geom.parseWkt(wktPolygon)
+      val (xMin, xMax, yMin, yMax) = query.bbox
+      val bbox = col(lonCol) >= xMin && col(lonCol) <= xMax &&
+        col(latCol) >= yMin && col(latCol) <= yMax
+      // Candidate stage 2: geohash key-prefix pruning when the key column
+      // exists — on geohash-sorted parquet this is partition pruning,
+      // reproducing the reference's HBase start-row scans.
+      val prefixes =
+        if (points.columns.contains(geohashCol)) GeohashPruning.minimumBoundingPrefixes(query)
+        else None
+      val keyed = prefixes.fold(bbox) { ps =>
+        val k = bbox && prefixPredicate(col(geohashCol), ps)
+        // gh_prefix directory column present → add the partition-pruning
+        // predicate too (length-agnostic)
+        if (points.columns.contains("gh_prefix")) k && partitionPrefixPredicate(ps) else k
+      }
+      // one filter, analyzed once: the conjunction that stacked filters
+      // combine into, and the condition the driver path tests per row
+      val filtered = points.filter(keyed && covers)
+      val (found, record) = RowGroups.within(points, filtered, query.bbox, prefixes,
+        lonCol, latCol, geohashCol, rowBudget)
+      (found.getOrElse(filtered), record)
+    }
   }
 
   /**
@@ -273,8 +297,9 @@ object Gis {
           lonCol: String = "lon", latCol: String = "lat",
           geohashCol: String = "geohash"): DataFrame = {
     require(k >= 0, s"k must be non-negative, got k = $k")
+    require(lon.isFinite && lat.isFinite, s"the origin must be finite, got lon = $lon, lat = $lat")
     if (k == 0) topK(points, lon, lat, k, lonCol, latCol)
-    else if (!strict) knnSearch(points, lon, lat, k, lonCol, latCol)._1
+    else if (!strict) knnSearch(points, lon, lat, k, lonCol, latCol, geohashCol)._1
     else if (points.columns.contains(geohashCol)) {
       val prefixes = GeohashPruning.knnPrefixes(lon, lat, precision)
       val keyed = points.filter(prefixPredicate(col(geohashCol), prefixes))
@@ -285,13 +310,15 @@ object Gis {
   }
 
   /** The exact [[knn]] with what its search did: the row-group search of
-    * [[RowGroupKnn]] when it proves its answer within `rowBudget` rows,
+    * [[RowGroups]] when it proves its answer within `rowBudget` rows,
     * else the distributed top-k. */
   private[graft] def knnSearch(points: DataFrame, lon: Double, lat: Double, k: Int,
                                lonCol: String = "lon", latCol: String = "lat",
-                               rowBudget: Long = RowGroupKnn.RowBudget
-                              ): (DataFrame, RowGroupKnn.Record) = {
-    val (found, record) = RowGroupKnn.search(points, lon, lat, k, lonCol, latCol, rowBudget)
+                               geohashCol: String = "geohash",
+                               rowBudget: Long = RowGroups.RowBudget
+                              ): (DataFrame, RowGroups.Record) = {
+    val (found, record) = RowGroups.knn(points, lon, lat, k, lonCol, latCol, geohashCol,
+      rowBudget)
     (found.getOrElse(topK(points, lon, lat, k, lonCol, latCol)), record)
   }
 

@@ -18,8 +18,12 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A local DataFrame over `rows`, which must match `schema`. */
-  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  /** A local DataFrame over `rows`, which must match `schema`. The relation
+    * is resolved as built, so it skips analysis, whose rules would each map
+    * over every row. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val plan = LocalRelation(DataTypeUtils.toAttributes(schema), rows)
+    plan.setAnalyzed()
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
 }

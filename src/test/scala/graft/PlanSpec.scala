@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.api.Gis
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,7 +35,10 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val dir = tempDir("graft-pts").toString
     Gis.writePoints(Gis.bulkIngest(spark, 10000, -76, -75, 44, 45, seed = 3), dir, numFiles = 4)
     val pts = spark.read.parquet(dir)
-    val q = Gis.within(pts, "POLYGON ((-75.6 44.2, -75.6 44.4, -75.4 44.4, -75.4 44.2, -75.6 44.2))")
+    // a zero row budget forces the distributed plan (the default call on a
+    // bare stored scan answers on the driver: see the test below)
+    val q = Gis.withinSearch(pts,
+      "POLYGON ((-75.6 44.2, -75.6 44.4, -75.4 44.4, -75.4 44.2, -75.6 44.2))", rowBudget = 0)._1
     val p = plan(q)
     // (PushedFilters is elided in toString — the lon pair appearing proves
     // the range predicates reached the parquet scan)
@@ -48,7 +57,7 @@ class PlanSpec extends AnyFunSuite with TempDirs {
       Gis.bulkIngest(spark, 20000, -76, -74, 44, 46, seed = 5), dir, prefixLen = 3)
     val pts = spark.read.parquet(dir)
     val poly = "POLYGON ((-75.1 44.9, -75.1 45.1, -74.9 45.1, -74.9 44.9, -75.1 44.9))"
-    val q = Gis.within(pts, poly)
+    val q = Gis.withinSearch(pts, poly, rowBudget = 0)._1
     val p = plan(q)
     assert(p.contains("PartitionFilters: ["), s"no partition filters:\n$p")
     // the scan must NOT read every partition: count selected vs total dirs
@@ -61,6 +70,31 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     // and results agree with the unpartitioned path
     val expected = Gis.within(pts.drop("gh_prefix"), poly).count()
     assert(q.count() == expected && expected > 0)
+  }
+
+  test("within on a bare stored scan plans a local relation and starts no job; a derived frame scans") {
+    val dir = tempDir("graft-local").toString
+    Gis.writePointsPartitioned(
+      Gis.bulkIngest(spark, 20000, -76, -74, 44, 46, seed = 7), dir, prefixLen = 3)
+    val pts = spark.read.parquet(dir)
+    val poly = "POLYGON ((-75.1 44.9, -75.1 45.1, -74.9 45.1, -74.9 44.9, -75.1 44.9))"
+    var n = 0L
+    val jobs = PlanSpec.jobsStarted(spark) {
+      val q = Gis.within(pts, poly)
+      assert(q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        s"not a local relation:\n${q.queryExecution.optimizedPlan}")
+      n = q.collect().length
+    }
+    assert(jobs == 0, s"the driver within started $jobs Spark jobs")
+    assert(n > 0 && n == Gis.within(pts, poly, prune = false).count())
+    // a derived frame (as the q_within_* gates and SparkEntry.entry pass)
+    // keeps the pruned file scan
+    val derived = Gis.within(pts.withColumn("x", lit(1)), poly)
+    val scan = derived.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scan.exists(_.partitionFilters.nonEmpty), s"no pruned scan:\n${plan(derived)}")
+    assert(derived.count() == n)
   }
 
   test("knn plans as TakeOrderedAndProject (partial heaps + driver merge)") {
@@ -690,5 +724,39 @@ class PlanSpec extends AnyFunSuite with TempDirs {
       assert(java.lang.Double.doubleToRawLongBits(d) ==
         java.lang.Double.doubleToRawLongBits(back), s"round-trip broke for $d -> $back")
     }
+  }
+}
+
+object PlanSpec {
+  /** The Spark jobs `body` starts. Listener events arrive in order, so one
+    * marker job before and one after `body` delimit its job starts. */
+  def jobsStarted(spark: SparkSession)(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val (start, end) = (s"__jobs_start_$tag", s"__jobs_end_$tag")
+    val jobs = new AtomicInteger
+    val started = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case `start` => started.countDown()
+          case `end` => done.countDown()
+          case _ => if (started.getCount == 0 && done.getCount == 1) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(start)
+      assert(started.await(60, TimeUnit.SECONDS), "listener never saw the start marker")
+      body
+      marker(end)
+      assert(done.await(60, TimeUnit.SECONDS), "listener never saw the end marker")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 }

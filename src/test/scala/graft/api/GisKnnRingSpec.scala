@@ -100,7 +100,7 @@ class GisKnnRingSpec extends AnyFunSuite with TempDirs {
 
   test("knn on a stored layout proves from fewer row groups, with no Spark scan") {
     for (((lon, lat), name) <- Seq(Dense -> "dense", Sparse -> "sparse")) {
-      var record: Option[RowGroupKnn.Record] = None
+      var record: Option[RowGroups.Record] = None
       val scans = GisKnnRingSpec.fileScans(spark) {
         val (df, rec) = Gis.knnSearch(points, lon, lat, 10)
         assert(distances(df) == brute(lon, lat, 10), name)
@@ -121,6 +121,12 @@ class GisKnnRingSpec extends AnyFunSuite with TempDirs {
     assert(none.columns.toSeq == two.columns.toSeq :+ "distance")
     val e = intercept[IllegalArgumentException](Gis.knn(two, 10.0, 10.0, -1))
     assert(e.getMessage.contains("k"), e.getMessage)
+    // a non-finite origin has no exact answer, on a stored layout or not
+    for (df <- Seq(points, points.withColumn("x", lit(1)));
+         (lon, lat, bad) <- Seq((Double.NaN, 40.5, "NaN"), (-74.0, Double.PositiveInfinity, "Infinity"))) {
+      val o = intercept[IllegalArgumentException](Gis.knn(df, lon, lat, 3))
+      assert(o.getMessage.contains(bad), o.getMessage)
+    }
   }
 
   test("knn at the poles and across the antimeridian equals brute force") {
